@@ -175,15 +175,24 @@ def spread_small_scan(
     return df.repartition(par, key) if key else df.repartition(par)
 
 
+#: Spark's default ``spark.sql.files.maxPartitionBytes`` (128 MiB)
+_DEFAULT_MAX_PARTITION_BYTES = 128 << 20
+_BYTE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10,
+               "m": 1 << 20, "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30,
+               "t": 1 << 40, "tb": 1 << 40}
+
+
 def max_partition_bytes(spark: SparkSession) -> int:
     """The session's ``spark.sql.files.maxPartitionBytes`` in bytes —
     the natural ``min_bytes`` bound for :func:`spread_small_scan` (one
-    input split's worth of data)."""
+    input split's worth of data).  A value this parser does not read
+    falls back to Spark's 128 MiB default instead of raising at query
+    build time."""
     raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    m = re.match(r"(\d+)([a-zA-Z]*)", raw.strip())
-    mult = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10,
-            "m": 1 << 20, "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30}
-    return int(m.group(1)) * mult[m.group(2).lower()]
+    m = re.fullmatch(r"(\d+)\s*([a-zA-Z]*)", raw.strip())
+    if m is None or m.group(2).lower() not in _BYTE_UNITS:
+        return _DEFAULT_MAX_PARTITION_BYTES
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2).lower()]
 
 
 # Memo for repeated query builds over the same table: the stat loop is

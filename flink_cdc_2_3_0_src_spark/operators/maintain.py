@@ -2209,38 +2209,43 @@ class _MatchNfaPlan(_Plan):
       ``FILTER (WHERE __var = 'V')`` forms, keeping evaluation JVM-side
       with full SQL expression power.  ONE ROW PER MATCH output:
       partition columns + measures.
-    * **per batch**: matches(new pool) − matches(old pool) as a signed
-      multiset — a greedy match that EXTENDS when a new row arrives
-      (``B+`` absorbing it) retracts its old image and emits the grown
-      one, the changelog-native rendering of CEP's wait-for-completion.
+    * **state**: ONE pool frame — each key's retained rows plus
+      ``__cns`` (the consumed mark below) and, when MATCH_NUMBER is
+      used, ``__mn_base`` as a per-key column.  Flink's CEP keeps one
+      NFA state per key; this is its keyed-state frame.
+    * **per batch**: ONE grouped-pandas pass over the batch rows plus
+      the affected keys' pool rows (tagged ``__new``).  Per key it
+      scans the old pool and the new pool, emits both match sets'
+      exploded rows tagged −1/+1, and emits the pruned new pool tagged
+      0.  The output is checkpointed once; the tag-0 rows (with the
+      unaffected keys' pool) are the next state, and the ±1 rows feed
+      one JVM measure aggregation per (key, tag, match), netted into
+      the signed delta.  matches(new pool) − matches(old pool) as a
+      signed multiset: a greedy match that EXTENDS when a new row
+      arrives (``B+`` absorbing it) retracts its old image and emits
+      the grown one, the changelog-native rendering of CEP's
+      wait-for-completion.
     * **DEFINE navigation**: ``PREV(col[, k])`` reads the k-th
       previous INPUT row per key (SQL:2016 PREV — for contiguous
       patterns, the previous row of the match) and rewrites to a JVM
       LAG column before the scan, so predicates stay row-local
-      bitmaps.  The canonical CEP shape ``PATTERN (A B+) DEFINE B AS
-      B.price > PREV(B.price)`` (the rising run) rides it.
-    * **state prune**: a CONTIGUOUS SUFFIX cut of each key's ordered
-      rows — rows within WITHIN of the key's max order time, extended
-      ``max_prev`` rows below the horizon when PREV is used (LAG
-      sources survive).  Under SKIP PAST LAST ROW, rows consumed by a
-      match STRADDLING the horizon are MARKED unmatchable rather than
-      dropped: the pruned-prefix match stays emitted and its suffix
-      cannot re-match, while the rows keep standing in the sequence
-      as adjacency blockers and PREV sources (removal would create
-      false adjacency next to retained extras).  As with the two-step
-      plan the prune is exact under per-key in-order arrivals; an
-      out-of-order row landing behind the horizon can re-pair across
-      the pruned boundary (Flink's CEP state cleanup makes the same
-      trade).
-    * **measure cache** (r12): state is ``(pool, measure rows, clean
-      keys, match-number base)`` — a batch's measure rows are cached
-      for keys whose prune dropped no match-participating row (any
-      drop when PREV is in play), and the next batch's − side reads
-      the cache for clean affected keys, re-running the Arrow-batched
-      explode only for dirty ones.  In the steady state (sparse
-      matches, advancing time) this halves the per-batch Python
-      scans; ``expire()`` invalidates the cache (the pool changes
-      underneath it).
+      bitmaps.  The old pool's scan reads LAG over the old pool
+      alone, the new pool's over the whole new pool.  The canonical
+      CEP shape ``PATTERN (A B+) DEFINE B AS B.price > PREV(B.price)``
+      (the rising run) rides it.
+    * **state prune** (inside the pass): a CONTIGUOUS SUFFIX cut of
+      each key's ordered rows — rows within WITHIN of the key's max
+      order time, extended ``max_prev`` rows below the horizon when
+      PREV is used (LAG sources survive).  Under SKIP PAST LAST ROW,
+      rows consumed by a match STRADDLING the horizon are MARKED
+      unmatchable rather than dropped: the pruned-prefix match stays
+      emitted and its suffix cannot re-match, while the rows keep
+      standing in the sequence as adjacency blockers and PREV sources
+      (removal would create false adjacency next to retained extras).
+      As with the two-step plan the prune is exact under per-key
+      in-order arrivals; an out-of-order row landing behind the
+      horizon can re-pair across the pruned boundary (Flink's CEP
+      state cleanup makes the same trade).
     * **pattern exclusions** (r13, SQL:2016 ``{- B+ -}`` — beyond
       Flink, which rejects exclusions): excluded variables MATCH
       (adjacency, WITHIN, DEFINEs and aggregate measures all see
@@ -2257,10 +2262,10 @@ class _MatchNfaPlan(_Plan):
       matches already pruned out of the pool.  The base telescopes:
       pool rows are time-ordered, so matches leaving at a prune are
       always a numbering PREFIX, and base += |matches whose first
-      row fell behind the horizon| keeps emitted numbers stable —
-      a key whose base advances necessarily dropped a
-      match-participating row, so it is already dirty for the
-      measure cache and no cached row ever sees a stale base.
+      row fell behind the horizon| keeps emitted numbers stable.
+      Both sides of a batch's diff read the base from before that
+      batch's prune; the pass writes the advanced base onto the
+      key's retained rows.
       MATCH_NUMBER with a state ttl refuses at construction (expiry
       cannot count the matches it destroys).
     """
@@ -2735,203 +2740,244 @@ class _MatchNfaPlan(_Plan):
             )
         return "".join(out)
 
-    # -- exploded matched rows ----------------------------------------
-    def _explode(self, pool: DataFrame) -> DataFrame:
-        """Every matched row of every match in the pool, as payload +
-        (__match_id unique within its key, __var element variable,
-        __pos 0-based position in the match)."""
+    # -- the per-batch grouped pass ------------------------------------
+    def _scan(self, frame: DataFrame, par: int) -> DataFrame:
+        """The batch's ONE grouped-pandas pass.  ``frame`` holds the
+        pool columns plus ``__new`` (batch row vs. old pool row) for
+        every affected key.  Per key it returns the old pool's matched
+        rows tagged −1 and the new pool's tagged +1 — payload +
+        (__match_id unique within its key and tag, __var element
+        variable, __pos 0-based position in the match) — and the
+        pruned new pool tagged 0, carrying the straddle marks and the
+        advanced MATCH_NUMBER base."""
+        import numpy as np
         import pandas as pd
         from pyspark.sql import types as T
+        from pyspark.sql.window import Window
 
-        branches = self.branches
-        pat_vars = self._pat_vars
-        within_us = self.within_us
-        skip = self.skip
-        order, seq = self.order, self.seq_col
-        payload = [c for c in pool.columns]
-        prepped = pool.withColumn(
-            "__ots", F.unix_micros(F.col(order).cast("timestamp"))
-        )
-        if self.prev_cols:
-            from pyspark.sql.window import Window
-
-            lw = Window.partitionBy(*self.partition).orderBy(
-                F.col(order).asc(), F.col(seq).asc()
-            )
-            for col, k in sorted(self.prev_cols):
-                prepped = prepped.withColumn(
-                    f"__prev{k}_{col}", F.lag(col, k).over(lw)
-                )
+        pool_cols = [c for c in frame.columns if c != "__new"]
         # cross-variable conjuncts: row-local comparison sides become
         # JVM columns; navigation reads raw payload columns
-        missing_nav = self.nav_cols - set(pool.columns)
+        missing_nav = self.nav_cols - set(pool_cols)
         if missing_nav:
             raise ValueError(
                 f"DEFINE navigation references column(s) "
                 f"{sorted(missing_nav)} absent from the input "
-                f"({sorted(pool.columns)})"
+                f"({sorted(pool_cols)})"
             )
-        for cx_name, cx_sql in self.cur_exprs:
-            prepped = prepped.withColumn(cx_name, F.expr(cx_sql))
-        # rows consumed by a horizon-straddling match (SKIP PAST LAST
-        # ROW) stay in the pool as PREV/adjacency context but can
-        # never be matched again
-        consumed = (
-            F.col(self._CONSUMED)
-            if self._CONSUMED in pool.columns
-            else F.lit(False)
-        )
-        # one boolean column per VARIABLE (a define serves the
-        # variable wherever it sits across alternation branches)
-        for var in pat_vars:
-            prepped = prepped.withColumn(
-                f"__defv_{var}",
-                F.coalesce(F.expr(self.defines[var]), F.lit(False))
-                & ~consumed,
-            )
-        out_schema = T.StructType(
-            [f for f in pool.schema.fields]
-            + [
-                T.StructField("__match_id", T.LongType()),
-                T.StructField("__var", T.StringType()),
-                T.StructField("__pos", T.LongType()),
-            ]
-        )
-        cross_by_var = self.cross_by_var
-        needed_cols = sorted(
-            _cross_spec_cols(list(cross_by_var.values()))
-        )
-
-        def run_key(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(
-                ["__ots", seq], kind="mergesort"
-            ).reset_index(drop=True)
-            ots = pdf["__ots"].to_numpy()
-            flags_by_var = {
-                v: pdf[f"__defv_{v}"].to_numpy() for v in pat_vars
-            }
-            vals = {c: pdf[c].to_numpy() for c in needed_cols}
-            scan_branches = [
-                (
-                    br,
-                    [flags_by_var[v] for v, _mn, _mx, _g in br],
-                    [cross_by_var.get(v, []) for v, _mn, _mx, _g in br],
-                )
-                for br in branches
-            ]
-            matches = _nfa_scan(
-                scan_branches, ots, within_us, skip, vals
-            )
-            if not matches:
-                return pd.DataFrame(
-                    columns=payload + ["__match_id", "__var", "__pos"]
-                )
-            idx, mid, mvar, mpos = [], [], [], []
-            for m_i, asg in enumerate(matches):
-                for p, (row_i, var) in enumerate(asg):
-                    idx.append(row_i)
-                    mid.append(m_i)
-                    mvar.append(var)
-                    mpos.append(p)
-            out = pdf.iloc[idx][payload].reset_index(drop=True)
-            out["__match_id"] = pd.Series(mid, dtype="int64")
-            out["__var"] = mvar
-            out["__pos"] = pd.Series(mpos, dtype="int64")
-            return out
-
         # Explicit repartition before the grouped-pandas scan: the pool
         # shuffle is small (hundreds of KB at bench scale), so AQE's
         # size-based coalescing folds EVERY key into one task and the
         # per-group pandas overhead (~7ms/group) runs sequentially —
         # measured 10-16s per batch for 1500 keys at sf0.1, the whole
         # operator's cost.  An explicit partition count is exempt from
-        # coalescing and hash-satisfies the groupBy's clustered
-        # distribution (no second exchange; the dedup_semantic r13 fix).
-        par = max(2, prepped.sparkSession.sparkContext.defaultParallelism)
-        return (
-            prepped.repartition(par, *self.partition)
-            .groupBy(*self.partition)
-            .applyInPandas(run_key, out_schema)
+        # coalescing and hash-satisfies the LAG windows' and the
+        # groupBy's clustered distributions (no second exchange).
+        prepped = frame.repartition(par, *self.partition).withColumn(
+            "__ots", F.unix_micros(F.col(self.order).cast("timestamp"))
         )
 
-    def _measure_rows(self, exploded: DataFrame, mnb=None) -> DataFrame:
-        """ONE ROW PER MATCH: partition cols + measures, +1 multiset.
-        ALL ROWS PER MATCH (r12): one output row per MATCHED INPUT ROW
-        — the source columns plus the match's measures joined back on
-        (key, match).  Measure semantics per measure (r13): FINAL
-        (the default — the SQL:2016 FINAL modifier's values on every
-        row; a documented deviation from the standard's running
-        default, pinned by the r12 all-rows oracle) evaluates once
-        per match and joins back; RUNNING evaluates as a CUMULATIVE
-        window over the match's rows in ``__pos`` order (partitioned
-        by ``__mkey`` = struct(partition, match) — no join, one
-        window pass).  Flink does not support ALL ROWS PER MATCH at
-        all, so both are a superset of reference parity."""
+        def derive(df: DataFrame, sfx: str) -> DataFrame:
+            # one boolean column per VARIABLE (a define serves the
+            # variable wherever it sits across alternation branches);
+            # rows consumed by a horizon-straddling match (SKIP PAST
+            # LAST ROW) stay in the pool as PREV/adjacency context but
+            # can never be matched again
+            for cx_name, cx_sql in self.cur_exprs:
+                df = df.withColumn(cx_name + sfx, F.expr(cx_sql))
+            for var in self._pat_vars:
+                df = df.withColumn(
+                    f"__defv{sfx}_{var}",
+                    F.coalesce(F.expr(self.defines[var]), F.lit(False))
+                    & ~F.col(self._CONSUMED),
+                )
+            return df
+
+        old_sfx = ""
+        if self.prev_cols:
+            # the old pool's scan reads LAG over the old pool alone (the
+            # window per __new side; the batch side's values go unread),
+            # the new pool's over every row — derived columns are built
+            # once per version
+            old_sfx = "_o"
+            for sfx, side in (("_o", ["__new"]), ("", [])):
+                lw = Window.partitionBy(*self.partition, *side).orderBy(
+                    F.col(self.order).asc(), F.col(self.seq_col).asc()
+                )
+                for col, k in sorted(self.prev_cols):
+                    prepped = prepped.withColumn(
+                        f"__prev{k}_{col}", F.lag(col, k).over(lw)
+                    )
+                prepped = derive(prepped, sfx)
+        else:
+            prepped = derive(prepped, "")
+        out_schema = T.StructType(
+            [f for f in frame.schema.fields if f.name != "__new"]
+            + [
+                T.StructField("__match_id", T.LongType()),
+                T.StructField("__var", T.StringType()),
+                T.StructField("__pos", T.LongType()),
+                T.StructField("__tag", T.IntegerType()),
+            ]
+        )
+        branches, cross_by_var = self.branches, self.cross_by_var
+        needed_cols = sorted(_cross_spec_cols(list(cross_by_var.values())))
+        cx_names = {n for n, _sql in self.cur_exprs}
+        within_us, skip, seq = self.within_us, self.skip, self.seq_col
+        max_prev, uses_mn, cns = self.max_prev, self._uses_mn, self._CONSUMED
+
+        def matches_of(cols, rows, sfx):
+            # the NFA over the (sorted) rows at positions ``rows``, as
+            # lists of (sorted position, variable)
+            vals = {
+                c: cols[c + sfx if c in cx_names else c][rows]
+                for c in needed_cols
+            }
+            found = _nfa_scan(
+                [
+                    (
+                        br,
+                        [cols[f"__defv{sfx}_{v}"][rows] for v, *_q in br],
+                        [cross_by_var.get(v, []) for v, *_q in br],
+                    )
+                    for br in branches
+                ],
+                cols["__ots"][rows], within_us, skip, vals,
+            )
+            return [[(rows[r], v) for r, v in asg] for asg in found]
+
+        def run_key(pdf):
+            # plain numpy columns in (order, seq) order: the per-group
+            # cost is pandas overhead, not the scan
+            order = np.lexsort((pdf[seq].to_numpy(), pdf["__ots"].to_numpy()))
+            cols = {c: pdf[c].to_numpy()[order] for c in pdf.columns}
+            ots = cols["__ots"]
+            old_rows = np.flatnonzero(~cols["__new"].astype(bool))
+            old_m = matches_of(cols, old_rows, old_sfx) if old_rows.size else []
+            new_m = matches_of(cols, np.arange(len(ots)), "")
+            # retention: rows within WITHIN of the key's max order time
+            # — a CONTIGUOUS SUFFIX cut of the ordered rows (the
+            # telescoping-consistency requirement), extended max_prev
+            # rows BELOW the horizon when PREV navigation is in play so
+            # every above-horizon row keeps its LAG sources
+            horizon = ots[-1] - within_us
+            keep = ots >= horizon
+            if max_prev:
+                keep[np.flatnonzero(~keep)[-max_prev:]] = True
+            # matches whose FIRST row fell behind the horizon leave the
+            # pool this prune: the straddle marks and the MATCH_NUMBER
+            # base advance both read them
+            behind = [asg for asg in new_m if ots[asg[0][0]] < horizon]
+            idx, tag, mid, mvar, mpos = [], [], [], [], []
+            for t, found in ((-1, old_m), (1, new_m)):
+                for m_i, asg in enumerate(found):
+                    for p, (ri, v) in enumerate(asg):
+                        idx.append(ri)
+                        tag.append(t)
+                        mid.append(m_i)
+                        mvar.append(v)
+                        mpos.append(p)
+            kept = np.flatnonzero(keep)
+            n_m, n_k = len(idx), len(kept)
+            sel = np.concatenate([np.asarray(idx, dtype=np.int64), kept])
+            out = {c: cols[c][sel] for c in pool_cols}
+            out["__match_id"] = np.asarray(mid + [-1] * n_k, dtype=np.int64)
+            out["__var"] = mvar + [None] * n_k
+            out["__pos"] = np.asarray(mpos + [-1] * n_k, dtype=np.int64)
+            out["__tag"] = np.asarray(tag + [0] * n_k, dtype=np.int32)
+            if skip[0] == "past" and behind:
+                # rows consumed by a match whose FIRST row fell behind
+                # the horizon are MARKED unmatchable (not removed): the
+                # straddling match stays emitted (its prefix is pruned,
+                # so it is never recomputed) and its retained suffix
+                # rows must not re-match — but they still stand in the
+                # row sequence as adjacency blockers and PREV/LAG
+                # sources, which removal would falsify
+                gone = cols[seq][[ri for asg in behind for ri, _v in asg]]
+                marks = out[cns].astype(bool)
+                marks[n_m:] |= np.isin(out[seq][n_m:], gone)
+                out[cns] = marks
+            if uses_mn:
+                # matches leaving the pool are a numbering PREFIX (pool
+                # rows are time-ordered, so matches' first rows are
+                # non-decreasing): base += |behind| keeps __match_id +
+                # base the lifetime sequence number.  Both match sets
+                # read the base from before this prune.
+                base = (
+                    int(cols["__mn_base"][old_rows[0]]) if old_rows.size else 0
+                )
+                out["__mn_base"] = np.asarray(
+                    [base] * n_m + [base + len(behind)] * n_k,
+                    dtype=np.int64,
+                )
+            return pd.DataFrame(out)
+
+        return prepped.groupBy(*self.partition).applyInPandas(
+            run_key, out_schema
+        )
+
+    def _measure_rows(self, matched: DataFrame) -> DataFrame:
+        """The scan's ±1 match rows as signed measure rows (``__tag``
+        becomes the multiplicity), one evaluation per (key, tag,
+        match).  ONE ROW PER MATCH: partition cols + measures.  ALL
+        ROWS PER MATCH (r12): one output row per MATCHED INPUT ROW —
+        the source columns plus the match's measures.  Measure
+        semantics per measure (r13): FINAL (the default — the SQL:2016
+        FINAL modifier's values on every row; a documented deviation
+        from the standard's running default, pinned by the r12
+        all-rows oracle) evaluates once per match and joins back;
+        RUNNING evaluates as a CUMULATIVE window over the match's rows
+        in ``__pos`` order (partitioned by ``__mkey`` = struct(key,
+        tag, match) — no join, one window pass).  Flink does not
+        support ALL ROWS PER MATCH at all, so both are a superset of
+        reference parity."""
+        mk = [*self.partition, "__tag", "__match_id"]
         finals = [
             (s, n) for s, n, sem in self.measures if sem == "final"
         ]
         names = [n for _s, n, _sem in self.measures]
-        if self._uses_mn:
-            # MATCH_NUMBER(): absolute number = pool-scan id + the
-            # key's pruned-match count (a left join against the
-            # one-row-per-key base state; 0 before any prune)
-            if mnb is not None:
-                exploded = exploded.join(
-                    mnb, on=self.partition, how="left"
-                )
-            else:
-                exploded = exploded.withColumn(
-                    "__mn_base", F.lit(None).cast("long")
-                )
-            exploded = exploded.withColumn(
-                "__mn_base",
-                F.coalesce(F.col("__mn_base"), F.lit(0).cast("long")),
-            )
         if self.rows_per_match == "all":
             payload = [
                 c
-                for c in exploded.columns
+                for c in matched.columns
                 if c not in (
-                    "__match_id", "__var", "__pos", "__mn_base",
+                    "__match_id", "__var", "__pos", "__tag", "__mn_base",
                     self._CONSUMED,
                 )
             ]
-            base = exploded
+            out = matched
             runnings = [
                 (s, n) for s, n, sem in self.measures if sem == "running"
             ]
             if runnings:
-                base = base.withColumn(
-                    "__mkey",
-                    F.struct(*self.partition, F.col("__match_id")),
-                )
+                out = out.withColumn("__mkey", F.struct(*mk))
                 for msql, mname in runnings:
-                    base = base.withColumn(mname, F.expr(msql))
+                    out = out.withColumn(mname, F.expr(msql))
             if finals:
-                per_match = exploded.groupBy(
-                    *self.partition, "__match_id"
-                ).agg(
-                    *[F.expr(s).alias(n) for s, n in finals]
-                )
-                base = base.join(
-                    per_match, [*self.partition, "__match_id"], "inner"
+                out = out.join(
+                    matched.groupBy(*mk).agg(
+                        *[F.expr(s).alias(n) for s, n in finals]
+                    ),
+                    mk,
+                    "inner",
                 )
             if self.excluded:
                 # SQL:2016 pattern exclusion: excluded variables'
                 # rows MATCH (adjacency, WITHIN, aggregates all see
                 # them — the running windows above already did) but
                 # are omitted from the all-rows output
-                base = base.filter(
+                out = out.filter(
                     ~F.col("__var").isin(*sorted(self.excluded))
                 )
-            return base.select(*payload, *names).withColumn(
-                MULT_COL, F.lit(1).cast("long")
+            out = out.select(*payload, *names, "__tag")
+        else:
+            out = (
+                matched.groupBy(*mk)
+                .agg(*[F.expr(s).alias(n) for s, n in finals])
+                .select(*self.partition, *names, "__tag")
             )
-        per_match = exploded.groupBy(
-            *self.partition, "__match_id"
-        ).agg(*[F.expr(s).alias(n) for s, n in finals])
-        return per_match.select(*self.partition, *names).withColumn(
-            MULT_COL, F.lit(1).cast("long")
+        return out.withColumn(MULT_COL, F.col("__tag").cast("long")).drop(
+            "__tag"
         )
 
     def step(self, state, batch: DataFrame):
@@ -2940,254 +2986,69 @@ class _MatchNfaPlan(_Plan):
             "pattern-match an updating stream after materializing it "
             "upstream",
         )
+        extra = [F.lit(False).alias(self._CONSUMED)]
+        if self._uses_mn:
+            extra.append(F.lit(None).cast("long").alias("__mn_base"))
         rows = batch.filter(
             (F.col(self.op_col) == OP_INSERT)
             & F.col(self.order).isNotNull()
-        ).select(
-            *[c for c in batch.columns if c != self.op_col],
-            F.lit(False).alias(self._CONSUMED),
+        ).select(*[c for c in batch.columns if c != self.op_col], *extra)
+        frame = rows.withColumn("__new", F.lit(True))
+        par = max(2, batch.sparkSession.sparkContext.defaultParallelism)
+        rest = None
+        if state is not None:
+            affected = rows.select(*self.partition)
+            frame = frame.unionByName(
+                _keyset_join(
+                    state, affected, self.partition, "left_semi"
+                ).withColumn("__new", F.lit(False))
+            )
+            # the unaffected keys' pool rides the pass's checkpoint as
+            # tag-0 rows: one query, so both key-set joins share one
+            # build of the affected key set
+            rest = _keyset_join(
+                state, affected, self.partition, "left_anti"
+            ).select(
+                *rows.columns,
+                F.lit(-1).cast("long").alias("__match_id"),
+                F.lit(None).cast("string").alias("__var"),
+                F.lit(-1).cast("long").alias("__pos"),
+                F.lit(0).alias("__tag"),
+            )
+        scanned = self._scan(frame, par)
+        if rest is not None:
+            scanned = scanned.unionByName(rest)
+        # ONE checkpoint of the pass: the delta and the next state both
+        # read it, so the pandas scan runs once.  Lazy (r14): an eager
+        # checkpoint is a separate driver job round trip per batch;
+        # laziness keeps compute-once (the RDD persists at its first
+        # materialization, inside the caller's delta fold) and elides
+        # the LAST batch's state materialization entirely.  The state
+        # is coalesced back to ``par`` partitions — a union adds the
+        # pass's partitions to the old state's every batch.
+        out = scanned.localCheckpoint(eager=False)
+        pool = (
+            out.filter(F.col("__tag") == 0)
+            .select(*rows.columns)
+            .coalesce(par)
         )
-        affected = rows.select(*self.partition).distinct()
-        pool_old, mcache, clean, mnb = (
-            state if state is not None else (None, None, None, None)
+        # one exchange for the measure aggregation AND the netting:
+        # both group by keys that include the partition columns
+        signed = self._measure_rows(
+            out.filter(F.col("__tag") != 0).repartition(*self.partition)
         )
-        old_pool = (
-            _keyset_join(pool_old, affected, self.partition, "left_semi")
-            if pool_old is not None
-            else None
+        payload = [c for c in signed.columns if c != MULT_COL]
+        delta = (
+            signed.groupBy(*payload)
+            .agg(F.sum(MULT_COL).alias(MULT_COL))
+            .filter(F.col(MULT_COL) != 0)
         )
-        new_pool = (
-            rows if old_pool is None else rows.unionByName(old_pool)
-        )
-        # one NFA pass over the new pool feeds the delta's + side, the
-        # consumed-row marking AND next batch's measure cache —
-        # checkpoint it rather than run the pandas scan again.  Both
-        # measure sides read the SAME __mn_base state: the base was
-        # advanced by LAST batch's prune, exactly when the pruned
-        # matches left both pools (the telescoping argument in the
-        # class docstring).
-        #
-        # All of this step's checkpoints are LAZY (r14): an eager one is
-        # a separate driver job round trip per frame per batch (the
-        # query ran 130+ jobs for 3 batches — ~2/3 of its wall clock was
-        # job latency, not work).  Laziness keeps compute-once (the RDD
-        # persists at its first materialization, inside the batch-delta
-        # fold or the next batch's first job) and elides the LAST
-        # batch's state materializations entirely — that state is never
-        # consumed.
-        new_expl = self._explode(new_pool).localCheckpoint(eager=False)
-        new_m = self._measure_rows(new_expl, mnb).localCheckpoint(
-            eager=False
-        )
-        delta = new_m
-        if old_pool is not None:
-            # the − side (r12): keys whose LAST prune kept every
-            # match-participating row read their cached measure rows;
-            # only DIRTY affected keys re-run the pandas explode
-            if mcache is not None:
-                aff_clean = affected.join(
-                    clean, self.partition, "left_semi"
-                )
-                old_m_pos = _keyset_join(
-                    mcache, aff_clean, self.partition, "left_semi"
-                ).unionByName(
-                    self._measure_rows(
-                        self._explode(
-                            _keyset_join(
-                                old_pool, aff_clean, self.partition,
-                                "left_anti",
-                            )
-                        ),
-                        mnb,
-                    )
-                )
-            else:
-                old_m_pos = self._measure_rows(
-                    self._explode(old_pool), mnb
-                )
-            old_m = old_m_pos.withColumn(MULT_COL, -F.col(MULT_COL))
-            payload = [c for c in new_m.columns if c != MULT_COL]
-            delta = (
-                new_m.unionByName(old_m)
-                .groupBy(*payload)
-                .agg(F.sum(MULT_COL).alias(MULT_COL))
-                .filter(F.col(MULT_COL) != 0)
-            )
-        # retention: rows within WITHIN of their key's max order time.
-        # The prune is a CONTIGUOUS SUFFIX cut of each key's ordered
-        # rows (the telescoping-consistency requirement); when PREV
-        # navigation is in play, the suffix extends max_prev rows
-        # BELOW the time horizon so every above-horizon row keeps its
-        # LAG sources.
-        from pyspark.sql.window import Window
-
-        kmax = F.max(F.col(self.order)).over(
-            Window.partitionBy(*self.partition)
-        )
-        horizon = F.unix_micros(kmax.cast("timestamp")) - F.lit(
-            self.within_us
-        )
-        tagged = new_pool.withColumn(
-            "__above",
-            F.unix_micros(F.col(self.order).cast("timestamp")) >= horizon,
-        )
-        pruned = tagged.filter(F.col("__above")).drop("__above")
-        if self.max_prev:
-            extras = (
-                tagged.filter(~F.col("__above"))
-                .withColumn(
-                    "__rnb",
-                    F.row_number().over(
-                        Window.partitionBy(*self.partition).orderBy(
-                            F.col(self.order).desc(),
-                            F.col(self.seq_col).desc(),
-                        )
-                    ),
-                )
-                .filter(F.col("__rnb") <= self.max_prev)
-                .drop("__rnb", "__above")
-            )
-            pruned = pruned.unionByName(extras)
-        mw = Window.partitionBy(*self.partition, "__match_id")
-        # the horizon is the POOL's per-key max (the exploded frame
-        # holds matched rows only — its max can lag the key's)
-        key_h = new_pool.groupBy(*self.partition).agg(
-            (
-                F.unix_micros(F.max(F.col(self.order)).cast("timestamp"))
-                - F.lit(self.within_us)
-            ).alias("__h")
-        )
-        # matches whose FIRST row fell behind the horizon leave the
-        # pool this prune — the straddle-consumption marks (SKIP PAST
-        # LAST ROW) and the MATCH_NUMBER base advance both read it
-        behind = (
-            new_expl.withColumn(
-                "__first_ots",
-                F.min(
-                    F.unix_micros(F.col(self.order).cast("timestamp"))
-                ).over(mw),
-            )
-            .join(key_h, on=self.partition, how="inner")
-            .filter(F.col("__first_ots") < F.col("__h"))
-        )
-        if self.skip[0] == "past":
-            # rows consumed by a match whose FIRST row fell behind the
-            # horizon are MARKED unmatchable (not removed): the
-            # straddling match stays emitted (its prefix is pruned, so
-            # it is never recomputed) and its retained suffix rows
-            # must not re-match — but they still stand in the row
-            # sequence as adjacency blockers and PREV/LAG sources,
-            # which removal would falsify.
-            straddle = behind.select(
-                *self.partition, self.seq_col,
-                F.lit(True).alias("__mark"),
-            ).distinct()
-            pruned = (
-                pruned.join(
-                    straddle, self.partition + [self.seq_col], "left"
-                )
-                .withColumn(
-                    self._CONSUMED,
-                    F.col(self._CONSUMED)
-                    | F.coalesce(F.col("__mark"), F.lit(False)),
-                )
-                .drop("__mark")
-            )
-        if pool_old is not None:
-            pruned = pruned.unionByName(
-                _keyset_join(pool_old, affected, self.partition, "left_anti")
-            )
-        # measure cache for the NEXT batch (r12): new_m's rows stay
-        # valid for a key iff matches(pruned pool) == matches(new
-        # pool) there — guaranteed when the prune dropped no
-        # MATCH-PARTICIPATING row (a dropped non-participating prefix
-        # row cannot create adjacency between retained rows, and
-        # attempts at retained positions see an identical suffix; the
-        # straddle marks only arise on keys whose dropped first row
-        # participated, so they are covered).  With PREV/LAG
-        # navigation any drop dirties the key (the kept extras' own
-        # LAG sources change), so the rule degrades to any-drop.
-        if self.max_prev:
-            dirty = (
-                tagged.filter(~F.col("__above"))
-                .select(*self.partition)
-                .distinct()
-            )
-        else:
-            dropped = tagged.filter(~F.col("__above")).select(
-                *self.partition, self.seq_col
-            )
-            dirty = (
-                new_expl.select(*self.partition, self.seq_col)
-                .join(dropped, self.partition + [self.seq_col], "left_semi")
-                .select(*self.partition)
-                .distinct()
-            )
-        clean_aff = affected.join(dirty, self.partition, "left_anti")
-        cache_new = _keyset_join(new_m, clean_aff, self.partition, "left_semi")
-        if mcache is not None:
-            cache_new = cache_new.unionByName(
-                _keyset_join(mcache, affected, self.partition, "left_anti")
-            )
-            clean_next = clean_aff.unionByName(
-                _keyset_join(clean, affected, self.partition, "left_anti")
-            )
-        else:
-            clean_next = clean_aff
-        # MATCH_NUMBER base advance (r13): matches leaving the pool
-        # this prune are a numbering PREFIX (pool rows are
-        # time-ordered, so matches' first rows are non-decreasing),
-        # so per key base += |matches with first row behind the
-        # horizon| keeps __match_id + base the lifetime sequence
-        # number.  Keys whose base advances necessarily dropped a
-        # match-participating row, so they are already DIRTY for the
-        # measure cache — cached rows never see a stale base.
-        mnb_next = mnb
-        if self._uses_mn:
-            adv = (
-                behind.select(*self.partition, "__match_id")
-                .distinct()
-                .groupBy(*self.partition)
-                .agg(F.count(F.lit(1)).alias("__adv"))
-            )
-            aff_base = (
-                affected.join(mnb, self.partition, "left")
-                if mnb is not None
-                else affected.withColumn(
-                    "__mn_base", F.lit(None).cast("long")
-                )
-            )
-            aff_base = aff_base.join(adv, self.partition, "left").select(
-                *self.partition,
-                (
-                    F.coalesce(F.col("__mn_base"), F.lit(0).cast("long"))
-                    + F.coalesce(F.col("__adv"), F.lit(0).cast("long"))
-                ).alias("__mn_base"),
-            )
-            mnb_next = (
-                aff_base
-                if mnb is None
-                else aff_base.unionByName(
-                    _keyset_join(mnb, affected, self.partition, "left_anti")
-                )
-            ).localCheckpoint(eager=False)
-        return (
-            pruned.localCheckpoint(eager=False),
-            cache_new.localCheckpoint(eager=False),
-            clean_next.localCheckpoint(eager=False),
-            mnb_next,
-        ), delta
+        return pool.localCheckpoint(eager=False), delta
 
     def _expire(self, state, watermark):
-        pool, _mcache, _clean, mnb = state
-        # expiry drops pool rows behind the watermark, changing the
-        # match set underneath the cached measures — invalidate the
-        # cache (the next batch's − side recomputes from the pool).
-        # MATCH_NUMBER + ttl refuses at construction, so mnb needs no
-        # expiry-side bookkeeping here.
-        return (
-            expire_state(pool, watermark, self.order), None, None, mnb
-        )
+        # MATCH_NUMBER + ttl refuses at construction, so the per-key
+        # base needs no expiry-side bookkeeping here
+        return expire_state(state, watermark, self.order)
 
 
 class _CalcPlan(_Plan):

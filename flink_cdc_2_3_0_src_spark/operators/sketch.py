@@ -91,7 +91,8 @@ def cms_merge(a: dict, b: dict) -> dict:
 def cms_heavy_hitters(docs: DataFrame, top_k: int = 20, width: int = CMS_WIDTH) -> DataFrame:
     """Estimate the corpus's top-k token frequencies through a Count-Min
     sketch and report estimate vs exact (the overestimate is the
-    sketch's collision cost — never negative).
+    sketch's collision cost — never negative).  Rows come ordered by
+    ``exact_n`` descending, then ``tok``.
 
     Build: one explode + ONE fixed-size aggregation (d*w cells max) —
     broadcast into the probe join (kilobytes, data-size independent,
@@ -145,12 +146,14 @@ def cms_heavy_hitters(docs: DataFrame, top_k: int = 20, width: int = CMS_WIDTH) 
     ).agg(
         F.min(F.coalesce(F.col("n"), F.lit(0).cast("bigint"))).alias("cms_n")
     )
+    # the probe's groupBy drops the top-k order: restore it (exact_n
+    # desc, then tok) — a sort of top_k rows
     return est.select(
         "tok",
         "exact_n",
         "cms_n",
         (F.col("cms_n") - F.col("exact_n")).alias("overestimate"),
-    )
+    ).orderBy(F.col("exact_n").desc(), F.col("tok"))
 
 
 def cms_heavy_hitters_sql(top_k: int = 20, width: int = CMS_WIDTH) -> str:

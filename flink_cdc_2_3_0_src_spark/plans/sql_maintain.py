@@ -2334,25 +2334,53 @@ def _ckpt(state):
         return None
     if isinstance(state, tuple):
         return tuple(_ckpt(s) for s in state)
-    # plans that checkpoint their own state pieces (match_nfa, match,
-    # over, top-n) return frames already rooted at a LogicalRDD —
+    # plans that checkpoint their own state (match_nfa's pool, match,
+    # over, top-n) return frames already rooted at a checkpointed RDD —
     # re-checkpointing copies the materialized rows into a new RDD via
-    # one more eager job per state piece per batch, pure overhead
+    # one more eager job per state frame per batch, pure overhead
     if _is_ckpt_scan(state):
         return state
     return state.localCheckpoint(eager=True)
 
 
 def _is_ckpt_scan(df: DataFrame) -> bool:
-    """True when the frame IS a bare localCheckpoint scan (logical plan
-    rooted at LogicalRDD) — already materialized, lineage length 1."""
+    """True when the frame IS a bare scan of checkpoint state: its
+    logical plan is a LogicalRDD whose RDD is checkpointed, marked for
+    local checkpointing (a lazy ``localCheckpoint``) or persisted — so
+    it is computed at most once and its lineage has length 1.  A
+    ``createDataFrame`` frame is also rooted at a LogicalRDD, but its
+    RDD is none of these, so it does not count."""
     try:
-        return (
-            df._jdf.queryExecution().logical().getClass().getSimpleName()
-            == "LogicalRDD"
+        plan = df._jdf.queryExecution().logical()
+        if plan.getClass().getSimpleName() != "LogicalRDD":
+            return False
+        rdd = plan.rdd()
+        level = rdd.getStorageLevel()
+        return bool(
+            rdd.isCheckpointed()
+            or rdd.isLocallyCheckpointed()
+            or level.useMemory()
+            or level.useDisk()
         )
     except Exception:
         return False
+
+
+def _bare_checkpoint(df: DataFrame) -> DataFrame:
+    """A lazy local checkpoint of ``df``, re-wrapped as a plain scan of
+    the checkpointed rows.  ``localCheckpoint`` keeps the source plan's
+    constraints on its LogicalRDD, and a union with such a frame can
+    fail Spark's constraint rewrite (``NoSuchElementException: key not
+    found`` on an outer join's presence column, Spark 4.1); the
+    re-wrapped scan carries none."""
+    ck = df.localCheckpoint(eager=False)
+    spark = ck.sparkSession
+    return DataFrame(
+        spark._jsparkSession.internalCreateDataFrame(
+            ck._jdf.queryExecution().toRdd(), ck._jdf.schema(), False
+        ),
+        spark,
+    )
 
 
 def _where_over_table_state(df: DataFrame, pred_sql: str, op_col: str):
@@ -3147,6 +3175,11 @@ class SqlMaintenanceJob:
             # which is Flink's semantics for HAVING over an aggregate
             delta = delta.filter(F.expr(self.stmt.having))
         self._state = _ckpt(self._state)
+        # the delta is computed ONCE: the fold below materializes the
+        # lazy checkpoint and the caller's action reads it back instead
+        # of re-running the delta's lineage
+        if not _is_ckpt_scan(delta):
+            delta = _bare_checkpoint(delta)
         # the accumulator ALWAYS nets (even on the first batch): the
         # exchange-free calc plan (r13) may emit un-collapsed same-
         # batch ±pairs of identical projected images — the fold is

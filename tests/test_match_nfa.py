@@ -413,7 +413,7 @@ def test_nfa_retention_prunes_and_past_last_drops_straddle(spark):
     # is pruned by time, and the consumed click/purchase rows straddle
     # (match first row behind the horizon) so they are MARKED
     # unmatchable — kept as adjacency/PREV context, never re-matched
-    state = {r["id"]: r["__cns"] for r in job._state[0].collect()}
+    state = {r["id"]: r["__cns"] for r in job._state.collect()}
     assert state == {2: True, 3: True, 4: False}
     # a later view+click+purchase still matches normally
     b2 = [
@@ -423,11 +423,10 @@ def test_nfa_retention_prunes_and_past_last_drops_straddle(spark):
     ]
     job.step({"ev": _mk_log(spark, b2)})
     assert job.result().count() == 2
-    # ttl additionally evicts behind an explicit watermark — and
-    # invalidates the measure cache (r12: the pool changes underneath)
+    # ttl additionally evicts behind an explicit watermark: the one
+    # state frame (the pool) empties
     job.expire("2024-01-03 00:00:00")
-    assert job._state[0].count() == 0
-    assert job._state[1] is None and job._state[2] is None
+    assert job._state.count() == 0
 
 
 def test_nfa_within_boundary_is_strict(spark):
@@ -532,7 +531,7 @@ def test_nfa_prev_lag_sources_survive_prune(spark):
     # row 2's PREV source (the contiguous-suffix extra)
     job.step({"ev": _mk_log(spark, [(3, "u1", "t", 1.5,
                                      "2024-01-02 06:00:00")])})
-    assert 1 in {r["id"] for r in job._state[0].collect()}
+    assert 1 in {r["id"] for r in job._state.collect()}
     # a third batch must NOT retract the emitted (1 → 2) match
     job.step({"ev": _mk_log(spark, [(4, "u1", "t", 9.0,
                                      "2024-01-02 07:00:00")])})
@@ -1602,12 +1601,10 @@ def test_nfa_match_number_base_state(spark):
     assert sorted(map(tuple, job.result().collect())) == [
         ("u1", 1, 1), ("u1", 2, 2)
     ]
-    # the base state carries the dropped count
-    mnb = {
-        tuple(r)[:1]: r["__mn_base"]
-        for r in job._state[3].collect()
-    }
-    assert mnb == {("u1",): 1}
+    # the pool's per-key base column carries the dropped count, the
+    # same on every retained row of the key
+    bases = {(r["u"], r["__mn_base"]) for r in job._state.collect()}
+    assert bases == {("u1", 1)}
     # a third epoch: the base keeps accumulating
     b3 = [
         (6, "u1", "view", 6.0, "2024-01-01 12:00:00"),
@@ -2013,42 +2010,156 @@ def test_nfa_measure_navigation_offsets(spark):
         parse_insert_select(sql.replace("LAST(B.v, 1)", "SUM(B.v, 1)"))
 
 
-def test_nfa_measure_cache_discipline(spark):
-    """r12: the plan caches a batch's measure rows for keys whose
-    prune dropped no match-participating row; the next batch's − side
-    reads the cache instead of re-running the pandas explode.  A prune
-    that drops a matched row evicts the key from the clean set; the
-    accumulated result stays exact either way (the split-invariance
-    fuzz covers equality — this pins the state discipline)."""
-    job = plan_insert_maintained(_FUNNEL_SQL, _EV_TABLES)
+def test_nfa_step_runs_one_grouped_pandas_pass(spark, monkeypatch):
+    """One batch runs ONE grouped-pandas pass: counted over every frame
+    the step checkpoints plus the state and delta it returns, the plan
+    holds exactly one FlatMapGroupsInPandas — the old and new pools'
+    scans, the prune, the straddle marks and the MATCH_NUMBER advance
+    all live in it, and the delta and the next state both read its
+    single checkpoint.  The state is one frame: the pool."""
+    from pyspark.sql import DataFrame
+
+    sql = _FUNNEL_SQL.replace(
+        "MEASURES FIRST(A.ts) AS a_ts,", "MEASURES MATCH_NUMBER() AS a_ts,"
+    )
+    plan = maintain(match_nfa=parse_insert_select(sql).match_nfa)
+    frame_cls = type(spark.range(1))
+    real = frame_cls.localCheckpoint
+    seen = []
+
+    def spy(self, *args, **kwargs):
+        seen.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+
+    def n_pandas(df):
+        txt = df._jdf.queryExecution().analyzed().toString()
+        return txt.count("FlatMapGroupsInPandas")
+
     b1 = [
         (1, "u1", "view", 1.0, "2024-01-01 00:00:00"),
         (2, "u1", "click", 2.0, "2024-01-01 00:30:00"),
-        (3, "u1", "purchase", 3.0, "2024-01-01 01:00:00"),
+        (3, "u2", "view", 3.0, "2024-01-01 01:00:00"),
     ]
-    job.step({"ev": _mk_log(spark, b1)})
-    pool, mcache, clean, _mnb = job._state
-    # nothing pruned: the match's measure row is cached, key is clean
-    assert [r["u"] for r in clean.collect()] == ["u1"]
-    assert mcache.count() == 1
-    # a far-future row prunes the matched funnel rows → key turns dirty
-    job.step({"ev": _mk_log(spark, [(4, "u1", "error", 0.0,
-                                     "2024-01-03 00:00:00")])})
-    pool, mcache, clean, _mnb = job._state
-    assert clean.count() == 0 and mcache.count() == 0
-    # the emitted match survives pruning (forgotten together, never
-    # retracted)
-    assert job.result().count() == 1
-    # a later funnel re-populates the cache for the key
-    b3 = [
-        (5, "u1", "view", 5.0, "2024-01-03 01:00:00"),
-        (6, "u1", "click", 6.0, "2024-01-03 02:00:00"),
-        (7, "u1", "purchase", 7.0, "2024-01-03 03:00:00"),
+    b2 = [
+        (4, "u1", "purchase", 4.0, "2024-01-01 01:00:00"),
+        (5, "u2", "click", 5.0, "2024-01-01 02:00:00"),
     ]
-    job.step({"ev": _mk_log(spark, b3)})
-    pool, mcache, clean, _mnb = job._state
-    assert clean.count() == 1 and mcache.count() == 1
-    assert job.result().count() == 2
+    state = None
+    for rows in (b1, b2):
+        seen.clear()
+        state, delta = plan.step(state, _mk_log(spark, rows))
+        assert isinstance(state, DataFrame)
+        assert sum(n_pandas(df) for df in seen + [state, delta]) == 1
+        # the pass itself is checkpointed; the outputs read it back
+        assert n_pandas(state) == n_pandas(delta) == 0
+    assert [tuple(r)[:2] for r in delta.collect()] == [("u1", 1)]
+    assert {r["id"] for r in state.collect()} == {1, 2, 3, 4, 5}
+
+
+def _session_log(spark, seed):
+    """Seeded funnel sessions for three keys: within a session events
+    are 1-9 minutes apart (a session spans under 2 hours), sessions
+    are 3-5 hours apart — so a 2-hour WITHIN prune only ever drops
+    whole earlier sessions and every split is exact."""
+    import datetime as dt
+
+    rng = random.Random(seed)
+    evs = []
+    for u in ("u1", "u2", "u3"):
+        t = dt.datetime(2024, 1, 1) + dt.timedelta(minutes=rng.randrange(60))
+        for _s in range(5):
+            kinds = (
+                ["view"] * rng.randrange(1, 3)
+                + ["click"] * rng.randrange(0, 4)
+                + ["purchase"] * rng.randrange(0, 2)
+            )
+            kinds = [
+                "error" if rng.random() < 0.15 else k for k in kinds
+            ]
+            for k in kinds:
+                evs.append((t, u, k, float(rng.randrange(10))))
+                t += dt.timedelta(minutes=rng.randrange(1, 10))
+            t += dt.timedelta(hours=rng.randrange(3, 6))
+    evs.sort(key=lambda e: (e[0], e[1]))
+    return _mk_log(
+        spark,
+        [
+            (i, u, et, v, f"{t:%Y-%m-%d %H:%M:%S}")
+            for i, (t, u, et, v) in enumerate(evs)
+        ],
+    )
+
+
+_SPLIT_SQL = {
+    "prev_match_number": (
+        "INSERT INTO sink SELECT u, mn, n_b, top FROM ev"
+        " MATCH_RECOGNIZE (PARTITION BY u ORDER BY ts"
+        " MEASURES MATCH_NUMBER() AS mn, COUNT(B.*) AS n_b,"
+        " LAST(B.v) AS top"
+        " AFTER MATCH SKIP PAST LAST ROW"
+        " PATTERN (A B+) WITHIN INTERVAL '2' HOUR"
+        " DEFINE A AS A.et = 'view', B AS B.v > PREV(B.v))"
+    ),
+    "cross_var_skip_to_last": (
+        "INSERT INTO sink SELECT u, a_v, n_b FROM ev"
+        " MATCH_RECOGNIZE (PARTITION BY u ORDER BY ts"
+        " MEASURES FIRST(A.v) AS a_v, COUNT(B.*) AS n_b"
+        " AFTER MATCH SKIP TO LAST B"
+        " PATTERN (A B+) WITHIN INTERVAL '2' HOUR"
+        " DEFINE B AS B.v > A.v)"
+    ),
+    "all_rows_running_final_exclusion": (
+        "INSERT INTO sink SELECT u, id, cls, nb_run, v_tot FROM ev"
+        " MATCH_RECOGNIZE (PARTITION BY u ORDER BY ts"
+        " MEASURES RUNNING CLASSIFIER() AS cls,"
+        " RUNNING COUNT(B.*) AS nb_run, FINAL SUM(B.v) AS v_tot"
+        " ALL ROWS PER MATCH"
+        " AFTER MATCH SKIP PAST LAST ROW"
+        " PATTERN (A {- B+ -} C) WITHIN INTERVAL '2' HOUR"
+        " DEFINE A AS A.et = 'view', B AS B.et = 'click',"
+        " C AS C.et = 'purchase')"
+    ),
+    "alternation_skip_to_next": (
+        "INSERT INTO sink SELECT u, branch, n_run FROM ev"
+        " MATCH_RECOGNIZE (PARTITION BY u ORDER BY ts"
+        " MEASURES CLASSIFIER() AS branch,"
+        " COUNT(B.*) + COUNT(E.*) AS n_run"
+        " AFTER MATCH SKIP TO NEXT ROW"
+        " PATTERN (A B+ | A E+) WITHIN INTERVAL '2' HOUR"
+        " DEFINE A AS A.et = 'view', B AS B.et = 'click',"
+        " E AS E.et = 'error')"
+    ),
+    "skip_to_first": (
+        "INSERT INTO sink SELECT u, a_et, n_b, c_v FROM ev"
+        " MATCH_RECOGNIZE (PARTITION BY u ORDER BY ts"
+        " MEASURES FIRST(A.et) AS a_et, COUNT(B.*) AS n_b,"
+        " LAST(C.v) AS c_v"
+        " AFTER MATCH SKIP TO FIRST B"
+        " PATTERN (A B+ C) WITHIN INTERVAL '2' HOUR"
+        " DEFINE B AS B.et = 'click', C AS C.et = 'purchase')"
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SPLIT_SQL))
+def test_nfa_split_invariance_seeded(spark, name):
+    """The same seeded log replayed in 1, 3 and 7 batches gives the
+    same sink: the single-frame state (pool, consumed marks, per-key
+    MATCH_NUMBER base) carries every semantic across batches."""
+    log = _session_log(spark, seed=7).localCheckpoint()
+    got = {
+        n: sorted(
+            map(tuple, replay_insert_maintained(
+                _SPLIT_SQL[name], _EV_TABLES, {"ev": log}, n_batches=n
+            ).collect()),
+            key=str,
+        )
+        for n in (1, 3, 7)
+    }
+    assert got[1], "the seeded log must produce matches"
+    assert got[3] == got[1] and got[7] == got[1]
 
 
 def test_nfa_parser_edge_cases(spark):

@@ -3,12 +3,14 @@
 Each test targets an operator whose INTERNALS changed for performance
 with output contractually identical:
 
-  - _MatchNfaPlan._explode: explicit repartition before the grouped-
+  - _MatchNfaPlan._scan: explicit repartition before the grouped-
     pandas NFA scan (AQE's size-based coalescing had folded every key
     into ONE task — 10-16s per batch at sf0.1);
-  - _ckpt: skips frames already rooted at a LogicalRDD (plans that
+  - _ckpt: skips frames that are already checkpoint scans (plans that
     self-checkpoint state were paying a second eager materialization
-    job per state piece per batch);
+    job per state piece per batch) — but still materializes a
+    LogicalRDD-rooted frame whose RDD is neither checkpointed nor
+    persisted (``createDataFrame``);
   - cms_heavy_hitters: the probe reads cells through a broadcast join
     instead of a driver collect folded back as literal arrays
     (min(coalesce(n,0)) over d joined cells == least(element_at(...)));
@@ -51,13 +53,14 @@ def test_nfa_explode_repartitions_before_grouped_pandas(spark):
         op_col="__op",
         seq_col="__seq",
     )
-    pool = spark.createDataFrame(
-        [("u1", "2024-01-01 00:00:00", "view", 1)],
-        "u string, ts string, et string, __seq long",
+    frame = spark.createDataFrame(
+        [("u1", "2024-01-01 00:00:00", "view", 1, False, True)],
+        "u string, ts string, et string, __seq long, __cns boolean,"
+        " __new boolean",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     import re
 
-    txt = _plan(plan._explode(pool))
+    txt = _plan(plan._scan(frame, 4))
     assert "FlatMapGroupsInPandas" in txt
     # exactly one exchange feeds the pandas node, and it is the
     # explicit coalescing-exempt hash repartition
@@ -84,6 +87,27 @@ def test_ckpt_skips_already_checkpointed_frames(spark):
     # tuples recurse, None passes through
     t = _ckpt((ck, None, df))
     assert t[0] is ck and t[1] is None and _is_ckpt_scan(t[2])
+    # a lazy checkpoint is checkpoint state too (marked, not yet run)
+    lazy = df.localCheckpoint(eager=False)
+    assert _is_ckpt_scan(lazy) and _ckpt(lazy) is lazy
+
+
+def test_ckpt_materializes_create_dataframe_state(spark):
+    """A ``createDataFrame`` frame is rooted at a LogicalRDD too, but
+    its RDD is neither checkpointed nor persisted: it is not a
+    checkpoint scan, so state built from it still gets materialized."""
+    from flink_cdc_2_3_0_src_spark.plans.sql_maintain import (
+        _ckpt,
+        _is_ckpt_scan,
+    )
+
+    state = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    root = state._jdf.queryExecution().logical().getClass().getSimpleName()
+    assert root == "LogicalRDD"
+    assert not _is_ckpt_scan(state)
+    out = _ckpt(state)
+    assert out is not state and _is_ckpt_scan(out)
+    assert sorted(map(tuple, out.collect())) == [(1, "a"), (2, "b")]
 
 
 def test_cms_broadcast_probe_matches_literal_fold(spark):
@@ -128,6 +152,21 @@ def test_cms_broadcast_probe_matches_literal_fold(spark):
         assert got[r["tok"]] == (r["exact_n"], est, est - r["exact_n"]), r
 
 
+def test_cms_heavy_hitters_order(spark):
+    """The documented row order: ``exact_n`` descending, then ``tok``
+    (the probe's groupBy alone would leave it arbitrary)."""
+    from flink_cdc_2_3_0_src_spark.io import load_table
+    from flink_cdc_2_3_0_src_spark.operators.sketch import cms_heavy_hitters
+
+    docs = load_table(spark, SF, "documents")
+    rows = [
+        (r["exact_n"], r["tok"])
+        for r in cms_heavy_hitters(docs, top_k=15, width=64).collect()
+    ]
+    assert len(rows) == 15
+    assert rows == sorted(rows, key=lambda t: (-t[0], t[1]))
+
+
 def test_spread_min_bytes_gate(spark):
     from flink_cdc_2_3_0_src_spark.io import (
         load_table,
@@ -149,3 +188,24 @@ def test_spread_min_bytes_gate(spark):
     )
     assert "Exchange" not in _plan(hinted)
     assert max_partition_bytes(spark) > 0
+
+
+@pytest.mark.parametrize(
+    "raw, want",
+    [
+        ("1t", 1 << 40),
+        ("64MB", 64 << 20),
+        ("134217728", 134217728),
+        ("12 parsecs", 128 << 20),
+        ("lots", 128 << 20),
+    ],
+)
+def test_max_partition_bytes_parse(raw, want):
+    """Byte-size units up to ``t``/``tb``; a value the parser does not
+    read falls back to Spark's 128 MiB default instead of raising."""
+    from types import SimpleNamespace
+
+    from flink_cdc_2_3_0_src_spark.io import max_partition_bytes
+
+    session = SimpleNamespace(conf=SimpleNamespace(get=lambda _k, _d: raw))
+    assert max_partition_bytes(session) == want
