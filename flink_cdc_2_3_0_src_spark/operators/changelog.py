@@ -44,6 +44,7 @@ from flink_cdc_2_3_0_src_spark.model import (
     SEQ_COL,
     TABLE_COL,
 )
+from flink_cdc_2_3_0_src_spark.session import SqlParseError, catalyst_parse
 
 
 def materialize(
@@ -1208,26 +1209,10 @@ def _parse_order_sql(order_sql: str):
         active = SparkSession.getActiveSession()
         if active is not None:
             try:
-                parser = active._jsparkSession.sessionState().sqlParser()
-                parser.parseExpression(expr_sql)
+                catalyst_parse(expr_sql, "expression", active)
             except AttributeError:
                 pass  # no JVM handle (connect mode): fall through lazy
-            except Exception as exc:
-                # only an actual ParseException means the USER's item is
-                # bad; Py4J transport/JVM failures must propagate as the
-                # infrastructure errors they are, not blame order_sql.
-                # PySpark's capture hook converts the JVM error into
-                # pyspark.errors.ParseException; a raw Py4JJavaError
-                # (uncaptured call path) carries java_exception instead
-                from pyspark.errors import ParseException as _ParseErr
-
-                java_exc = getattr(exc, "java_exception", None)
-                is_parse_err = isinstance(exc, _ParseErr) or (
-                    java_exc is not None
-                    and "ParseException" in java_exc.getClass().getName()
-                )
-                if not is_parse_err:
-                    raise
+            except SqlParseError as exc:
                 raise ValueError(
                     f"order_sql item {item!r}: cannot parse expression "
                     f"{expr_sql!r} (supported suffixes: ASC/DESC and "

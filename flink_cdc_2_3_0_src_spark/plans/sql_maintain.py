@@ -16,6 +16,16 @@ shape, route it to the matching ``maintain()`` plan, and fold the
 plan's signed output deltas into a maintained sink table per
 microbatch.
 
+Spark's own SQL parser reads the statement: :func:`parse_insert_select`
+walks the unresolved plan of ``sessionState.sqlParser.parsePlan`` (no
+name is resolved, no job runs) and takes every expression string from
+the statement's own text, sliced by the parser's origin offsets.  Two
+Flink-only forms are outside Spark's grammar and get a thin pre-pass,
+routed by keyword before any parse: ``MATCH_RECOGNIZE`` keeps its own
+clause parser, and the column-valued ``FOR SYSTEM_TIME AS OF
+<alias>.<col>`` is cut out of the text and handed to the join walker.
+Parsing needs a SparkSession: the active one, else ``get_spark()``'s.
+
 Three dispatchable shapes — the same three Flink's streaming planner
 compiles to stateful operators for CDC pipelines:
 
@@ -148,244 +158,7 @@ from flink_cdc_2_3_0_src_spark.operators.changelog import (
     split_csv_outside_parens as _split_select_items,
 )
 from flink_cdc_2_3_0_src_spark.operators.maintain import maintain
-
-_AGG_FN = re.compile(
-    r"^(?P<fn>SUM|COUNT|AVG|MIN|MAX)\s*\((?P<args>.*)\)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_IDENT = re.compile(r"^[`\"]?(?P<name>\w+)[`\"]?$")
-_INSERT_RE = re.compile(
-    r"^\s*INSERT\s+INTO\s+(?P<sink>[`\"\w.]+)\s+(?P<select>SELECT\s+.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_AGG_RE = re.compile(
-    r"^SELECT\s+(?P<items>.*?)\s+FROM\s+(?P<src>[`\"\w.]+)"
-    r"(?:\s+WHERE\s+(?P<where>.*?))?"
-    r"(?:\s+GROUP\s+BY\s+(?P<groups>.*?))?"
-    r"(?:\s+HAVING\s+(?P<having>.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-#: aggregate call anywhere in the select items — splits the
-#: no-GROUP-BY forms into GLOBAL aggregate vs row-local calc (r12)
-_HAS_AGG_FN = re.compile(r"(?i)\b(?:SUM|COUNT|AVG|MIN|MAX)\s*\(")
-
-
-def _mask_literals(sql: str) -> str:
-    """Same-length text with string-literal CONTENT replaced by a
-    neutral identifier character — clause-keyword regexes (WHERE /
-    GROUP BY / HAVING) match on the masked text and slice the ORIGINAL
-    by group span, so a literal containing ``' GROUP BY '`` can never
-    split a clause (r12; the keyword-in-literal parser trap)."""
-    out, in_str = [], False
-    for ch in sql:
-        if in_str:
-            out.append(ch if ch == "'" else "x")
-            in_str = ch != "'"
-        else:
-            if ch == "'":
-                in_str = True
-            out.append(ch)
-    return "".join(out)
-_JOIN_HEAD = re.compile(
-    r"^SELECT\s+(?P<items>.*?)\s+FROM\s+(?P<ta>[`\"\w.]+)(?:\s+AS)?\s+"
-    r"(?P<a>\w+)\s+"
-    r"(?P<rest>(?:(?:INNER|LEFT|RIGHT|FULL)\s+(?:OUTER\s+)?)?JOIN\s+.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_JOIN_KW = re.compile(
-    r"\b((?:INNER|LEFT|RIGHT|FULL)\s+(?:OUTER\s+)?JOIN|JOIN)\b",
-    re.IGNORECASE,
-)
-_JOIN_SEG = re.compile(
-    r"^\s*(?P<tb>[`\"\w.]+)(?:\s+AS)?\s+(?P<b>\w+)\s+"
-    r"ON\s+(?P<conds>.*?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-# Flink's event-time temporal join segment: ``JOIN dim FOR SYSTEM_TIME
-# AS OF p.<ptime> AS d ON p.k = d.k`` — the versioned-table enrichment
-# pattern (an order stream joining the rate valid at order time)
-_TEMPORAL_SEG = re.compile(
-    r"^\s*(?P<tb>[`\"\w.]+)\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+"
-    r"(?P<pq>\w+)\.(?P<pc>\w+)(?:\s+AS)?\s+(?P<b>\w+)\s+"
-    r"ON\s+(?P<conds>.*?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-# Flink's processing-time lookup join segment: ``JOIN dim FOR
-# SYSTEM_TIME AS OF PROCTIME() AS d ON p.k = d.k`` — per-batch
-# enrichment against the dim table's CURRENT snapshot (the JDBC
-# dim-table pattern; no version history)
-_LOOKUP_SEG = re.compile(
-    r"^\s*(?P<tb>[`\"\w.]+)\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+"
-    r"PROCTIME\s*\(\s*\)(?:\s+AS)?\s+(?P<b>\w+)\s+"
-    r"ON\s+(?P<conds>.*?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_TOPN_RE = re.compile(
-    r"^SELECT\s+(?P<items>.*?)\s+FROM\s*\(\s*"
-    r"SELECT\s+\*\s*,\s*ROW_NUMBER\s*\(\s*\)\s+OVER\s*\(\s*"
-    r"PARTITION\s+BY\s+(?P<groups>.*?)\s+ORDER\s+BY\s+(?P<order>.*?)\s*\)"
-    r"\s+AS\s+(?P<rn>\w+)\s+FROM\s+(?P<src>[`\"\w.]+)"
-    r"(?:\s+WHERE\s+(?P<where>.*?))?\s*\)(?:\s*(?:AS\s+)?\w+)?\s+"
-    r"WHERE\s+(?P<rn2>\w+)\s*(?P<cmp><=|=)\s*(?P<n>\d+)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_JOIN_COND = re.compile(
-    r"^(?P<lq>\w+)\.(?P<lc>\w+)\s*=\s*(?P<rq>\w+)\.(?P<rc>\w+)$"
-)
-_QUAL_ITEM = re.compile(r"^(?P<q>\w+)\.(?P<c>\w+)$")
-# Flink's tumbling-window group syntax over event time:
-#   GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)
-# with TUMBLE_START / TUMBLE_END projections in the SELECT — mapped
-# onto Spark's window(ts, '5 minutes') struct, derived per batch
-_TUMBLE_ARGS = (
-    r"\(\s*[`\"]?(?P<col>\w+)[`\"]?\s*,\s*INTERVAL\s+'(?P<n>\d+)'\s+"
-    r"(?P<unit>SECOND|MINUTE|HOUR|DAY)S?\s*\)$"
-)
-_TUMBLE = re.compile(r"^TUMBLE\s*" + _TUMBLE_ARGS, re.IGNORECASE | re.DOTALL)
-_TUMBLE_FIELD = re.compile(
-    r"^TUMBLE_(?P<which>START|END)\s*" + _TUMBLE_ARGS,
-    re.IGNORECASE | re.DOTALL,
-)
-# Flink's sliding-window syntax: HOP(ts, INTERVAL '<slide>' u, INTERVAL
-# '<size>' u) — each row belongs to size/slide windows; Spark's
-# window(ts, size, slide) generator replicates the row per window, and
-# the signed changelog algebra holds per window group
-_HOP_ARGS = (
-    r"\(\s*[`\"]?(?P<col>\w+)[`\"]?\s*,"
-    r"\s*INTERVAL\s+'(?P<sn>\d+)'\s+(?P<su>SECOND|MINUTE|HOUR|DAY)S?\s*,"
-    r"\s*INTERVAL\s+'(?P<zn>\d+)'\s+(?P<zu>SECOND|MINUTE|HOUR|DAY)S?\s*\)$"
-)
-_HOP = re.compile(r"^HOP\s*" + _HOP_ARGS, re.IGNORECASE | re.DOTALL)
-_HOP_FIELD = re.compile(
-    r"^HOP_(?P<which>START|END)\s*" + _HOP_ARGS,
-    re.IGNORECASE | re.DOTALL,
-)
-# Flink's cumulative-window syntax: CUMULATE(ts, INTERVAL '<step>' u,
-# INTERVAL '<size>' u) — within each size-aligned bucket [S, S+size),
-# the windows are [S, S+step), [S, S+2*step), ..., [S, S+size); a row
-# at t belongs to every window of its bucket whose end is past t.
-# Window membership is a row-local timestamp function (like HOP, unlike
-# SESSION), so rows replicate per window and the signed changelog
-# algebra holds per window group
-_CUMULATE = re.compile(r"^CUMULATE\s*" + _HOP_ARGS, re.IGNORECASE | re.DOTALL)
-_CUMULATE_FIELD = re.compile(
-    r"^CUMULATE_(?P<which>START|END)\s*" + _HOP_ARGS,
-    re.IGNORECASE | re.DOTALL,
-)
-# Flink's session-window syntax: SESSION(ts, INTERVAL '<gap>' u) —
-# merging windows (SessionWindows.withGap).  Unlike TUMBLE/HOP the
-# window is NOT a row-local timestamp function (arrivals merge
-# sessions, retractions split them), so the bridge dispatches the
-# dedicated table-state session plan rather than deriving window
-# columns per batch
-_SESSION = re.compile(r"^SESSION\s*" + _TUMBLE_ARGS, re.IGNORECASE | re.DOTALL)
-_SESSION_FIELD = re.compile(
-    r"^SESSION_(?P<which>START|END)\s*" + _TUMBLE_ARGS,
-    re.IGNORECASE | re.DOTALL,
-)
-_W_START, _W_END = "__w_start", "__w_end"
-
-# Flink's OVER aggregation (StreamExecOverAggregate): ``SELECT c1, ..,
-# FN(x) OVER (PARTITION BY k ORDER BY ts [ROWS|RANGE BETWEEN ..
-# PRECEDING AND CURRENT ROW]) FROM t`` — each append-only arrival is
-# emitted once, enriched with its frame aggregate.  Flink requires all
-# OVER windows of one SELECT to be identical and the ORDER BY to be an
-# ascending time attribute; the same rules apply here.  The frame's
-# PRECEDING bound is UNBOUNDED, a row count (ROWS) or an INTERVAL
-# literal (RANGE); no frame clause means UNBOUNDED.
-_OVER_WIN = (
-    r"OVER\s*\(\s*PARTITION\s+BY\s+(?P<partition>.*?)\s+ORDER\s+BY\s+"
-    r"(?P<order>[`\"]?\w+[`\"]?)(?:\s+(?P<dir>ASC|DESC))?"
-    r"(?:\s+(?P<frame>ROWS|RANGE)\s+BETWEEN\s+(?P<pre>UNBOUNDED|\d+|"
-    r"INTERVAL\s+'\d+'\s+(?:SECOND|MINUTE|HOUR|DAY)S?)\s+PRECEDING\s+"
-    r"AND\s+CURRENT\s+ROW)?\s*\)$"
-)
-_OVER_ITEM = re.compile(
-    r"^(?P<fn>SUM|COUNT|AVG|MIN|MAX|LAG)\s*\((?P<args>.*?)\)\s+"
-    + _OVER_WIN,
-    re.IGNORECASE | re.DOTALL,
-)
-_OVER_RE = re.compile(
-    r"^SELECT\s+(?P<items>.*?)\s+FROM\s+(?P<src>[`\"\w.]+)"
-    r"(?:\s+WHERE\s+(?P<where>.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_OVER_INTERVAL = re.compile(
-    r"^INTERVAL\s+'(?P<n>\d+)'\s+(?P<unit>SECOND|MINUTE|HOUR|DAY)S?$",
-    re.IGNORECASE,
-)
-
-_SHAPES_MSG = (
-    "unsupported INSERT-SELECT shape; the maintenance planner dispatches "
-    "the forms Flink's streaming planner compiles for CDC "
-    "pipelines: row-local projection (SELECT <exprs> FROM t [WHERE p]), "
-    "grouped or GLOBAL aggregate (SELECT [g,] FN(x) .. FROM t [WHERE p] "
-    "[GROUP BY g]), equi-join (SELECT a.x, b.y FROM ta a JOIN tb b ON "
-    "a.k = b.k), Top-N (SELECT .. FROM (SELECT *, ROW_NUMBER() OVER "
-    "(PARTITION BY g ORDER BY o) AS rn FROM t) WHERE rn <= n), and OVER "
-    "aggregation (SELECT c1, .., FN(x) OVER (PARTITION BY k ORDER BY ts "
-    "[ROWS|RANGE BETWEEN .. PRECEDING AND CURRENT ROW]) FROM t)"
-)
-
-
-def _split_join_keywords(rest: str) -> list:
-    """``_JOIN_KW.split``-shaped output ([pre, kw, seg, kw, seg, ...]),
-    but string-literal-aware: a ``'left join'`` inside a quoted ON
-    literal is data, not a stage boundary."""
-    quote_spans, in_str, start = [], False, 0
-    for i, ch in enumerate(rest):
-        if in_str:
-            if ch == "'":
-                in_str = False
-                quote_spans.append((start, i))
-        elif ch == "'":
-            in_str, start = True, i
-
-    def quoted(pos: int) -> bool:
-        return any(a <= pos <= b for a, b in quote_spans)
-
-    parts, last = [], 0
-    for m in _JOIN_KW.finditer(rest):
-        if quoted(m.start()):
-            continue
-        parts.append(rest[last : m.start()])
-        parts.append(m.group(1))
-        last = m.end()
-    parts.append(rest[last:])
-    return parts
-
-
-def _split_alias(item: str) -> tuple[str, Optional[str]]:
-    """Split ``<expr> AS <alias>`` at the LAST top-level AS (outside
-    parens and quotes) — ``CAST(x AS INT) AS y`` keeps the inner AS."""
-    item = item.strip()
-    # depth/quote state per character, so a whitespace-tolerant AS match
-    # can be tested for top-levelness without rewriting the item (string
-    # literals keep their exact spacing)
-    depth, in_str = 0, False
-    top = []
-    for ch in item:
-        if in_str:
-            top.append(False)
-            in_str = ch != "'"
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        top.append(not in_str and depth == 0)
-    last = None
-    for m in re.finditer(r"\sAS\s+", item, re.IGNORECASE):
-        if all(top[i] for i in range(m.start(), m.end())):
-            last = m
-    if last is None:
-        return item, None
-    alias = item[last.end() :].strip().strip('`" ')
-    if not re.fullmatch(r"\w+", alias):
-        return item, None
-    return item[: last.start()].strip(), alias
+from flink_cdc_2_3_0_src_spark.session import catalyst_parse
 
 
 @dataclass
@@ -472,559 +245,1111 @@ class InsertSelect:
     calc_exprs: list = field(default_factory=list)
 
 
-def parse_insert_select(sql: str) -> InsertSelect:
-    m = _INSERT_RE.match(sql)
-    if not m:
+_IDENT = re.compile(r"^[`\"]?(?P<name>\w+)[`\"]?$")
+_INSERT_RE = re.compile(
+    r"^\s*INSERT\s+INTO\s+(?P<sink>[`\"\w.]+)\s+(?P<select>SELECT\s+.*)$",
+    re.IGNORECASE | re.DOTALL,
+)
+# The two pre-passes, routed by keyword before any Catalyst call:
+# MATCH_RECOGNIZE is outside Spark's grammar (its own clause parser
+# below), and Spark's FOR SYSTEM_TIME AS OF takes only constant
+# expressions, so Flink's column-valued event-time form is blanked out
+# of the text (same length: Catalyst's offsets still index the
+# statement) and handed to the join walker on the side.
+_MATCH_KW = re.compile(r"(?i)\bMATCH_RECOGNIZE\b")
+_LITERAL = re.compile(r"'(?:[^']|'')*'")
+_TEMPORAL_AS_OF = re.compile(
+    r"(?i)\bFOR\s+SYSTEM_TIME\s+AS\s+OF\s+(?P<pq>\w+)\.(?P<pc>\w+)"
+)
+# Flink's interval literal in TUMBLE/HOP/CUMULATE/SESSION and RANGE
+# frames: INTERVAL '<n>' <unit> → the Spark duration "<n> <unit>s"
+_INTERVAL = re.compile(
+    r"(?i)^INTERVAL\s+'(?P<n>\d+)'\s+(?P<unit>SECOND|MINUTE|HOUR|DAY)S?$"
+)
+_AGG_FNS = ("sum", "count", "avg", "min", "max")
+# window-group function → INTERVAL arguments after the time column
+_WINDOW_FNS = {"tumble": 1, "hop": 2, "cumulate": 2, "session": 1}
+_WINDOW_ARGS = {
+    "tumble": " and interval", "hop": ", slide and size",
+    "cumulate": ", step and size", "session": " and gap",
+}
+_W_START, _W_END = "__w_start", "__w_end"
+# frame bounds are shared Scala objects: their origin is wherever they
+# were first built, so spans skip them
+_FRAME_OBJECTS = (
+    "UnspecifiedFrame", "CurrentRow", "UnboundedPreceding",
+    "UnboundedFollowing",
+)
+_JOIN_HOW = {
+    "Inner": "inner", "LeftOuter": "left", "RightOuter": "right",
+    "FullOuter": "full",
+}
+
+_SHAPES_MSG = (
+    "unsupported INSERT-SELECT shape; the maintenance planner dispatches "
+    "the forms Flink's streaming planner compiles for CDC "
+    "pipelines: row-local projection (SELECT <exprs> FROM t [WHERE p]), "
+    "grouped or GLOBAL aggregate (SELECT [g,] FN(x) .. FROM t [WHERE p] "
+    "[GROUP BY g]), equi-join (SELECT a.x, b.y FROM ta a JOIN tb b ON "
+    "a.k = b.k), Top-N (SELECT .. FROM (SELECT *, ROW_NUMBER() OVER "
+    "(PARTITION BY g ORDER BY o) AS rn FROM t) WHERE rn <= n), and OVER "
+    "aggregation (SELECT c1, .., FN(x) OVER (PARTITION BY k ORDER BY ts "
+    "[ROWS|RANGE BETWEEN .. PRECEDING AND CURRENT ROW]) FROM t)"
+)
+_NOT_INSERT_MSG = (
+    "not an INSERT INTO <sink> SELECT ... statement; the SQL maintenance "
+    "surface mirrors the reference's ITCase contract "
+    "(MySqlConnectorITCase.java:215)"
+)
+_UNION_AGG_MSG = (
+    "a UNION ALL source must feed a grouped aggregate: SELECT g, FN(x) .. "
+    "FROM (SELECT .. UNION ALL SELECT ..) [WHERE p] GROUP BY g"
+)
+
+
+def _split_alias(item: str) -> tuple[str, Optional[str]]:
+    """Split ``<expr> AS <alias>`` at the LAST top-level AS (outside
+    parens and quotes) — ``CAST(x AS INT) AS y`` keeps the inner AS."""
+    item = item.strip()
+    # depth/quote state per character, so a whitespace-tolerant AS match
+    # can be tested for top-levelness without rewriting the item (string
+    # literals keep their exact spacing)
+    depth, in_str = 0, False
+    top = []
+    for ch in item:
+        if in_str:
+            top.append(False)
+            in_str = ch != "'"
+            continue
+        if ch == "'":
+            in_str = True
+        elif ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        top.append(not in_str and depth == 0)
+    last = None
+    for m in re.finditer(r"\sAS\s+", item, re.IGNORECASE):
+        if all(top[i] for i in range(m.start(), m.end())):
+            last = m
+    if last is None:
+        return item, None
+    alias = item[last.end() :].strip().strip('`" ')
+    if not re.fullmatch(r"\w+", alias):
+        return item, None
+    return item[: last.start()].strip(), alias
+
+
+def _seq(jseq) -> list:
+    """A Scala Seq handle → a list of its element handles."""
+    it, out = jseq.iterator(), []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def _close_paren(text: str, i: int) -> int:
+    """Index of the ``)`` matching the ``(`` at ``text[i]`` (string
+    literals skipped), or -1."""
+    depth, in_str = 0, False
+    for j in range(i, len(text)):
+        ch = text[j]
+        if in_str:
+            in_str = ch != "'"
+        elif ch == "'":
+            in_str = True
+        elif ch in "()":
+            depth += 1 if ch == "(" else -1
+            if depth == 0:
+                return j
+    return -1
+
+
+class _Node:
+    """One node of Catalyst's unresolved plan, read over py4j on demand
+    (every read is a JVM round trip, so reads are cached).  ``sql`` is
+    the parsed text; spans index it, taken from the parser's origins."""
+
+    __slots__ = ("j", "sql", "_name", "_kids", "_parts", "_span")
+    _ORIGIN = re.compile(
+        r"^Origin\((?:Some\(\d+\)|None),(?:Some\(\d+\)|None),"
+        r"Some\((\d+)\),Some\((\d+)\)"
+    )
+
+    def __init__(self, j, sql: str) -> None:
+        self.j, self.sql = j, sql
+        self._name = self._kids = self._parts = self._span = None
+
+    @property
+    def name(self) -> str:
+        """Class name: Project, Join, UnresolvedFunction, ..; ``Intersect
+        All`` reads as Intersect, ``CurrentRow$`` as CurrentRow."""
+        if self._name is None:
+            self._name = self.j.nodeName().split(" ")[0].rstrip("$")
+        return self._name
+
+    def kids(self) -> list:
+        if self._kids is None:
+            self._kids = [_Node(c, self.sql) for c in _seq(self.j.children())]
+        return self._kids
+
+    def sub(self, field: str) -> "_Node":
+        return _Node(getattr(self.j, field)(), self.sql)
+
+    def opt(self, field: str) -> Optional["_Node"]:
+        j = getattr(self.j, field)()
+        return _Node(j.get(), self.sql) if j.isDefined() else None
+
+    def subs(self, field: str) -> list:
+        return [_Node(x, self.sql) for x in _seq(getattr(self.j, field)())]
+
+    def parts(self) -> list:
+        """nameParts of an attribute or function (``a.k`` → [a, k])."""
+        if self._parts is None:
+            self._parts = self.j.nameParts().mkString("\u0001").split("\u0001")
+        return self._parts
+
+    def fn(self) -> str:
+        """Lower-case name of a function call, else ''."""
+        if self.name != "UnresolvedFunction":
+            return ""
+        return ".".join(self.parts()).lower()
+
+    def col(self) -> Optional[str]:
+        """The name of a plain one-part column reference."""
+        if self.name == "UnresolvedAttribute":
+            p = self.parts()
+            return p[0] if len(p) == 1 else None
+        return None
+
+    def qcol(self) -> Optional[tuple]:
+        """(qualifier, column) of an ``<alias>.<col>`` reference."""
+        if self.name == "UnresolvedAttribute":
+            p = self.parts()
+            return (p[0], p[1]) if len(p) == 2 else None
+        return None
+
+    def span(self) -> tuple:
+        """[start, stop] of the node's text.  A predicate's origin
+        (BETWEEN, IN, LIKE, IS NULL) starts at its keyword, after its
+        value operand, so the span also covers the first and last
+        children's."""
+        if self._span is None:
+            m = self._ORIGIN.match(self.j.origin().toString())
+            ends = [(int(m.group(1)), int(m.group(2)))] if m else []
+            kids = [k for k in self.kids() if k.name not in _FRAME_OBJECTS]
+            for k in {id(x): x for x in kids[:1] + kids[-1:]}.values():
+                ends += [k.span()] if k.span() else []
+            self._span = (
+                (min(e[0] for e in ends), max(e[1] for e in ends))
+                if ends else ()
+            )
+        return self._span
+
+    def text(self) -> str:
+        s = self.span()
+        return self.sql[s[0] : s[1] + 1] if s else ""
+
+    def wrapped(self) -> tuple:
+        """The span grown over each pair of parentheses that encloses
+        exactly this node: ``(v > 0)`` keeps the user's parentheses."""
+        s, e = self.span()
+        sql = self.sql
+        while True:
+            i, j = s - 1, e + 1
+            while i >= 0 and sql[i].isspace():
+                i -= 1
+            while j < len(sql) and sql[j].isspace():
+                j += 1
+            if i < 0 or sql[i] != "(" or _close_paren(sql, i) != j:
+                return s, e
+            s, e = i, j
+
+    def ptext(self) -> str:
+        s, e = self.wrapped()
+        return self.sql[s : e + 1]
+
+    def item_text(self) -> str:
+        """A select item as written: ``<expr> [AS <alias>]``."""
+        if self.name == "UnresolvedAlias":
+            return self.kids()[0].text()
+        if self.name == "Alias":
+            return self.sql[self.kids()[0].wrapped()[0] : self.span()[1] + 1]
+        return self.ptext()
+
+    def call_args(self) -> str:
+        """The text between a call's parentheses: ``COUNT(DISTINCT v)``
+        → ``DISTINCT v``."""
+        t = self.text()
+        i = t.find("(")
+        j = _close_paren(t, i) if i >= 0 else -1
+        return t[i + 1 : j].strip() if j > 0 else ""
+
+    def walk(self):
+        """This node and its descendants, depth first."""
+        yield self
+        for k in self.kids():
+            yield from k.walk()
+
+    def has(self, pred) -> bool:
+        return any(pred(n) for n in self.walk())
+
+
+def _item(node: _Node) -> tuple:
+    """(expression node, alias or None) of one select item."""
+    if node.name in ("Alias", "UnresolvedAlias"):
+        return node.kids()[0], node.j.name() if node.name == "Alias" else None
+    return node, None
+
+
+def _rel_name(j) -> str:
+    return j.multipartIdentifier().mkString(".")
+
+
+def _interval(node: _Node) -> Optional[str]:
+    """``INTERVAL '<n>' <unit>`` → ``"<n> <unit>s"``, else None."""
+    m = _INTERVAL.match(node.text()) if node.name == "Literal" else None
+    return f"{m.group('n')} {m.group('unit').lower()}s" if m else None
+
+
+def _window_call(node: _Node, qualified: bool = False):
+    """A TUMBLE/HOP/CUMULATE/SESSION call, or its _START/_END field →
+    (kind, "START"/"END" or None for the call, (time column,
+    durations..)); the column is ``(alias, col)`` when ``qualified``.
+    None unless the arguments are a column and INTERVAL literals."""
+    kind, _, which = node.fn().partition("_")
+    if kind not in _WINDOW_FNS or which not in ("", "start", "end"):
+        return None
+    args = node.subs("arguments")
+    if len(args) != 1 + _WINDOW_FNS[kind]:
+        return None
+    ts = args[0].qcol() if qualified else args[0].col()
+    durs = [_interval(a) for a in args[1:]]
+    if ts is None or None in durs:
+        return None
+    return kind, which.upper() or None, (ts, *durs)
+
+
+def _window_field(wc, spec, kind: str, clause: str, expr: _Node):
+    """Source column of a TUMBLE_START/_END-style field whose window
+    must equal the statement's ``spec``."""
+    if wc[2] != spec:
         raise ValueError(
-            "not an INSERT INTO <sink> SELECT ... statement; the SQL "
-            "maintenance surface mirrors the reference's ITCase contract "
-            "(MySqlConnectorITCase.java:215)"
+            f"{expr.ptext()!r} does not match the {clause} {kind.upper()} "
+            f"window (same time column{_WINDOW_ARGS[kind]} required)"
         )
-    sink = m.group("sink").strip('`"')
-    select = m.group("select").strip()
+    return _W_START if wc[1] == "START" else _W_END
 
-    tm = _TOPN_RE.match(select)
-    if tm:
-        if tm.group("rn") != tm.group("rn2"):
+
+def _conjuncts(node: _Node) -> list:
+    """Top-level AND operands, left to right; a parenthesized AND is one
+    conjunct (the user grouped it)."""
+    if node.name == "And" and node.wrapped() == node.span():
+        return [c for k in node.kids() for c in _conjuncts(k)]
+    return [node]
+
+
+def _split_on_conjuncts(conds: str) -> list:
+    """Split a condition on its top-level ``AND``s as Catalyst reads
+    them: BETWEEN's AND, ANDs inside parentheses or literals and
+    ``_and_`` inside identifiers never split."""
+    root = _Node(catalyst_parse(conds, "expression"), conds)
+    return [c.ptext() for c in _conjuncts(root)]
+
+
+def _strip_filter(node: _Node) -> tuple:
+    """(child under an optional Filter, WHERE text or None)."""
+    if node.name == "Filter":
+        return node.sub("child"), node.sub("condition").ptext()
+    return node, None
+
+
+def _names_of(nodes: list, what: str) -> list:
+    for n in nodes:
+        if n.col() is None:
             raise ValueError(
-                f"Top-N rank filter references {tm.group('rn2')!r} but the "
-                f"ROW_NUMBER column is {tm.group('rn')!r}"
+                f"{what} items must be plain column names, got {n.text()!r}"
             )
-        # PARTITION BY items: plain columns, plus at most one
-        # TUMBLE(ts, INTERVAL ..) — Flink's WINDOW Top-N (per-window
-        # rank) / window deduplication.  The bucket is row-local, so it
-        # derives per batch exactly like the aggregate shape's TUMBLE
-        # and becomes two ordinary group columns.
-        groups, tumble = [], None
-        for part in _split_select_items(tm.group("groups")):
-            tm_ = _TUMBLE.match(part.strip())
-            if tm_:
-                if tumble is not None:
-                    raise ValueError(
-                        "at most one TUMBLE window per PARTITION BY"
-                    )
-                tumble = (
-                    tm_.group("col"),
-                    f"{tm_.group('n')} {tm_.group('unit').lower()}s",
-                )
-                groups.extend([_W_START, _W_END])
-                continue
-            im = _IDENT.match(part.strip())
-            if not im:
-                raise ValueError(
-                    "PARTITION BY items must be plain column names or "
-                    f"TUMBLE(ts, INTERVAL ..), got {part.strip()!r}"
-                )
-            groups.append(im.group("name"))
-        items = []
-        for raw in _split_select_items(tm.group("items")):
-            expr, alias = _split_alias(raw)
-            wf = _TUMBLE_FIELD.match(expr)
-            if wf:
-                dur = f"{wf.group('n')} {wf.group('unit').lower()}s"
-                if tumble is None or (wf.group("col"), dur) != tumble:
-                    raise ValueError(
-                        f"{expr!r} does not match the PARTITION BY's "
-                        "TUMBLE window (same time column and interval "
-                        "required)"
-                    )
-                which = wf.group("which").upper()
-                src_c = _W_START if which == "START" else _W_END
-                items.append((src_c, alias or f"w_{which.lower()}"))
-                continue
-            im = _IDENT.match(expr)
-            if not im:
-                raise ValueError(
-                    f"Top-N select items must be plain columns of the "
-                    f"source table, got {raw!r}"
-                )
-            name = im.group("name")
-            if name == tm.group("rn"):
-                raise ValueError(
-                    "the rank column must not be projected — membership "
-                    "maintenance omits rank numbers (Flink's no-rank-output "
-                    "optimization); select the table columns only"
-                )
-            items.append((name, alias or name))
-        if tm.group("cmp") == "=" and int(tm.group("n")) != 1:
-            raise ValueError(
-                f"rank = {tm.group('n')} selects a single rank position; "
-                "only rank = 1 (deduplication / per-group winner) is "
-                "supported — use <= n for Top-N membership"
-            )
-        return InsertSelect(
-            sink=sink, shape="topn", sources=[tm.group("src").strip('`"')],
-            group_cols=groups, order_sql=tm.group("order").strip(),
-            n=int(tm.group("n")), where=_clean(tm.group("where")),
-            select=items, rank_eq=tm.group("cmp") == "=", tumble=tumble,
+    return [n.col() for n in nodes]
+
+
+def _agg_alias(fn: str, args: str, alias, aggs: dict, idx: list) -> str:
+    """The output name of an aggregate: its alias, else a stable derived
+    name (Flink's EXPR$i is unfriendly for an upsert sink)."""
+    if alias is None:
+        base = re.sub(r"\W+", "_", args.strip("*") or "all")
+        alias = f"{fn}_{base}".strip("_") or f"{fn}_{idx[0]}"
+        idx[0] += 1
+    if alias in aggs:
+        raise ValueError(f"duplicate output column {alias!r}")
+    return alias
+
+
+def parse_insert_select(sql: str) -> InsertSelect:
+    """Parse an ``INSERT INTO <sink> SELECT ..`` statement into its
+    maintenance shape by walking Spark's unresolved plan of it, after
+    the two pre-passes (see ``_MATCH_KW``).  Refusals are ValueErrors."""
+    # keywords inside string literals route nothing
+    masked = _LITERAL.sub(lambda m: " " * len(m.group(0)), sql)
+    if _MATCH_KW.search(masked):
+        return _parse_match(sql)
+    as_of, text = [], sql
+    for m in _TEMPORAL_AS_OF.finditer(masked):
+        as_of.append((m.start(), m.group("pq"), m.group("pc")))
+        text = text[: m.start()] + " " * len(m.group(0)) + text[m.end() :]
+    root = _Node(catalyst_parse(text), text)
+    if root.name != "InsertIntoStatement" or root.j.overwrite() or (
+        root.j.userSpecifiedCols().nonEmpty()
+        or root.j.partitionSpec().nonEmpty()
+    ):
+        raise ValueError(_NOT_INSERT_MSG)
+    sink = _rel_name(root.j.table())
+    q = root.sub("query")
+    if as_of and (q.name != "Project" or (
+        _strip_filter(q.sub("child"))[0].name != "Join"
+    )):
+        raise ValueError(_SHAPES_MSG)  # AS OF <alias>.<col> outside a join
+    if q.name in ("Intersect", "Except"):
+        return _parse_setop(sink, q)
+    having = None
+    if q.name == "UnresolvedHaving":
+        having, q = q.sub("havingCondition"), q.sub("child")
+    if q.name == "Aggregate":
+        items = q.subs("aggregateExpressions")
+        if q.subs("groupingExpressions") or _has_agg(items):
+            return _parse_agg(sink, q, items, having)
+        if having is not None:
+            raise ValueError("HAVING needs a GROUP BY")
+    if q.name != "Project":
+        raise ValueError(_SHAPES_MSG)
+    items, child = q.subs("projectList"), q.sub("child")
+    topn = _parse_topn(sink, items, child)
+    if topn is not None:
+        return topn
+    base = _strip_filter(child)[0]
+    if base.name == "Join":
+        return _parse_join(sink, items, child, as_of)
+    if base.name != "UnresolvedRelation":
+        _source(child, grouped=False)  # raises the UNION / shape refusal
+    windowed = any(
+        it.has(lambda n: n.name == "WindowExpression") for it in items
+    )
+    if not windowed and _has_agg(items):
+        # no GROUP BY and every item aggregates: the GLOBAL aggregate
+        return _parse_agg(sink, q, items, None)
+    return (windowed and _parse_over(sink, items, child)) or _parse_calc(
+        sink, items, child
+    )
+
+
+def _has_agg(items: list) -> bool:
+    return any(it.has(lambda n: n.fn() in _AGG_FNS) for it in items)
+
+
+def _parse_topn(sink: str, items: list, child: _Node):
+    """Flink's streaming Top-N: ``SELECT .. FROM (SELECT *, ROW_NUMBER()
+    OVER (PARTITION BY g ORDER BY o) AS rn FROM t [WHERE p]) [x] WHERE rn
+    <= n`` (``rn = 1``: deduplication).  None for any other shape."""
+    if child.name != "Filter" or child.sub("child").name != "SubqueryAlias":
+        return None
+    inner = child.sub("child").sub("child")
+    if inner.name != "Project":
+        return None
+    inner_items = inner.subs("projectList")
+    rel, where = _strip_filter(inner.sub("child"))
+    if len(inner_items) != 2 or rel.name != "UnresolvedRelation":
+        return None
+    star, rn_item = inner_items
+    if star.name != "UnresolvedStar" or rn_item.name != "Alias":
+        return None
+    win = rn_item.kids()[0]
+    if win.name != "WindowExpression" or (
+        win.sub("windowFunction").fn() != "row_number"
+    ):
+        return None
+    spec = win.sub("windowSpec")
+    parts, orders = spec.subs("partitionSpec"), spec.subs("orderSpec")
+    cond = child.sub("condition")
+    if (
+        not parts or not orders
+        or spec.sub("frameSpecification").name != "UnspecifiedFrame"
+        or cond.name not in ("LessThanOrEqual", "EqualTo")
+    ):
+        return None
+    rn_ref, n_lit = cond.kids()
+    if rn_ref.col() is None or not (
+        n_lit.name == "Literal" and n_lit.text().isdigit()
+    ):
+        return None
+    rn, n = rn_item.j.name(), int(n_lit.text())
+    rank_eq = cond.name == "EqualTo"
+    if rn != rn_ref.col():
+        raise ValueError(
+            f"Top-N rank filter references {rn_ref.col()!r} but the "
+            f"ROW_NUMBER column is {rn!r}"
         )
+    # PARTITION BY items: plain columns, plus at most one TUMBLE(ts,
+    # INTERVAL ..) — Flink's WINDOW Top-N / window deduplication.  The
+    # bucket is row-local, so it derives per batch like the aggregate
+    # shape's TUMBLE and becomes two ordinary group columns.
+    groups, tumble = [], None
+    for part in parts:
+        wc = _window_call(part)
+        if wc is not None and wc[0] == "tumble" and wc[1] is None:
+            if tumble is not None:
+                raise ValueError("at most one TUMBLE window per PARTITION BY")
+            tumble = wc[2]
+            groups.extend([_W_START, _W_END])
+        elif part.col() is None:
+            raise ValueError(
+                "PARTITION BY items must be plain column names or "
+                f"TUMBLE(ts, INTERVAL ..), got {part.ptext()!r}"
+            )
+        else:
+            groups.append(part.col())
+    out = []
+    for it in items:
+        expr, alias = _item(it)
+        wc = _window_call(expr)
+        if wc is not None and wc[0] == "tumble" and wc[1] is not None:
+            src = _window_field(wc, tumble, "tumble", "PARTITION BY's", expr)
+            out.append((src, alias or f"w_{wc[1].lower()}"))
+            continue
+        if expr.col() is None:
+            raise ValueError(
+                "Top-N select items must be plain columns of the source "
+                f"table, got {it.item_text()!r}"
+            )
+        if expr.col() == rn:
+            raise ValueError(
+                "the rank column must not be projected — membership "
+                "maintenance omits rank numbers (Flink's no-rank-output "
+                "optimization); select the table columns only"
+            )
+        out.append((expr.col(), alias or expr.col()))
+    if rank_eq and n != 1:
+        raise ValueError(
+            f"rank = {n} selects a single rank position; only rank = 1 "
+            "(deduplication / per-group winner) is supported — use <= n "
+            "for Top-N membership"
+        )
+    return InsertSelect(
+        sink=sink, shape="topn", sources=[_rel_name(rel.j)],
+        group_cols=groups, n=n, where=where, select=out, rank_eq=rank_eq,
+        order_sql=child.sql[orders[0].span()[0] : orders[-1].span()[1] + 1],
+        tumble=tumble,
+    )
 
-    jm = _JOIN_HEAD.match(select)
-    if jm and " GROUP " not in select.upper():
-        aliases = [jm.group("a")]
-        tables = [jm.group("ta").strip('`"')]
-        parts = _split_join_keywords(jm.group("rest"))
-        if parts[0].strip():
+
+def _parse_join(sink: str, items: list, child: _Node, as_of: list):
+    """Two-way and chained equi-joins with interval (pair-predicate) and
+    TUMBLE window conjuncts, the temporal join (``FOR SYSTEM_TIME AS OF
+    <probe>.<ts>``, cut out by the pre-pass into ``as_of``) and the
+    lookup join (``.. AS OF PROCTIME()``)."""
+    joins, node = [], child
+    while node.name == "Join":
+        joins.insert(0, node)
+        node = node.sub("left")
+    if not joins or node.name != "SubqueryAlias" or (
+        node.sub("child").name != "UnresolvedRelation"
+    ):
+        raise ValueError(_SHAPES_MSG)
+    aliases, tables = [node.j.alias()], [_rel_name(node.sub("child").j)]
+    raw_stages, temporal, lookup_alias = [], None, None
+    for jn in joins:
+        how = _JOIN_HOW.get(jn.j.joinType().toString())
+        if how is None:  # CROSS, SEMI, ANTI, NATURAL, USING
             raise ValueError(_SHAPES_MSG)
-        raw_stages = []
-        temporal = None
-        lookup_alias = None
-        for kw, seg in zip(parts[1::2], parts[2::2]):
-            howkw = kw.split()[0].lower()
-            how = "inner" if howkw == "join" else howkw
-            lsm = _LOOKUP_SEG.match(seg)
-            if lsm:
-                # FOR SYSTEM_TIME AS OF PROCTIME() — the processing-
-                # time lookup join segment (dim snapshot per batch)
-                if lookup_alias is not None or temporal is not None \
-                        or raw_stages:
-                    raise ValueError(
-                        "a lookup join (FOR SYSTEM_TIME AS OF "
-                        "PROCTIME()) is supported as the only join of "
-                        "the statement — enrich first, then feed the "
-                        "sink to further statements (STATEMENT SET)"
-                    )
-                if how not in ("inner", "left"):
-                    raise ValueError(
-                        f"lookup joins support INNER and LEFT only, "
-                        f"got {how.upper()} (Flink's lookup join "
-                        "supports the same two)"
-                    )
-                lookup_alias = lsm.group("b")
-                raw_stages.append(
-                    (how, lsm.group("tb").strip('`"'), lsm.group("b"),
-                     lsm.group("conds"))
-                )
-                continue
-            tsm = _TEMPORAL_SEG.match(seg)
-            if tsm:
-                # FOR SYSTEM_TIME AS OF <probe alias>.<ptime> — the
-                # event-time temporal join segment (versioned build side)
-                if temporal is not None or raw_stages:
-                    raise ValueError(
-                        "a temporal join (FOR SYSTEM_TIME AS OF) is "
-                        "supported as the only join of the statement — "
-                        "enrich first, then feed the sink to further "
-                        "statements (STATEMENT SET) for more joins"
-                    )
-                if how not in ("inner", "left"):
-                    raise ValueError(
-                        f"temporal joins support INNER and LEFT only, "
-                        f"got {how.upper()} (Flink's FOR SYSTEM_TIME AS "
-                        "OF supports the same two)"
-                    )
-                temporal = (tsm.group("pq"), tsm.group("pc"))
-                raw_stages.append(
-                    (how, tsm.group("tb").strip('`"'), tsm.group("b"),
-                     tsm.group("conds"))
-                )
-                continue
-            sm = _JOIN_SEG.match(seg)
-            if not sm:
-                raise ValueError(
-                    f"cannot parse join segment {seg.strip()!r}: expected "
-                    "<table> [AS] <alias> ON <equi-join conditions> (or "
-                    "<table> FOR SYSTEM_TIME AS OF <probe>.<ts> [AS] "
-                    "<alias> ON ... for a temporal join)"
-                )
-            if temporal is not None or lookup_alias is not None:
-                raise ValueError(
-                    "a temporal/lookup join (FOR SYSTEM_TIME AS OF) is "
-                    "supported as the only join of the statement — "
-                    "enrich first, then feed the sink to further "
-                    "statements (STATEMENT SET) for more joins"
-                )
-            raw_stages.append(
-                (how, sm.group("tb").strip('`"'), sm.group("b"),
-                 sm.group("conds"))
+        right, cond = jn.sub("right"), jn.opt("condition")
+        rel = right.sub("child") if right.name == "SubqueryAlias" else None
+        travel = rel is not None and rel.name == "RelationTimeTravel"
+        ts = rel.opt("timestamp") if travel else None
+        if cond is None or rel is None or travel and (
+            ts is None or ts.fn() != "proctime" or ts.kids()
+        ):
+            seg = child.sql[right.span()[0] : jn.span()[1] + 1].strip()
+            raise ValueError(
+                f"cannot parse join segment {seg!r}: expected <table> [AS] "
+                "<alias> ON <equi-join conditions> (or <table> FOR "
+                "SYSTEM_TIME AS OF <probe>.<ts> [AS] <alias> ON ... for a "
+                "temporal join)"
             )
-        two_way = len(raw_stages) == 1
-        stages = []
-        join_window = None
-        for how, tb, bal, conds in raw_stages:
-            if bal in aliases:
-                raise ValueError(f"duplicate table alias {bal!r}")
-            on, extra = [], []
-            for cond in _split_on_conjuncts(conds):
-                wm = _WIN_EQ.match(cond.strip())
-                if wm:
-                    # TUMBLE-bucket equality — Flink's window join
-                    if temporal is not None or lookup_alias is not None:
-                        raise ValueError(
-                            "temporal/lookup join ON clauses support "
-                            "equi conditions only — a TUMBLE window "
-                            "equality belongs to a regular stream-"
-                            "stream join (window join)"
-                        )
-                    if not two_way:
-                        raise ValueError(
-                            "window joins (TUMBLE(..) = TUMBLE(..)) are "
-                            "supported on two-way joins only — stage a "
-                            "chain through a STATEMENT SET"
-                        )
-                    if int(wm.group("ln")) == 0 or int(wm.group("rn")) == 0:
-                        raise ValueError(
-                            "the window join's TUMBLE interval must be "
-                            "positive"
-                        )
-                    if join_window is not None:
-                        raise ValueError(
-                            "at most one TUMBLE window equality per "
-                            "join"
-                        )
-                    if (wm.group("ln"), wm.group("lu").lower()) != (
-                        wm.group("rn"), wm.group("ru").lower()
-                    ):
-                        raise ValueError(
-                            "both sides of a window join must use the "
-                            "SAME tumbling interval (Flink's window "
-                            "join requires equal window specs)"
-                        )
-                    lq, rq = wm.group("lq"), wm.group("rq")
-                    if {lq, rq} != {aliases[0], bal}:
-                        raise ValueError(
-                            f"window-join condition {cond.strip()!r} "
-                            f"must reference both table aliases "
-                            f"{aliases[0]!r} and {bal!r}"
-                        )
-                    dur = (
-                        f"{wm.group('ln')} {wm.group('lu').lower()}s"
-                    )
-                    if lq == aliases[0]:
-                        join_window = (
-                            (lq, wm.group("lc")), (rq, wm.group("rc")),
-                            dur,
-                        )
-                    else:
-                        join_window = (
-                            (rq, wm.group("rc")), (lq, wm.group("lc")),
-                            dur,
-                        )
-                    # the derived bucket columns are ordinary equi keys
-                    on.append((aliases[0], _W_START, _W_START))
-                    on.append((aliases[0], _W_END, _W_END))
-                    continue
-                cm = _JOIN_COND.match(cond.strip())
-                if not cm:
-                    # a non-equi conjunct is a row-local PAIR predicate —
-                    # Flink's interval-join bounds (a.ts BETWEEN b.ts -
-                    # x AND b.ts + y) and the like.  It is applied as a
-                    # filter on the stage's OUTPUT delta, which is exact
-                    # for INNER stages (σ_p commutes with the delta
-                    # algebra); outer stages refuse it below.
-                    # identifier-shaped refs only: a decimal literal's
-                    # "1." must not read as an alias, and literals stay
-                    # out of the scan entirely
-                    bad = [
-                        q
-                        for seg_i, seg in enumerate(
-                            re.split(r"('(?:[^']|'')*')", cond)
-                        )
-                        if seg_i % 2 == 0
-                        for q in re.findall(
-                            r"\b([A-Za-z_]\w*)\s*\.\s*[A-Za-z_]", seg
-                        )
-                        if q not in aliases and q != bal
-                    ]
-                    if bad:
-                        raise ValueError(
-                            f"join condition {cond.strip()!r} references "
-                            f"unknown alias(es) {sorted(set(bad))}; known: "
-                            f"{aliases + [bal]}"
-                        )
-                    extra.append(cond.strip())
-                    continue
-                lq, lc, rq, rc = cm.group("lq", "lc", "rq", "rc")
-                if two_way and {lq, rq} != {aliases[0], bal}:
-                    raise ValueError(
-                        f"join condition {cond.strip()!r} must reference "
-                        f"both table aliases {aliases[0]!r} and {bal!r}"
-                    )
-                if rq == bal and lq in aliases:
-                    on.append((lq, lc, rc))
-                elif lq == bal and rq in aliases:
-                    on.append((rq, rc, lc))
-                else:
-                    raise ValueError(
-                        f"join condition {cond.strip()!r} must reference "
-                        f"the newly-joined alias {bal!r} and one earlier "
-                        f"alias (of {aliases}) — a left-deep chain joins "
-                        "each table against the tables before it"
-                    )
-            if not [
-                o for o in on if o[1] not in (_W_START, _W_END)
-            ]:
-                raise ValueError(
-                    f"the JOIN on {bal!r} needs at least one equi-join "
-                    "condition <a>.<col> = <b>.<col> (the maintained "
-                    "join's key); time bounds, TUMBLE window equalities "
-                    "and other pair predicates ride alongside it as ON "
-                    "conjuncts"
-                )
-            if extra and how != "inner":
-                raise ValueError(
-                    "non-equi ON conjuncts are supported on INNER joins "
-                    "only: on an OUTER join the ON clause decides the "
-                    "null pad (different semantics from a post-join "
-                    "filter) — move the predicate to a WHERE over the "
-                    "sink, or use an inner join"
-                )
-            aliases.append(bal)
-            tables.append(tb)
-            stages.append({"alias": bal, "how": how, "on": on,
-                           "extra": extra})
-        items = []
-        for raw in _split_select_items(jm.group("items")):
-            expr, alias = _split_alias(raw)
-            jwf = _JOIN_WINFIELD.match(expr)
-            if jwf:
-                dur = f"{jwf.group('n')} {jwf.group('unit').lower()}s"
-                q, c = jwf.group("q"), jwf.group("c")
-                if join_window is None or dur != join_window[2] or (
-                    (q, c) not in (join_window[0], join_window[1])
+        lo, hi = right.span()
+        cut = [a[1:] for a in as_of if lo <= a[0] <= hi]
+        kind = "lookup" if travel else "temporal" if cut else None
+        if kind and (temporal or lookup_alias or raw_stages):
+            raise ValueError(
+                "a lookup join (FOR SYSTEM_TIME AS OF PROCTIME()) is "
+                "supported as the only join of the statement — enrich "
+                "first, then feed the sink to further statements "
+                "(STATEMENT SET)" if travel else
+                "a temporal join (FOR SYSTEM_TIME AS OF) is supported as "
+                "the only join of the statement — enrich first, then feed "
+                "the sink to further statements (STATEMENT SET) for more "
+                "joins"
+            )
+        if kind and how not in ("inner", "left"):
+            raise ValueError(
+                f"{kind} joins support INNER and LEFT only, got "
+                f"{how.upper()} (Flink's "
+                + ("lookup join" if travel else "FOR SYSTEM_TIME AS OF")
+                + " supports the same two)"
+            )
+        if not kind and (temporal or lookup_alias):
+            raise ValueError(
+                "a temporal/lookup join (FOR SYSTEM_TIME AS OF) is "
+                "supported as the only join of the statement — enrich "
+                "first, then feed the sink to further statements "
+                "(STATEMENT SET) for more joins"
+            )
+        if travel:
+            lookup_alias, rel = right.j.alias(), rel.sub("relation")
+        elif rel.name != "UnresolvedRelation":
+            raise ValueError(_SHAPES_MSG)
+        temporal = temporal or (cut[0] if cut else None)
+        raw_stages.append((how, _rel_name(rel.j), right.j.alias(), cond))
+    if len(as_of) != (temporal is not None):
+        raise ValueError(_SHAPES_MSG)  # an AS OF <alias>.<col> off a JOIN
+    two_way = len(raw_stages) == 1
+    stages, join_window = [], None
+    for how, tb, bal, conds in raw_stages:
+        if bal in aliases:
+            raise ValueError(f"duplicate table alias {bal!r}")
+        on, extra = [], []
+        for c in _conjuncts(conds):
+            cond = c.ptext()
+            sides = c.kids() if c.name == "EqualTo" else []
+            wins = [_window_call(s, qualified=True) for s in sides]
+            if sides and all(
+                w is not None and w[0] == "tumble" and w[1] is None
+                for w in wins
+            ):
+                # TUMBLE-bucket equality — Flink's window join
+                (lq, lc), ldur = wins[0][2]
+                (rq, rc), rdur = wins[1][2]
+                for bad, msg in (
+                    (temporal or lookup_alias,
+                     "temporal/lookup join ON clauses support equi "
+                     "conditions only — a TUMBLE window equality belongs "
+                     "to a regular stream-stream join (window join)"),
+                    (not two_way,
+                     "window joins (TUMBLE(..) = TUMBLE(..)) are supported "
+                     "on two-way joins only — stage a chain through a "
+                     "STATEMENT SET"),
+                    (0 in (int(ldur.split()[0]), int(rdur.split()[0])),
+                     "the window join's TUMBLE interval must be positive"),
+                    (join_window is not None,
+                     "at most one TUMBLE window equality per join"),
+                    (ldur != rdur,
+                     "both sides of a window join must use the SAME "
+                     "tumbling interval (Flink's window join requires "
+                     "equal window specs)"),
+                    ({lq, rq} != {aliases[0], bal},
+                     f"window-join condition {cond!r} must reference both "
+                     f"table aliases {aliases[0]!r} and {bal!r}"),
                 ):
-                    raise ValueError(
-                        f"{expr!r} does not match the ON clause's "
-                        "TUMBLE window equality (same side time column "
-                        "and interval required)"
-                    )
-                which = jwf.group("which").upper()
-                src_c = _W_START if which == "START" else _W_END
-                items.append(
-                    (f"{q}.{src_c}", alias or f"w_{which.lower()}")
+                    if bad:
+                        raise ValueError(msg)
+                join_window = (
+                    ((lq, lc), (rq, rc), ldur) if lq == aliases[0]
+                    else ((rq, rc), (lq, lc), ldur)
                 )
+                # the derived bucket columns are ordinary equi keys
+                on += [(aliases[0], _W_START, _W_START),
+                       (aliases[0], _W_END, _W_END)]
                 continue
-            qm = _QUAL_ITEM.match(expr)
-            if not qm or qm.group("q") not in aliases:
-                hint = (
-                    f"({aliases[0]}.<col> / {aliases[1]}.<col>)"
-                    if two_way
-                    else f"(<alias>.<col> with alias in {aliases})"
-                )
+            refs = [s.qcol() for s in sides]
+            if not sides or None in refs or c.span() != c.wrapped():
+                # a non-equi conjunct is a row-local PAIR predicate —
+                # Flink's interval-join bounds (a.ts BETWEEN b.ts - x AND
+                # b.ts + y) and the like — applied as a filter on the
+                # stage's OUTPUT delta: exact for INNER stages (σ_p
+                # commutes with the delta algebra); outer stages refuse
+                bad = [n.qcol()[0] for n in c.walk() if n.qcol() and (
+                    n.qcol()[0] not in aliases + [bal])]
+                if bad:
+                    raise ValueError(
+                        f"join condition {cond!r} references unknown "
+                        f"alias(es) {sorted(set(bad))}; known: "
+                        f"{aliases + [bal]}"
+                    )
+                extra.append(cond)
+                continue
+            (lq, lc), (rq, rc) = refs
+            if two_way and {lq, rq} != {aliases[0], bal}:
                 raise ValueError(
-                    f"join select items must be alias-qualified columns "
-                    f"{hint}, got {raw!r}"
+                    f"join condition {cond!r} must reference both table "
+                    f"aliases {aliases[0]!r} and {bal!r}"
                 )
-            items.append(
-                (f"{qm.group('q')}.{qm.group('c')}", alias or qm.group("c"))
-            )
-        if temporal is not None:
-            st = stages[0]
-            pq, pc = temporal
-            if pq != aliases[0]:
+            if rq == bal and lq in aliases:
+                on.append((lq, lc, rc))
+            elif lq == bal and rq in aliases:
+                on.append((rq, rc, lc))
+            else:
                 raise ValueError(
-                    f"FOR SYSTEM_TIME AS OF {pq}.{pc} must reference the "
-                    f"probe (first) table's alias {aliases[0]!r} — the "
-                    "AS OF time is the probe row's event time"
+                    f"join condition {cond!r} must reference the newly-"
+                    f"joined alias {bal!r} and one earlier alias (of "
+                    f"{aliases}) — a left-deep chain joins each table "
+                    "against the tables before it"
                 )
-            if st["extra"]:
+        if all(o[1] in (_W_START, _W_END) for o in on):
+            raise ValueError(
+                f"the JOIN on {bal!r} needs at least one equi-join "
+                "condition <a>.<col> = <b>.<col> (the maintained join's "
+                "key); time bounds, TUMBLE window equalities and other "
+                "pair predicates ride alongside it as ON conjuncts"
+            )
+        if extra and how != "inner":
+            raise ValueError(
+                "non-equi ON conjuncts are supported on INNER joins only: "
+                "on an OUTER join the ON clause decides the null pad "
+                "(different semantics from a post-join filter) — move the "
+                "predicate to a WHERE over the sink, or use an inner join"
+            )
+        aliases.append(bal)
+        tables.append(tb)
+        stages.append({"alias": bal, "how": how, "on": on, "extra": extra})
+    out = []
+    for it in items:
+        expr, alias = _item(it)
+        wc = _window_call(expr, qualified=True)
+        if wc is not None and wc[0] == "tumble" and wc[1] is not None:
+            (q, c), dur = wc[2]
+            if join_window is None or dur != join_window[2] or (
+                (q, c) not in join_window[:2]
+            ):
                 raise ValueError(
-                    f"temporal join ON clauses support equi conditions "
-                    f"only, got {st['extra']}; filter the enriched sink "
-                    "downstream instead"
+                    f"{expr.ptext()!r} does not match the ON clause's "
+                    "TUMBLE window equality (same side time column and "
+                    "interval required)"
                 )
-            return InsertSelect(
-                sink=sink, shape="temporal", sources=tables,
-                join_how=st["how"], join_aliases=tuple(aliases),
-                join_on=[(lc, rc) for _, lc, rc in st["on"]],
-                select=items, temporal=(pq, pc, st["alias"]),
+            src = _W_START if wc[1] == "START" else _W_END
+            out.append((f"{q}.{src}", alias or f"w_{wc[1].lower()}"))
+            continue
+        qc = expr.qcol()
+        if qc is None or qc[0] not in aliases:
+            hint = (
+                f"({aliases[0]}.<col> / {aliases[1]}.<col>)" if two_way
+                else f"(<alias>.<col> with alias in {aliases})"
             )
-        if lookup_alias is not None:
-            st = stages[0]
-            if st["extra"]:
-                raise ValueError(
-                    f"lookup join ON clauses support equi conditions "
-                    f"only, got {st['extra']}; filter the enriched sink "
-                    "downstream instead"
-                )
-            return InsertSelect(
-                sink=sink, shape="lookup", sources=tables,
-                join_how=st["how"], join_aliases=tuple(aliases),
-                join_on=[(lc, rc) for _, lc, rc in st["on"]],
-                select=items, lookup=st["alias"],
+            raise ValueError(
+                f"join select items must be alias-qualified columns {hint}, "
+                f"got {it.item_text()!r}"
             )
-        if two_way:
-            st = stages[0]
-            return InsertSelect(
-                sink=sink, shape="join", sources=tables,
-                join_how=st["how"], join_aliases=tuple(aliases),
-                join_on=[(lc, rc) for _, lc, rc in st["on"]], select=items,
-                join_extra=st["extra"], join_window=join_window,
-            )
+        out.append((f"{qc[0]}.{qc[1]}", alias or qc[1]))
+    st = stages[0]
+    if temporal is not None and temporal[0] != aliases[0]:
+        raise ValueError(
+            f"FOR SYSTEM_TIME AS OF {temporal[0]}.{temporal[1]} must "
+            f"reference the probe (first) table's alias {aliases[0]!r} — "
+            "the AS OF time is the probe row's event time"
+        )
+    kind = "temporal" if temporal else "lookup" if lookup_alias else None
+    if kind and st["extra"]:
+        raise ValueError(
+            f"{kind} join ON clauses support equi conditions only, got "
+            f"{st['extra']}; filter the enriched sink downstream instead"
+        )
+    if not two_way:
         return InsertSelect(
             sink=sink, shape="join", sources=tables,
-            join_aliases=tuple(aliases), join_chain=stages, select=items,
+            join_aliases=tuple(aliases), join_chain=stages, select=out,
         )
+    return InsertSelect(
+        sink=sink, shape=kind or "join", sources=tables, join_how=st["how"],
+        join_aliases=tuple(aliases), select=out,
+        join_on=[(lc, rc) for _, lc, rc in st["on"]],
+        **(
+            {"temporal": (*temporal, st["alias"])} if temporal
+            else {"lookup": st["alias"]} if lookup_alias
+            else {"join_extra": st["extra"], "join_window": join_window}
+        ),
+    )
 
-    mm = _MATCH_RE.match(select)
-    if mm:
-        from flink_cdc_2_3_0_src_spark.operators.maintain import (
-            parse_match_pattern_alts,
-        )
 
-        branches, excluded = parse_match_pattern_alts(
-            mm.group("pattern")
-        )
-        pat_vars = []
-        for br in branches:
-            for v, _mn, _mx, _g in br:
-                if v not in pat_vars:
-                    pat_vars.append(v)
-        sk_words = mm.group("skip").upper().split()
-        if sk_words[0] == "PAST":
-            skip_opt = "past_last"
-        elif sk_words[:2] == ["TO", "NEXT"]:
-            skip_opt = "to_next"
-        else:  # TO FIRST <var> | TO LAST <var>  (r12)
-            skip_opt = (
-                ("to_first " if sk_words[1] == "FIRST" else "to_last ")
-                + sk_words[2]
+def _group_by(q: _Node) -> tuple:
+    """(group columns, grouping sets, (window kind, spec) or None) of an
+    Aggregate's GROUP BY."""
+    exprs = q.subs("groupingExpressions")
+    head = exprs[0].name if len(exprs) == 1 else None
+    if head in ("Rollup", "Cube"):
+        # ROLLUP/CUBE are GROUPING SETS sugar (the SQL standard's and
+        # Flink's expansion): ROLLUP(a, b) = ((a,b),(a),()), CUBE(a, b)
+        # = every subset — one plan path and one GROUPING_ID discipline
+        cols = _names_of(exprs[0].kids(), head.upper())
+        if head == "Cube" and len(cols) > 6:
+            raise ValueError(
+                f"CUBE over more than 6 columns expands to {2 ** len(cols)} "
+                "grouping sets — write the GROUPING SETS you actually need"
             )
-        all_rows = (mm.group("rpm") or "ONE").upper().startswith("ALL")
-        defines = _parse_match_defines(mm.group("defines"), pat_vars)
-        partition = _names(mm.group("partition"), "PARTITION BY")
-        within = f"{mm.group('wn')} {mm.group('wu').lower()}s"
-        order = mm.group("order").strip('`"')
-        src = mm.group("src").strip('`"')
-        raw_measures = _split_select_items(mm.group("measures"))
-        # FIRST/LAST/SUM/... measure forms need the NFA's per-match
-        # aggregate frame; plain A.x/B.x row measures on PATTERN (A B)
-        # + SKIP TO NEXT ROW ride the pure-JVM LEAD plan (which also
-        # allows cross-variable DEFINEs — the pair is in scope there)
-        uses_agg_measures = any(
-            _NFA_MEASURE_AGG.search(raw) for raw in raw_measures
-        )
-        # PREV navigation is the NFA plan's (it precomputes LAG
-        # columns); the LEAD-frame plan has no physical-row axis
-        uses_prev = any(
-            re.search(r"(?i)\bPREV\s*\(", d) for d in defines.values()
-        )
-        two_step = (
-            skip_opt == "to_next"
-            and not all_rows
-            and branches == [[("A", 1, 1, True), ("B", 1, 1, True)]]
-            and set(defines) == {"A", "B"}
-            and not uses_agg_measures
-            and not uses_prev
-            and not excluded
-        )
-        measures = []
-        for raw in raw_measures:
-            expr, alias = _split_alias(raw)
-            if alias is None:
+        sets = [cols[:i] for i in range(len(cols), -1, -1)] if (
+            head == "Rollup"
+        ) else [
+            [c for j, c in enumerate(cols) if mask & (1 << j)]
+            for mask in range((1 << len(cols)) - 1, -1, -1)
+        ]
+    elif head == "GroupingSets":
+        # GROUP BY GROUPING SETS ((a, b), (a), ()): each set compiles to
+        # its own maintenance plan, deltas tagged with GROUPING_ID
+        sets = [
+            _names_of([_Node(x, q.sql) for x in _seq(s)], "GROUPING SETS")
+            for s in _seq(exprs[0].j.groupingSets())
+        ]
+    else:
+        sets = None
+    if sets is not None:  # the group columns are the sets' ordered union
+        return list(dict.fromkeys(c for s in sets for c in s)), sets, None
+    groups, window = [], None
+    for part in exprs:
+        if part.fn() in ("rollup", "cube"):  # ROLLUP () / CUBE ()
+            raise ValueError(f"{part.fn().upper()} needs at least one column")
+        wc = _window_call(part)
+        if wc is not None and wc[1] is None:
+            if window is not None:
                 raise ValueError(
-                    f"MEASURES item {raw!r} needs AS <name>"
+                    "at most one TUMBLE/HOP/"
+                    + ("CUMULATE/" if wc[0] == "cumulate" else "")
+                    + "SESSION window per GROUP BY"
                 )
-            if alias in partition:
+            window = (wc[0], wc[2])
+            # window start+end are both group columns (carrying both
+            # keeps the delta frame self-describing); SESSION windows
+            # are not row-local — the session plan itself produces them
+            if wc[0] != "session":
+                groups.extend([_W_START, _W_END])
+        elif part.col() is None:
+            # a ROLLUP/CUBE node's origin is the whole GROUP BY clause
+            raw = part.ptext()
+            if part.name in ("Rollup", "Cube"):
+                cols = ", ".join(k.text() for k in part.kids())
+                raw = f"{part.name.upper()}({cols})"
+            raise ValueError(
+                "GROUP BY items must be plain column names or "
+                f"TUMBLE/HOP/SESSION(ts, INTERVAL ..), got {raw!r}"
+            )
+        else:
+            groups.append(part.col())
+    return groups, [], window
+
+
+def _source(child: _Node, grouped: bool) -> tuple:
+    """(source tables, WHERE text, UNION ALL branches) under an
+    aggregate: one table, or — for a grouped aggregate — a
+    parenthesized UNION ALL of single-table branches.  The union is
+    exact by linearity (a union's signed multiset is the sum of its
+    branches'), so each branch is projected row-locally, stacked and
+    fed to one aggregate plan, as Flink compiles the same statement."""
+    rel, where = _strip_filter(child)
+    if rel.name == "UnresolvedRelation":
+        return [_rel_name(rel.j)], where, []
+    body = rel.sub("child") if rel.name == "SubqueryAlias" else rel
+    if body.name == "Distinct" and body.sub("child").name == "Union":
+        raise ValueError(
+            "only UNION ALL is supported over changelogs (plain UNION's "
+            "dedup is a stateful operator of its own — aggregate with "
+            "COUNT/GROUP BY instead)"
+        )
+    if rel.name != "SubqueryAlias" or body.name != "Union":
+        raise ValueError(_SHAPES_MSG)
+    if not grouped:
+        raise ValueError(_UNION_AGG_MSG)
+    flat, todo = [], [body]
+    while todo:
+        n = todo.pop(0)
+        if n.name == "Union":
+            todo[:0] = n.kids()
+        else:
+            flat.append(n)
+    sources, names, parsed = _branches(
+        flat, "UNION ALL", " (it defines the union's output columns)"
+    )
+    for src, exprs, _w in parsed:
+        if len(exprs) != len(names):
+            raise ValueError(
+                f"UNION ALL branch over {src!r} selects {len(exprs)} "
+                f"column(s) but the first branch selects {len(names)} — "
+                "branches align positionally"
+            )
+    return sources, where, [
+        (list(zip(exprs, names)), w) for _, exprs, w in parsed
+    ]
+
+
+def _branches(nodes: list, what: str, hint: str = "") -> tuple:
+    """Set-operation branches, each ``SELECT <exprs> FROM <table> [WHERE
+    p]`` → (sources, the first branch's output names, [(source, expr
+    texts, where)]); columns align positionally (SQL's rule)."""
+    names, parsed = [], []
+    for bi, node in enumerate(nodes):
+        rel, where = (
+            _strip_filter(node.sub("child")) if node.name == "Project"
+            else (node, None)
+        )
+        if node.name != "Project" or rel.name != "UnresolvedRelation":
+            raise ValueError(
+                f"cannot parse {what} branch {node.text()[:80]!r}: "
+                "expected SELECT <exprs> FROM <table> [WHERE <pred>]"
+                + (" (one source table per branch)" if hint else "")
+            )
+        exprs = []
+        for it in node.subs("projectList"):
+            expr, alias = _item(it)
+            if bi == 0 and (alias or expr.col()) is None:
                 raise ValueError(
-                    f"measure name {alias!r} collides with a PARTITION "
-                    "BY column"
+                    f"first {what} branch item {it.item_text()!r} needs a "
+                    f"name: a plain column or <expr> AS <alias>{hint}"
                 )
-            # SQL:2016 RUNNING/FINAL semantics prefix (r13): whole-
-            # measure only.  With ONE ROW PER MATCH the evaluation
-            # point is after the last row, where RUNNING and FINAL
-            # coincide (SQL:2016) — both prefixes reduce to the
-            # final rewrite.  Under ALL ROWS PER MATCH this engine's
-            # DEFAULT is FINAL (a documented deviation from the
-            # standard's running default, pinned by the r12 all-rows
-            # oracle row); RUNNING opts into per-row cumulation.
-            sem = "final"
-            pm = re.match(r"(?is)^\s*(RUNNING|FINAL)\b(.*)$", expr)
-            if pm:
-                sem = pm.group(1).lower()
-                expr = pm.group(2).strip()
-            if re.search(r"(?i)\b(?:RUNNING|FINAL)\b", expr):
+            names += [alias or expr.col()] if bi == 0 else []
+            exprs.append(expr.ptext())
+        parsed.append((_rel_name(rel.j), exprs, where))
+    return [src for src, _, _ in parsed], names, parsed
+
+
+def _parse_agg(sink: str, q: _Node, items: list, having) -> InsertSelect:
+    """Grouped aggregates (plain, DISTINCT, windowed, GROUPING SETS,
+    HAVING, UNION ALL input) and the GLOBAL aggregate (no GROUP BY:
+    ``group_cols`` stays [] and every select item must aggregate)."""
+    grouped = q.name == "Aggregate" and q.j.groupingExpressions().nonEmpty()
+    sources, where, branches = _source(q.sub("child"), grouped)
+    groups, grouping_sets, window = (
+        _group_by(q) if q.name == "Aggregate" else ([], [], None)
+    )
+    kind, spec = window or (None, None)
+    out, aggs, idx = [], {}, [0]
+    for it in items:
+        expr, alias = _item(it)
+        fn, wc = expr.fn(), _window_call(expr)
+        if fn in _AGG_FNS and not expr.j.filter().isDefined():
+            args = expr.call_args()
+            alias = _agg_alias(fn, args, alias, aggs, idx)
+            aggs[alias] = (fn, args)
+            out.append((None, alias))
+        elif wc is not None and wc[1] is not None:
+            src = _window_field(
+                wc, spec if wc[0] == kind else None, wc[0], "GROUP BY's", expr
+            )
+            out.append((src, alias or f"w_{wc[1].lower()}"))
+        elif fn == "grouping_id" and not expr.kids():
+            if not grouping_sets:
                 raise ValueError(
-                    f"measure {alias!r}: RUNNING/FINAL must prefix "
-                    "the WHOLE measure expression (per-call "
-                    "semantics modifiers are not supported)"
+                    "GROUPING_ID() is only valid with GROUP BY GROUPING SETS"
                 )
-            if two_step:
-                _refuse_unqualified_match_refs(expr, f"measure {alias!r}")
-                measures.append(
-                    (
-                        _rewrite_match_refs(expr, f"measure {alias!r}"),
-                        alias,
+            out.append(("__gid", alias or "grouping_id"))
+        elif expr.col() is None or expr.col() not in groups:
+            raise ValueError(
+                f"aggregate select item {it.item_text()!r} is neither a "
+                "GROUP BY column, TUMBLE/HOP/SESSION_START/END of the "
+                "window, nor FN(expr) with FN in SUM/COUNT/AVG/MIN/MAX"
+            )
+        else:
+            out.append((expr.col(), alias or expr.col()))
+    selected = {s for s, _ in out if s is not None}
+    missing = [g for g in groups
+               if g not in selected and g not in (_W_START, _W_END)]
+    if missing:
+        raise ValueError(
+            "SELECT must project every GROUP BY column (the upsert sink's "
+            f"key — Flink requires the same); missing {missing}"
+        )
+    if window is not None and not selected & {_W_START, _W_END}:
+        raise ValueError(
+            "a windowed aggregate must project TUMBLE/HOP/CUMULATE/"
+            "SESSION_START and/or _END (the window is the sink's key)"
+        )
+    if not aggs:
+        raise ValueError("no aggregate function in the SELECT list")
+    if len(grouping_sets) > 1 and "__gid" not in selected:
+        raise ValueError(
+            "a GROUPING SETS query with more than one set must project "
+            "GROUPING_ID() — without it, subtotal rows collide with detail "
+            "rows whose group values are NULL in a keyed sink"
+        )
+    return InsertSelect(
+        sink=sink, shape="agg", sources=sources, group_cols=groups,
+        aggs=aggs, where=where, select=out, grouping_sets=grouping_sets,
+        having=having and _rewrite_having(having.ptext(), aggs, having),
+        union_branches=branches, **({kind: spec} if kind else {}),
+    )
+
+
+def _parse_over(sink: str, items: list, child: _Node):
+    """The OVER-aggregation shape (Flink's StreamExecOverAggregate:
+    ``FN(x) OVER (PARTITION BY k ORDER BY ts [ROWS|RANGE BETWEEN n
+    PRECEDING AND CURRENT ROW])``).  None when no item is such an OVER
+    aggregate (the calc walker then refuses the window with guidance)."""
+    overs = [_over_item(_item(it)[0]) for it in items]
+    if not any(overs):
+        return None
+    out, aggs, idx = [], {}, [0]
+    spec = spec_src = None
+    for it, ov in zip(items, overs):
+        expr, alias = _item(it)
+        if ov is None:
+            if expr.col() is None:
+                raise ValueError(
+                    "OVER-shape select items must be plain source columns "
+                    "or FN(expr) OVER (<the shared window>), got "
+                    f"{it.item_text()!r}"
+                )
+            out.append((expr.col(), alias or expr.col()))
+            continue
+        fn, args, wspec, distinct = ov
+        order = wspec.subs("orderSpec")[0]
+        partition = _names_of(wspec.subs("partitionSpec"), "PARTITION BY")
+        if distinct:
+            raise ValueError(
+                f"{fn.upper()}(DISTINCT ..) OVER is not supported: a "
+                "distinct frame aggregate needs per-frame distinct views — "
+                "pre-aggregate with GROUP BY FN(DISTINCT ..) instead"
+            )
+        if order.j.direction().toString() == "Descending":
+            raise ValueError(
+                "OVER aggregation requires the ORDER BY to be an ASCENDING "
+                "time attribute (Flink's StreamExecOverAggregate requires "
+                "the same — frames grow forward in event time)"
+            )
+        rows_n = range_s = None
+        frame = wspec.sub("frameSpecification")
+        unspecified = frame.name == "UnspecifiedFrame"
+        lower = None if unspecified else frame.sub("lower")
+        if lower is not None and lower.name != "UnboundedPreceding":
+            bound = lower.kids()[0]  # UNBOUNDED is the accumulator form
+            if frame.j.frameType().toString() == "RowFrame":
+                if not bound.text().isdigit():
+                    raise ValueError(
+                        "ROWS frame bound must be an integer or UNBOUNDED, "
+                        f"got {bound.text()!r}"
                     )
-                )
-            elif sem == "running" and all_rows:
-                measures.append(
-                    (
-                        _rewrite_nfa_measure(
-                            expr, pat_vars, f"measure {alias!r}",
-                            running=True, order=order,
-                        ),
-                        alias,
-                        "running",
-                    )
-                )
+                rows_n = int(bound.text())
             else:
-                measures.append(
-                    (
-                        _rewrite_nfa_measure(
-                            expr, pat_vars, f"measure {alias!r}",
-                            order=order,
-                        ),
-                        alias,
+                range_s = _interval(bound)
+                if range_s is None:
+                    raise ValueError(
+                        "RANGE frame bound must be INTERVAL '<n>' <unit> or "
+                        f"UNBOUNDED, got {bound.text()!r}"
                     )
-                )
-        out_names = list(partition) + [m[1] for m in measures]
-        items = []
-        for raw in _split_select_items(mm.group("items")):
-            expr, alias = _split_alias(raw)
-            im = _IDENT.match(expr)
-            # ALL ROWS PER MATCH (r12) additionally exposes every
-            # SOURCE column — those resolve at plan time, so only the
-            # identifier shape is checked here
-            if not im or (not all_rows and im.group("name") not in out_names):
-                raise ValueError(
-                    f"MATCH_RECOGNIZE select items must be PARTITION BY "
-                    f"columns or measure names ({out_names})"
-                    + (" or source columns" if all_rows else "")
-                    + f", got {raw!r}"
-                )
-            items.append((im.group("name"), alias or im.group("name")))
-        if two_step:
-            # PATTERN (A B) + SKIP TO NEXT ROW: the LEAD-window plan —
-            # pure JVM, and its DEFINE B may reference the A row (the
-            # pair is in scope)
-            _refuse_unqualified_match_refs(defines["A"], "DEFINE A")
-            _refuse_unqualified_match_refs(defines["B"], "DEFINE B")
-            return InsertSelect(
-                sink=sink, shape="match", sources=[src], select=items,
-                match={
-                    "partition": partition, "order": order,
-                    "within": within,
-                    "define_a": _rewrite_match_refs(
-                        defines["A"], "DEFINE A"
-                    ),
-                    "define_b": _rewrite_match_refs(
-                        defines["B"], "DEFINE B"
-                    ),
-                    "measures": measures,
-                },
+        this_spec = (tuple(partition), order.kids()[0].col(), rows_n, range_s)
+        if spec is None:
+            spec, spec_src = this_spec, expr.ptext()
+        elif spec != this_spec:
+            raise ValueError(
+                "all OVER windows of one SELECT must be identical (Flink's "
+                "StreamExecOverAggregate compiles ONE over window per "
+                f"query): {expr.ptext()!r} differs from {spec_src!r} — "
+                "split differing windows into separate statements"
             )
-        # general pattern → the per-key NFA plan: defines evaluate
-        # against the row being classified only
-        nfa_defines = {
-            v: _rewrite_nfa_define(d, v, pat_vars)
-            for v, d in defines.items()
-        }
-        return InsertSelect(
-            sink=sink, shape="match_nfa", sources=[src], select=items,
-            match_nfa={
-                "partition": partition, "order": order,
-                # the ORIGINAL pattern text: the plan re-parses the
-                # full grammar (alternation / PERMUTE / {- -}), so
-                # exclusions need no side channel
-                "within": within, "pattern": mm.group("pattern"),
-                "defines": nfa_defines, "measures": measures,
-                "skip": skip_opt,
-                "rows_per_match": "all" if all_rows else "one",
-            },
-        )
+        alias = _agg_alias(fn, args, alias, aggs, idx)
+        aggs[alias] = (fn, args)
+        out.append((None, alias))
+    rel, where = _strip_filter(child)
+    return InsertSelect(
+        sink=sink, shape="over", sources=[_rel_name(rel.j)], aggs=aggs,
+        where=where, select=out,
+        over={"partition": list(spec[0]), "order": spec[1],
+              "rows": spec[2], "range": spec[3]},
+    )
 
-    if re.search(r"(?i)\bMATCH_RECOGNIZE\b", select):
+
+def _over_item(expr: _Node):
+    """(fn, args text, window spec, is DISTINCT) when ``expr`` is
+    ``FN(x) OVER (PARTITION BY .. ORDER BY <col> [ASC|DESC] [ROWS|RANGE
+    BETWEEN .. PRECEDING AND CURRENT ROW])`` with FN in
+    SUM/COUNT/AVG/MIN/MAX/LAG; else None."""
+    if expr.name != "WindowExpression":
+        return None
+    fn, wspec = expr.sub("windowFunction"), expr.sub("windowSpec")
+    orders = wspec.subs("orderSpec")
+    if (
+        fn.fn() not in _AGG_FNS + ("lag",) or not wspec.subs("partitionSpec")
+        or len(orders) != 1 or orders[0].kids()[0].col() is None
+    ):
+        return None
+    frame = wspec.sub("frameSpecification")
+    if frame.name == "SpecifiedWindowFrame":
+        lower = frame.sub("lower")
+        if frame.sub("upper").name != "CurrentRow" or not (
+            lower.name == "UnboundedPreceding" or lower.name == "UnaryMinus"
+            and lower.kids()[0].name == "Literal"
+        ):
+            return None
+    elif frame.name != "UnspecifiedFrame":
+        return None
+    return fn.fn(), fn.call_args(), wspec, fn.j.isDistinct()
+
+
+def _parse_calc(sink: str, items: list, child: _Node) -> InsertSelect:
+    """Row-local calc: ``SELECT <exprs> FROM t [WHERE p]`` with no GROUP
+    BY and no aggregate call — Flink's StreamExecCalc.  σ and projection
+    are linear over signed multisets, so the plan is stateless."""
+    out = []
+    for it in items:
+        expr, alias = _item(it)
+        raw = it.item_text()
+        if expr.has(lambda n: n.name == "WindowExpression"):
+            raise ValueError(
+                f"cannot parse the OVER clause in {raw!r}; the maintained "
+                "OVER subset is FN(x) OVER (PARTITION BY k ORDER BY ts "
+                "[ROWS|RANGE BETWEEN n PRECEDING AND CURRENT ROW])"
+            )
+        if expr.has(lambda n: n.fn() in _AGG_FNS):
+            raise ValueError(
+                f"select item {raw!r} aggregates but other items are "
+                "row-local and there is no GROUP BY — aggregate every item "
+                "(a GLOBAL aggregate) or none (a row-local projection)"
+            )
+        if (alias or expr.col()) is None:
+            raise ValueError(
+                f"select item {raw!r} needs AS <name>: a plain column or "
+                "<expr> AS <alias>"
+            )
+        out.append((expr.ptext(), alias or expr.col()))
+    names = [a for _e, a in out]
+    dup = sorted({n for n in names if names.count(n) > 1})
+    if dup:
+        raise ValueError(f"duplicate output column(s) {dup}")
+    rel, where = _strip_filter(child)
+    return InsertSelect(
+        sink=sink, shape="calc", sources=[_rel_name(rel.j)], where=where,
+        calc_exprs=out, select=[(a, a) for a in names],
+    )
+
+
+def _parse_setop(sink: str, q: _Node) -> InsertSelect:
+    """``SELECT .. FROM a [WHERE ..] INTERSECT [ALL]|EXCEPT [ALL] SELECT
+    .. FROM b [WHERE ..]`` — Flink's streaming set operations (its
+    planner rewrites them to stateful count aggregates, which is the
+    maintenance plan here).  Two branches; chain more via STATEMENT
+    SET."""
+    op = q.name.upper()
+    if any(s.name in ("Intersect", "Except") for s in q.kids()):
+        raise ValueError(
+            "one set operation per statement — chain further "
+            "INTERSECT/EXCEPT steps through a STATEMENT SET"
+        )
+    sources, names, parsed = _branches(q.kids(), op)
+    if len(parsed[1][1]) != len(names):
+        raise ValueError(
+            f"{op} branches select {len(parsed[0][1])} vs "
+            f"{len(parsed[1][1])} column(s) — branches align positionally"
+        )
+    return InsertSelect(
+        sink=sink, shape="setop", sources=sources,
+        select=[(n, n) for n in names],
+        union_branches=[(list(zip(e, names)), w) for _, e, w in parsed],
+        setop={"op": op.lower(), "all": bool(q.j.isAll())},
+    )
+
+
+def _parse_match(sql: str) -> InsertSelect:
+    """The MATCH_RECOGNIZE pre-pass: Flink's CEP clause is outside
+    Spark's grammar, so it keeps its own clause parser."""
+    m = _INSERT_RE.match(sql)
+    if not m:
+        raise ValueError(_NOT_INSERT_MSG)
+    sink = m.group("sink").strip('`"')
+    select = m.group("select").strip()
+    mm = _MATCH_RE.match(select)
+    if not mm:
         # the statement clearly wants CEP but missed the grammar —
         # refuse with the supported form instead of the generic error
         raise ValueError(
@@ -1041,624 +1366,172 @@ def parse_insert_select(sql: str) -> InsertSelect:
             "INTERVAL '<n>' <unit> DEFINE <V> AS <pred>, ..)"
         )
 
-    sm_ = _parse_setop(sink, select)
-    if sm_ is not None:
-        return sm_
+    from flink_cdc_2_3_0_src_spark.operators.maintain import (
+        parse_match_pattern_alts,
+    )
 
-    um = _parse_union_agg(sink, select)
-    if um is not None:
-        return um
-
-    # clause keywords match on the literal-MASKED text; group contents
-    # slice the original by span (same length), so keywords inside
-    # string literals never split a clause
-    am = _AGG_RE.match(_mask_literals(select))
-
-    def _ag(name: str):
-        if am.span(name) == (-1, -1):
-            return None
-        return select[am.start(name):am.end(name)]
-
-    if am and _ag("groups") is None and (
-        not _HAS_AGG_FN.search(_ag("items"))
-        or re.search(r"(?i)\bOVER\s*\(", _ag("items"))
-    ):
-        # no GROUP BY and either no aggregate call (the row-local calc
-        # shape, parsed below) or a window-function call (the OVER
-        # shape's parser owns it) — not a GLOBAL aggregate
-        am = None
-    if am:
-        groups, tumble, hop, cumulate, session = [], None, None, None, None
-        grouping_sets: list = []
-        # no GROUP BY + aggregate items = the GLOBAL aggregate (r12):
-        # group_cols stays [] and every select item must aggregate
-        group_clause = (_ag("groups") or "").strip()
-        # ROLLUP/CUBE are GROUPING SETS sugar (the SQL standard's and
-        # Flink's expansion): ROLLUP(a, b) = ((a,b),(a),()),
-        # CUBE(a, b) = every subset.  Rewrite to the sets form so one
-        # plan path (and one GROUPING_ID discipline) serves all three.
-        rc = re.match(
-            r"(?is)^(?P<kind>ROLLUP|CUBE)\s*\((?P<cols>.*)\)\s*$",
-            group_clause,
+    branches, excluded = parse_match_pattern_alts(
+        mm.group("pattern")
+    )
+    pat_vars = []
+    for br in branches:
+        for v, _mn, _mx, _g in br:
+            if v not in pat_vars:
+                pat_vars.append(v)
+    sk_words = mm.group("skip").upper().split()
+    if sk_words[0] == "PAST":
+        skip_opt = "past_last"
+    elif sk_words[:2] == ["TO", "NEXT"]:
+        skip_opt = "to_next"
+    else:  # TO FIRST <var> | TO LAST <var>  (r12)
+        skip_opt = (
+            ("to_first " if sk_words[1] == "FIRST" else "to_last ")
+            + sk_words[2]
         )
-        if rc:
-            if not rc.group("cols").strip():
-                raise ValueError(
-                    f"{rc.group('kind').upper()} needs at least one "
-                    "column"
-                )
-            cols = _names(rc.group("cols"), rc.group("kind").upper())
-            if rc.group("kind").upper() == "ROLLUP":
-                sets = [cols[:i] for i in range(len(cols), -1, -1)]
-            else:
-                if len(cols) > 6:
-                    raise ValueError(
-                        "CUBE over more than 6 columns expands to "
-                        f"{2 ** len(cols)} grouping sets — write the "
-                        "GROUPING SETS you actually need"
-                    )
-                sets = [
-                    [c for j, c in enumerate(cols) if mask & (1 << j)]
-                    for mask in range((1 << len(cols)) - 1, -1, -1)
-                ]
-            group_clause = "GROUPING SETS (" + ", ".join(
-                "(" + ", ".join(s) + ")" for s in sets
-            ) + ")"
-        gs = re.match(
-            r"(?is)^GROUPING\s+SETS\s*\((?P<sets>.*)\)\s*$",
-            group_clause,
-        )
-        if gs:
-            # GROUP BY GROUPING SETS ((a, b), (a), ()) — the full group
-            # column list is the ordered union; each set compiles to
-            # its own maintenance plan, deltas tagged with GROUPING_ID
-            for part in _split_select_items(gs.group("sets")):
-                sm = re.match(
-                    r"^\(\s*(?P<cols>.*?)\s*\)$", part.strip(), re.DOTALL
-                )
-                if not sm:
-                    raise ValueError(
-                        "GROUPING SETS items must be parenthesized "
-                        f"column lists, got {part.strip()!r}"
-                    )
-                cols = (
-                    _names(sm.group("cols"), "GROUPING SETS")
-                    if sm.group("cols").strip()
-                    else []
-                )
-                grouping_sets.append(cols)
-                for c in cols:
-                    if c not in groups:
-                        groups.append(c)
-            if not grouping_sets:
-                raise ValueError("GROUPING SETS needs at least one set")
-        for part in (
-            []
-            if (gs or not group_clause)
-            else _split_select_items(group_clause)
-        ):
-            tm_ = _TUMBLE.match(part.strip())
-            if tm_:
-                if (tumble is not None or hop is not None
-                        or cumulate is not None or session is not None):
-                    raise ValueError(
-                        "at most one TUMBLE/HOP/SESSION window per GROUP BY"
-                    )
-                tumble = (
-                    tm_.group("col"),
-                    f"{tm_.group('n')} {tm_.group('unit').lower()}s",
-                )
-                # window start+end are both group columns (functionally
-                # dependent, but carrying both keeps the delta frame
-                # self-describing for TUMBLE_END projections)
-                groups.extend([_W_START, _W_END])
-                continue
-            hm_ = _HOP.match(part.strip())
-            if hm_:
-                if (tumble is not None or hop is not None
-                        or cumulate is not None or session is not None):
-                    raise ValueError(
-                        "at most one TUMBLE/HOP/SESSION window per GROUP BY"
-                    )
-                hop = (
-                    hm_.group("col"),
-                    f"{hm_.group('sn')} {hm_.group('su').lower()}s",
-                    f"{hm_.group('zn')} {hm_.group('zu').lower()}s",
-                )
-                groups.extend([_W_START, _W_END])
-                continue
-            cm_ = _CUMULATE.match(part.strip())
-            if cm_:
-                if (tumble is not None or hop is not None
-                        or cumulate is not None or session is not None):
-                    raise ValueError(
-                        "at most one TUMBLE/HOP/CUMULATE/SESSION window "
-                        "per GROUP BY"
-                    )
-                cumulate = (
-                    cm_.group("col"),
-                    f"{cm_.group('sn')} {cm_.group('su').lower()}s",
-                    f"{cm_.group('zn')} {cm_.group('zu').lower()}s",
-                )
-                groups.extend([_W_START, _W_END])
-                continue
-            sm_ = _SESSION.match(part.strip())
-            if sm_:
-                if (tumble is not None or hop is not None
-                        or cumulate is not None or session is not None):
-                    raise ValueError(
-                        "at most one TUMBLE/HOP/SESSION window per GROUP BY"
-                    )
-                session = (
-                    sm_.group("col"),
-                    f"{sm_.group('n')} {sm_.group('unit').lower()}s",
-                )
-                # session windows are NOT row-local: the window columns
-                # are produced by the maintenance plan itself, so they
-                # are not GROUP BY inputs here
-                continue
-            im = _IDENT.match(part.strip())
-            if not im:
-                raise ValueError(
-                    "GROUP BY items must be plain column names or "
-                    f"TUMBLE/HOP/SESSION(ts, INTERVAL ..), got {part.strip()!r}"
-                )
-            groups.append(im.group("name"))
-        items, aggs = [], {}
-        auto_idx = 0
-        for raw in _split_select_items(_ag("items")):
-            expr, alias = _split_alias(raw)
-            fm = _AGG_FN.match(expr)
-            if fm:
-                fn = fm.group("fn").lower()
-                args = fm.group("args").strip()
-                if alias is None:
-                    # Flink names unaliased aggregates EXPR$i; a stable
-                    # derived name is friendlier for an upsert sink
-                    base = re.sub(r"\W+", "_", args.strip("*") or "all")
-                    alias = f"{fn}_{base}".strip("_") or f"{fn}_{auto_idx}"
-                    auto_idx += 1
-                if alias in aggs:
-                    raise ValueError(f"duplicate output column {alias!r}")
-                aggs[alias] = (fn, args)
-                items.append((None, alias))
-                continue
-            wf = _TUMBLE_FIELD.match(expr)
-            if wf:
-                dur = f"{wf.group('n')} {wf.group('unit').lower()}s"
-                if tumble is None or (wf.group("col"), dur) != tumble:
-                    raise ValueError(
-                        f"{expr!r} does not match the GROUP BY's TUMBLE "
-                        "window (same time column and interval required)"
-                    )
-                which = wf.group("which").upper()
-                src = _W_START if which == "START" else _W_END
-                items.append((src, alias or f"w_{which.lower()}"))
-                continue
-            hf = _HOP_FIELD.match(expr)
-            if hf:
-                spec = (
-                    hf.group("col"),
-                    f"{hf.group('sn')} {hf.group('su').lower()}s",
-                    f"{hf.group('zn')} {hf.group('zu').lower()}s",
-                )
-                if hop is None or spec != hop:
-                    raise ValueError(
-                        f"{expr!r} does not match the GROUP BY's HOP "
-                        "window (same time column, slide and size required)"
-                    )
-                which = hf.group("which").upper()
-                src = _W_START if which == "START" else _W_END
-                items.append((src, alias or f"w_{which.lower()}"))
-                continue
-            cf = _CUMULATE_FIELD.match(expr)
-            if cf:
-                spec = (
-                    cf.group("col"),
-                    f"{cf.group('sn')} {cf.group('su').lower()}s",
-                    f"{cf.group('zn')} {cf.group('zu').lower()}s",
-                )
-                if cumulate is None or spec != cumulate:
-                    raise ValueError(
-                        f"{expr!r} does not match the GROUP BY's CUMULATE "
-                        "window (same time column, step and size required)"
-                    )
-                which = cf.group("which").upper()
-                src = _W_START if which == "START" else _W_END
-                items.append((src, alias or f"w_{which.lower()}"))
-                continue
-            sf = _SESSION_FIELD.match(expr)
-            if sf:
-                spec = (
-                    sf.group("col"),
-                    f"{sf.group('n')} {sf.group('unit').lower()}s",
-                )
-                if session is None or spec != session:
-                    raise ValueError(
-                        f"{expr!r} does not match the GROUP BY's SESSION "
-                        "window (same time column and gap required)"
-                    )
-                which = sf.group("which").upper()
-                src = _W_START if which == "START" else _W_END
-                items.append((src, alias or f"w_{which.lower()}"))
-                continue
-            gim = re.match(r"(?is)^GROUPING_ID\s*\(\s*\)$", expr)
-            if gim:
-                if not grouping_sets:
-                    raise ValueError(
-                        "GROUPING_ID() is only valid with GROUP BY "
-                        "GROUPING SETS"
-                    )
-                items.append(("__gid", alias or "grouping_id"))
-                continue
-            im = _IDENT.match(expr)
-            if not im or im.group("name") not in groups:
-                raise ValueError(
-                    f"aggregate select item {raw!r} is neither a GROUP BY "
-                    "column, TUMBLE/HOP/SESSION_START/END of the window, "
-                    "nor FN(expr) with FN in SUM/COUNT/AVG/MIN/MAX"
-                )
-            items.append((im.group("name"), alias or im.group("name")))
-        selected_groups = {s for s, _ in items if s is not None}
-        missing = [
-            g for g in groups
-            if g not in selected_groups and g not in (_W_START, _W_END)
-        ]
-        if missing:
-            raise ValueError(
-                f"SELECT must project every GROUP BY column (the upsert "
-                f"sink's key — Flink requires the same); missing {missing}"
-            )
-        if (
-            tumble is not None or hop is not None
-            or cumulate is not None or session is not None
-        ) and not (selected_groups & {_W_START, _W_END}):
-            raise ValueError(
-                "a windowed aggregate must project TUMBLE/HOP/CUMULATE/"
-                "SESSION_START and/or _END (the window is the sink's key)"
-            )
-        if not aggs:
-            raise ValueError("no aggregate function in the SELECT list")
-        if len(grouping_sets) > 1 and "__gid" not in selected_groups:
-            raise ValueError(
-                "a GROUPING SETS query with more than one set must "
-                "project GROUPING_ID() — without it, subtotal rows "
-                "collide with detail rows whose group values are NULL "
-                "in a keyed sink"
-            )
-        having = _clean(_ag("having"))
-        if having is not None:
-            having = _rewrite_having(having, aggs)
-        return InsertSelect(
-            sink=sink, shape="agg", sources=[_ag("src").strip('`"')],
-            group_cols=groups, aggs=aggs, where=_clean(_ag("where")),
-            select=items, tumble=tumble, hop=hop, cumulate=cumulate,
-            session=session, grouping_sets=grouping_sets, having=having,
-        )
-
-    ov = parse_over_select(sink, select)
-    if ov is not None:
-        return ov
-
-    # row-local calc (r12): SELECT <exprs> FROM t [WHERE p] with no
-    # GROUP BY and no aggregate call — Flink's StreamExecCalc, the
-    # plainest pipeline statement.  σ and projection are linear over
-    # signed multisets, so the plan is stateless.
-    cm = _AGG_RE.match(_mask_literals(select))
-
-    def _cg(name: str):
-        if cm.span(name) == (-1, -1):
-            return None
-        return select[cm.start(name):cm.end(name)]
-
-    if cm is not None and _cg("groups") is None:
-        if _cg("having") is not None:
-            raise ValueError("HAVING needs a GROUP BY")
-        items = []
-        for raw in _split_select_items(_cg("items")):
-            expr, alias = _split_alias(raw)
-            if re.search(r"(?i)\bOVER\s*\(", expr):
-                raise ValueError(
-                    f"cannot parse the OVER clause in {raw!r}; the "
-                    "maintained OVER subset is FN(x) OVER (PARTITION "
-                    "BY k ORDER BY ts [ROWS|RANGE BETWEEN n PRECEDING "
-                    "AND CURRENT ROW])"
-                )
-            if _HAS_AGG_FN.search(expr):
-                raise ValueError(
-                    f"select item {raw!r} aggregates but other items "
-                    "are row-local and there is no GROUP BY — "
-                    "aggregate every item (a GLOBAL aggregate) or "
-                    "none (a row-local projection)"
-                )
-            if alias is None:
-                im = _IDENT.match(expr)
-                if not im:
-                    raise ValueError(
-                        f"select item {raw!r} needs AS <name>: a plain "
-                        "column or <expr> AS <alias>"
-                    )
-                alias = im.group("name")
-            items.append((expr, alias))
-        names = [a for _e, a in items]
-        dup = sorted({n for n in names if names.count(n) > 1})
-        if dup:
-            raise ValueError(f"duplicate output column(s) {dup}")
-        return InsertSelect(
-            sink=sink, shape="calc",
-            sources=[_cg("src").strip('`"')],
-            where=_clean(_cg("where")),
-            calc_exprs=items,
-            select=[(a, a) for a in names],
-        )
-
-    raise ValueError(_SHAPES_MSG)
-
-
-def parse_over_select(sink: str, select: str) -> Optional[InsertSelect]:
-    """Parse the OVER-aggregation shape (Flink's
-    StreamExecOverAggregate, e.g. MySqlConnectorITCase-style pipelines
-    feeding ``SUM(v) OVER (PARTITION BY k ORDER BY ts ROWS BETWEEN n
-    PRECEDING AND CURRENT ROW)``).  Returns None when the SELECT has no
-    OVER item at all (the caller falls through to the generic
-    shape error)."""
-    om = _OVER_RE.match(select)
-    if om is None:
-        return None
-    raw_items = _split_select_items(om.group("items"))
-    if not any(
-        _OVER_ITEM.match(_split_alias(r)[0]) for r in raw_items
-    ):
-        return None
-    items, aggs = [], {}
-    spec = None
-    spec_src = None
-    auto_idx = 0
-    for raw in raw_items:
+    all_rows = (mm.group("rpm") or "ONE").upper().startswith("ALL")
+    defines = _parse_match_defines(mm.group("defines"), pat_vars)
+    partition = _names(mm.group("partition"), "PARTITION BY")
+    within = f"{mm.group('wn')} {mm.group('wu').lower()}s"
+    order = mm.group("order").strip('`"')
+    src = mm.group("src").strip('`"')
+    raw_measures = _split_select_items(mm.group("measures"))
+    # FIRST/LAST/SUM/... measure forms need the NFA's per-match
+    # aggregate frame; plain A.x/B.x row measures on PATTERN (A B)
+    # + SKIP TO NEXT ROW ride the pure-JVM LEAD plan (which also
+    # allows cross-variable DEFINEs — the pair is in scope there)
+    uses_agg_measures = any(
+        _NFA_MEASURE_AGG.search(raw) for raw in raw_measures
+    )
+    # PREV navigation is the NFA plan's (it precomputes LAG
+    # columns); the LEAD-frame plan has no physical-row axis
+    uses_prev = any(
+        re.search(r"(?i)\bPREV\s*\(", d) for d in defines.values()
+    )
+    two_step = (
+        skip_opt == "to_next"
+        and not all_rows
+        and branches == [[("A", 1, 1, True), ("B", 1, 1, True)]]
+        and set(defines) == {"A", "B"}
+        and not uses_agg_measures
+        and not uses_prev
+        and not excluded
+    )
+    measures = []
+    for raw in raw_measures:
         expr, alias = _split_alias(raw)
-        ovm = _OVER_ITEM.match(expr)
-        if ovm:
-            fn = ovm.group("fn").lower()
-            args = ovm.group("args").strip()
-            if re.match(r"(?is)^DISTINCT\b", args):
-                raise ValueError(
-                    f"{fn.upper()}(DISTINCT ..) OVER is not supported: "
-                    "a distinct frame aggregate needs per-frame distinct "
-                    "views — pre-aggregate with GROUP BY FN(DISTINCT ..) "
-                    "instead"
-                )
-            if ovm.group("dir") and ovm.group("dir").upper() == "DESC":
-                raise ValueError(
-                    "OVER aggregation requires the ORDER BY to be an "
-                    "ASCENDING time attribute (Flink's "
-                    "StreamExecOverAggregate requires the same — frames "
-                    "grow forward in event time)"
-                )
-            partition = _names(ovm.group("partition"), "PARTITION BY")
-            order = ovm.group("order").strip('`"')
-            rows_n, range_s = None, None
-            if ovm.group("frame") is not None:
-                pre = ovm.group("pre").strip()
-                if pre.upper() == "UNBOUNDED":
-                    pass  # UNBOUNDED PRECEDING — accumulator form
-                elif ovm.group("frame").upper() == "ROWS":
-                    if not pre.isdigit():
-                        raise ValueError(
-                            f"ROWS frame bound must be an integer or "
-                            f"UNBOUNDED, got {pre!r}"
-                        )
-                    rows_n = int(pre)
-                else:  # RANGE
-                    ivm = _OVER_INTERVAL.match(pre)
-                    if not ivm:
-                        raise ValueError(
-                            f"RANGE frame bound must be INTERVAL '<n>' "
-                            f"<unit> or UNBOUNDED, got {pre!r}"
-                        )
-                    range_s = (
-                        f"{ivm.group('n')} {ivm.group('unit').lower()}s"
-                    )
-            this_spec = (tuple(partition), order, rows_n, range_s)
-            if spec is None:
-                spec, spec_src = this_spec, expr
-            elif spec != this_spec:
-                raise ValueError(
-                    f"all OVER windows of one SELECT must be identical "
-                    f"(Flink's StreamExecOverAggregate compiles ONE over "
-                    f"window per query): {expr!r} differs from "
-                    f"{spec_src!r} — split differing windows into "
-                    "separate statements"
-                )
-            if alias is None:
-                base = re.sub(r"\W+", "_", args.strip("*") or "all")
-                alias = f"{fn}_{base}".strip("_") or f"{fn}_{auto_idx}"
-                auto_idx += 1
-            if alias in aggs:
-                raise ValueError(f"duplicate output column {alias!r}")
-            aggs[alias] = (fn, args)
-            items.append((None, alias))
-            continue
-        im = _IDENT.match(expr)
-        if not im:
+        if alias is None:
             raise ValueError(
-                f"OVER-shape select items must be plain source columns "
-                f"or FN(expr) OVER (<the shared window>), got {raw!r}"
+                f"MEASURES item {raw!r} needs AS <name>"
+            )
+        if alias in partition:
+            raise ValueError(
+                f"measure name {alias!r} collides with a PARTITION "
+                "BY column"
+            )
+        # SQL:2016 RUNNING/FINAL semantics prefix (r13): whole-
+        # measure only.  With ONE ROW PER MATCH the evaluation
+        # point is after the last row, where RUNNING and FINAL
+        # coincide (SQL:2016) — both prefixes reduce to the
+        # final rewrite.  Under ALL ROWS PER MATCH this engine's
+        # DEFAULT is FINAL (a documented deviation from the
+        # standard's running default, pinned by the r12 all-rows
+        # oracle row); RUNNING opts into per-row cumulation.
+        sem = "final"
+        pm = re.match(r"(?is)^\s*(RUNNING|FINAL)\b(.*)$", expr)
+        if pm:
+            sem = pm.group(1).lower()
+            expr = pm.group(2).strip()
+        if re.search(r"(?i)\b(?:RUNNING|FINAL)\b", expr):
+            raise ValueError(
+                f"measure {alias!r}: RUNNING/FINAL must prefix "
+                "the WHOLE measure expression (per-call "
+                "semantics modifiers are not supported)"
+            )
+        if two_step:
+            _refuse_unqualified_match_refs(expr, f"measure {alias!r}")
+            measures.append(
+                (
+                    _rewrite_match_refs(expr, f"measure {alias!r}"),
+                    alias,
+                )
+            )
+        elif sem == "running" and all_rows:
+            measures.append(
+                (
+                    _rewrite_nfa_measure(
+                        expr, pat_vars, f"measure {alias!r}",
+                        running=True, order=order,
+                    ),
+                    alias,
+                    "running",
+                )
+            )
+        else:
+            measures.append(
+                (
+                    _rewrite_nfa_measure(
+                        expr, pat_vars, f"measure {alias!r}",
+                        order=order,
+                    ),
+                    alias,
+                )
+            )
+    out_names = list(partition) + [m[1] for m in measures]
+    items = []
+    for raw in _split_select_items(mm.group("items")):
+        expr, alias = _split_alias(raw)
+        im = _IDENT.match(expr)
+        # ALL ROWS PER MATCH (r12) additionally exposes every
+        # SOURCE column — those resolve at plan time, so only the
+        # identifier shape is checked here
+        if not im or (not all_rows and im.group("name") not in out_names):
+            raise ValueError(
+                f"MATCH_RECOGNIZE select items must be PARTITION BY "
+                f"columns or measure names ({out_names})"
+                + (" or source columns" if all_rows else "")
+                + f", got {raw!r}"
             )
         items.append((im.group("name"), alias or im.group("name")))
+    if two_step:
+        # PATTERN (A B) + SKIP TO NEXT ROW: the LEAD-window plan —
+        # pure JVM, and its DEFINE B may reference the A row (the
+        # pair is in scope)
+        _refuse_unqualified_match_refs(defines["A"], "DEFINE A")
+        _refuse_unqualified_match_refs(defines["B"], "DEFINE B")
+        return InsertSelect(
+            sink=sink, shape="match", sources=[src], select=items,
+            match={
+                "partition": partition, "order": order,
+                "within": within,
+                "define_a": _rewrite_match_refs(
+                    defines["A"], "DEFINE A"
+                ),
+                "define_b": _rewrite_match_refs(
+                    defines["B"], "DEFINE B"
+                ),
+                "measures": measures,
+            },
+        )
+    # general pattern → the per-key NFA plan: defines evaluate
+    # against the row being classified only
+    nfa_defines = {
+        v: _rewrite_nfa_define(d, v, pat_vars)
+        for v, d in defines.items()
+    }
     return InsertSelect(
-        sink=sink, shape="over", sources=[om.group("src").strip('`"')],
-        aggs=aggs, where=_clean(om.group("where")), select=items,
-        over={
-            "partition": list(spec[0]), "order": spec[1],
-            "rows": spec[2], "range": spec[3],
+        sink=sink, shape="match_nfa", sources=[src], select=items,
+        match_nfa={
+            "partition": partition, "order": order,
+            # the ORIGINAL pattern text: the plan re-parses the
+            # full grammar (alternation / PERMUTE / {- -}), so
+            # exclusions need no side channel
+            "within": within, "pattern": mm.group("pattern"),
+            "defines": nfa_defines, "measures": measures,
+            "skip": skip_opt,
+            "rows_per_match": "all" if all_rows else "one",
         },
     )
 
-
-def _extract_parenthesized_from(select: str):
-    """``SELECT <items> FROM ( <body> ) <tail>`` → (items, body, tail)
-    with the body extracted by balanced-paren scan (string-literal
-    aware); None when the statement's FROM is not parenthesized."""
-    m = re.match(r"(?is)^SELECT\s+(?P<items>.*?)\s+FROM\s*\(", select)
-    if not m:
-        return None
-    depth, in_str, i = 1, False, m.end()
-    while i < len(select) and depth:
-        ch = select[i]
-        if in_str:
-            in_str = ch != "'"
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    if depth:
-        return None
-    return m.group("items"), select[m.end() : i - 1], select[i:]
-
-
-def _split_top_union_all(body: str) -> list:
-    """Split a subquery body on top-level ``UNION ALL`` (outside parens
-    and string literals).  Returns the branches; a single-element list
-    means the body is not a union."""
-    parts, cur, depth, in_str = [], [], 0, False
-    i, n = 0, len(body)
-    while i < n:
-        ch = body[i]
-        if in_str:
-            cur.append(ch)
-            in_str = ch != "'"
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0:
-            m = re.match(r"(?is)UNION\s+ALL\b", body[i:])
-            if m and (i == 0 or not (body[i - 1].isalnum()
-                                     or body[i - 1] == "_")):
-                parts.append("".join(cur))
-                cur = []
-                i += m.end()
-                continue
-            if re.match(r"(?is)UNION\b", body[i:]) and not m and (
-                i == 0 or not (body[i - 1].isalnum() or body[i - 1] == "_")
-            ):
-                raise ValueError(
-                    "only UNION ALL is supported over changelogs (plain "
-                    "UNION's dedup is a stateful operator of its own — "
-                    "aggregate with COUNT/GROUP BY instead)"
-                )
-        cur.append(ch)
-        i += 1
-    parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
-
-
-_UNION_BRANCH_RE = re.compile(
-    r"^\s*SELECT\s+(?P<items>.*?)\s+FROM\s+(?P<src>[`\"\w.]+)"
-    r"(?:\s+WHERE\s+(?P<where>.*?))?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_UNION_TAIL_RE = re.compile(
-    r"^(?:\s+(?:AS\s+)?(?!GROUP\b|WHERE\b|HAVING\b)\w+)?\s*"
-    r"(?P<rest>(?:WHERE\s+.*?\s+)?GROUP\s+BY\s+.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
-def _parse_union_agg(sink: str, select: str) -> Optional[InsertSelect]:
-    """``SELECT .. FROM (SELECT .. FROM a [WHERE ..] UNION ALL SELECT
-    .. FROM b [WHERE ..] ..) [u] [WHERE ..] GROUP BY ..`` — a maintained
-    aggregate over the UNION ALL of several changelogs.  Exact by
-    linearity: the signed multiset of a union is the sum of the
-    branches' signed multisets, so each branch's per-batch rows are
-    projected (row-local, positional alignment onto the first branch's
-    output names — SQL's union column rule) and stacked before the
-    aggregate plan sees them.  Flink compiles the same statement to a
-    union of changelog inputs feeding one StreamExecGroupAggregate.
-    Returns None when the statement's FROM is not a parenthesized
-    top-level UNION ALL (so other shapes get their turn)."""
-    ext = _extract_parenthesized_from(select)
-    if ext is None:
-        return None
-    items, body, tail = ext
-    branches = _split_top_union_all(body)
-    if len(branches) < 2:
-        return None
-    tm = _UNION_TAIL_RE.match(tail)
-    if not tm:
-        raise ValueError(
-            "a UNION ALL source must feed a grouped aggregate: SELECT "
-            "g, FN(x) .. FROM (SELECT .. UNION ALL SELECT ..) [WHERE p] "
-            "GROUP BY g"
-        )
-    first_names: list = []
-    parsed = []
-    for bi, btxt in enumerate(branches):
-        bm = _UNION_BRANCH_RE.match(btxt)
-        if not bm:
-            raise ValueError(
-                f"cannot parse UNION ALL branch {btxt[:80]!r}: expected "
-                "SELECT <exprs> FROM <table> [WHERE <pred>] (one source "
-                "table per branch)"
-            )
-        exprs = []
-        for raw in _split_select_items(bm.group("items")):
-            expr, alias = _split_alias(raw)
-            if alias is None:
-                im = _IDENT.match(expr)
-                alias = im.group("name") if im else None
-            if bi == 0:
-                if alias is None:
-                    raise ValueError(
-                        f"first UNION ALL branch item {raw!r} needs a "
-                        "name: a plain column or <expr> AS <alias> (it "
-                        "defines the union's output columns)"
-                    )
-                first_names.append(alias)
-            exprs.append(expr)
-        parsed.append(
-            (bm.group("src").strip('`"'), exprs, _clean(bm.group("where")))
-        )
-    for src, exprs, _w in parsed:
-        if len(exprs) != len(first_names):
-            raise ValueError(
-                f"UNION ALL branch over {src!r} selects {len(exprs)} "
-                f"column(s) but the first branch selects "
-                f"{len(first_names)} — branches align positionally"
-            )
-    st = parse_insert_select(
-        f"INSERT INTO {sink} SELECT {items} FROM __union__ "
-        + tm.group("rest")
-    )
-    st.sources = [src for src, _, _ in parsed]
-    st.union_branches = [
-        (list(zip(exprs, first_names)), w) for _, exprs, w in parsed
-    ]
-    return st
-
-
-# Flink's window join: a TUMBLE-bucket equality conjunct in the ON
-# clause — rows join only within the same tumbling window.  Both sides
-# derive the bucket row-locally per batch; the bucket columns become
-# ordinary equi-join keys of the maintained join.
-_WIN_EQ = re.compile(
-    r"(?is)^TUMBLE\s*\(\s*(?P<lq>\w+)\.(?P<lc>\w+)\s*,\s*"
-    r"INTERVAL\s+'(?P<ln>\d+)'\s+(?P<lu>SECOND|MINUTE|HOUR|DAY)S?\s*\)"
-    r"\s*=\s*TUMBLE\s*\(\s*(?P<rq>\w+)\.(?P<rc>\w+)\s*,\s*"
-    r"INTERVAL\s+'(?P<rn>\d+)'\s+(?P<ru>SECOND|MINUTE|HOUR|DAY)S?\s*\)$"
-)
-_JOIN_WINFIELD = re.compile(
-    r"(?is)^TUMBLE_(?P<which>START|END)\s*\(\s*(?P<q>\w+)\.(?P<c>\w+)"
-    r"\s*,\s*INTERVAL\s+'(?P<n>\d+)'\s+"
-    r"(?P<unit>SECOND|MINUTE|HOUR|DAY)S?\s*\)$"
-)
 
 # Flink's MATCH_RECOGNIZE (CEP SQL — StreamExecMatch / CepOperator).
 # PATTERN (A B) + SKIP TO NEXT ROW dispatches the LEAD-window two-step
@@ -2069,155 +1942,50 @@ def _rewrite_nfa_measure(
     return "".join(out)
 
 
-_SETOP_KW = re.compile(r"(?is)^(?P<op>INTERSECT|EXCEPT)(?P<all>\s+ALL)?\b")
+def _rewrite_having(having: str, aggs: dict, node: "_Node" = None) -> str:
+    """HAVING over the maintained aggregate: rewrite each aggregate
+    call (``SUM(weight)``) to its output alias so the predicate
+    evaluates against the plan's delta/result columns.  The predicate
+    is row-local on RESULT rows, so filtering the signed delta stream
+    with it is exact: a group crossing the bound emits only the side of
+    its ±pair that satisfies the predicate — the retraction when it
+    leaves, the insert when it enters.
 
+    Calls are found in Catalyst's parse of the predicate (``node``, or
+    a fresh parse of ``having``), so ``array_min(x)`` and text inside
+    string literals are never rewritten."""
+    if node is None:
+        node = _Node(catalyst_parse(having, "expression"), having)
+    base = node.wrapped()[0]
+    reps, leftover = [], []
 
-def _split_top_setop(body: str):
-    """Split on a top-level INTERSECT [ALL] / EXCEPT [ALL] (outside
-    parens and string literals).  Returns (branches, op, all_flag) or
-    None when no set operator appears."""
-    cur, depth, in_str = [], 0, False
-    parts, ops = [], []
-    i, n = 0, len(body)
-    while i < n:
-        ch = body[i]
-        if in_str:
-            cur.append(ch)
-            in_str = ch != "'"
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0 and (
-            i == 0 or not (body[i - 1].isalnum() or body[i - 1] == "_")
-        ):
-            m = _SETOP_KW.match(body[i:])
-            if m:
-                parts.append("".join(cur))
-                cur = []
-                ops.append(
-                    (m.group("op").lower(), m.group("all") is not None)
-                )
-                i += m.end()
-                continue
-        cur.append(ch)
-        i += 1
-    parts.append("".join(cur))
-    if not ops:
-        return None
-    return [p.strip() for p in parts], ops
+    def visit(n: _Node) -> None:
+        fn = n.fn()
+        if fn in _AGG_FNS:
+            args = n.call_args().lower()
+            for alias, (afn, aargs) in aggs.items():
+                if (afn, aargs.lower()) == (fn, args) and not (
+                    n.j.filter().isDefined()
+                ):
+                    reps.append((n.span(), alias))
+                    return
+            leftover.append(n)
+        for k in n.kids():
+            visit(k)
 
-
-def _parse_setop(sink: str, select: str) -> Optional[InsertSelect]:
-    """``SELECT .. FROM a [WHERE ..] INTERSECT [ALL]|EXCEPT [ALL]
-    SELECT .. FROM b [WHERE ..]`` — Flink's streaming set operations
-    (Table API intersect/intersectAll/minus/minusAll; the SQL planner
-    rewrites them to stateful count aggregates, which is exactly the
-    maintenance plan here).  Two branches; chain more via STATEMENT
-    SET.  Branch projections and WHEREs are row-local; columns align
-    positionally onto the first branch's output names (SQL's set-op
-    column rule)."""
-    sp = _split_top_setop(select)
-    if sp is None:
-        return None
-    branches, ops = sp
-    if len(ops) > 1:
-        raise ValueError(
-            "one set operation per statement — chain further "
-            "INTERSECT/EXCEPT steps through a STATEMENT SET"
-        )
-    op, all_flag = ops[0]
-    first_names: list = []
-    parsed = []
-    for bi, btxt in enumerate(branches):
-        bm = _UNION_BRANCH_RE.match(btxt)
-        if not bm:
-            raise ValueError(
-                f"cannot parse {op.upper()} branch {btxt[:80]!r}: "
-                "expected SELECT <exprs> FROM <table> [WHERE <pred>]"
-            )
-        exprs = []
-        for raw in _split_select_items(bm.group("items")):
-            expr, alias = _split_alias(raw)
-            if alias is None:
-                im = _IDENT.match(expr)
-                alias = im.group("name") if im else None
-            if bi == 0:
-                if alias is None:
-                    raise ValueError(
-                        f"first {op.upper()} branch item {raw!r} needs "
-                        "a name: a plain column or <expr> AS <alias>"
-                    )
-                first_names.append(alias)
-            exprs.append(expr)
-        parsed.append(
-            (bm.group("src").strip('`"'), exprs, _clean(bm.group("where")))
-        )
-    if len(parsed[1][1]) != len(first_names):
-        raise ValueError(
-            f"{op.upper()} branches select {len(parsed[0][1])} vs "
-            f"{len(parsed[1][1])} column(s) — branches align "
-            "positionally"
-        )
-    return InsertSelect(
-        sink=sink, shape="setop",
-        sources=[src for src, _, _ in parsed],
-        select=[(n, n) for n in first_names],
-        union_branches=[
-            (list(zip(exprs, first_names)), w) for _, exprs, w in parsed
-        ],
-        setop={"op": op, "all": all_flag},
-    )
-
-
-def _rewrite_having(having: str, aggs: dict) -> str:
-    """HAVING over the maintained aggregate: rewrite each textual
-    aggregate call (``SUM(weight)``) to its output alias so the
-    predicate evaluates against the plan's delta/result columns.  The
-    predicate is row-local on RESULT rows, so filtering the signed
-    delta stream with it is exact: a group crossing the bound emits
-    only the side of its ±pair that satisfies the predicate — the
-    retraction when it leaves, the insert when it enters.
-
-    Substitution is word-boundary-anchored (``array_min(x)`` must not
-    have its ``min(x)`` tail rewritten) and skips string literals."""
-    # split into quoted/unquoted segments; substitute only outside
-    # literals so aggregate-shaped text inside '...' stays verbatim
-    segs = re.split(r"('(?:[^']|'')*')", having)
-    for alias, (fn, args) in aggs.items():
-        pat = re.compile(
-            r"\b" + re.escape(fn) + r"\s*\(\s*" + re.escape(args) + r"\s*\)",
-            re.IGNORECASE,
-        )
-        segs = [
-            s if i % 2 else pat.sub(alias, s) for i, s in enumerate(segs)
-        ]
-    out = "".join(segs)
-    leftover = None
-    for i, s in enumerate(segs):
-        if i % 2:
-            continue
-        m = re.search(r"\b(SUM|COUNT|AVG|MIN|MAX)\s*\(", s, re.IGNORECASE)
-        if m:
-            leftover = m
-            break
+    visit(node)
     if leftover:
+        t = leftover[0].text()
         raise ValueError(
             f"HAVING references an aggregate not in the SELECT list "
-            f"(near {leftover.group(0)!r}); the maintained sink only "
+            f"(near {t[: t.index('(') + 1]!r}); the maintained sink only "
             "carries the SELECT's aggregates — add it to the SELECT or "
             "reference an existing output alias"
         )
+    out = having
+    for (s, e), alias in sorted(reps, reverse=True):
+        out = out[: s - base] + alias + out[e + 1 - base :]
     return out
-
-
-def _clean(s: Optional[str]) -> Optional[str]:
-    s = (s or "").strip()
-    return s or None
 
 
 def _names(csv: str, what: str) -> list:
@@ -2230,72 +1998,6 @@ def _names(csv: str, what: str) -> list:
             )
         out.append(m.group("name"))
     return out
-
-
-def _split_on_conjuncts(conds: str) -> list:
-    """Split an ON clause on top-level ``AND`` — outside parentheses and
-    string literals, and NOT the ``AND`` that belongs to a ``BETWEEN x
-    AND y`` (each BETWEEN absorbs the next AND-joined fragment, so
-    interval-join bounds stay one conjunct)."""
-    def _ident_char(ch: str) -> bool:
-        # SQL identifier characters: \b would treat '_' as a boundary
-        # and split price_and_tax mid-identifier
-        return ch.isalnum() or ch == "_"
-
-    s = conds.strip()
-    # parts carry (text, top_level_between_count): BETWEENs inside
-    # parentheses or string literals already hold their own AND and
-    # must not absorb a following conjunct
-    parts, cur, depth, in_str = [], [], 0, False
-    n_btw = 0
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if in_str:
-            cur.append(ch)
-            in_str = ch != "'"
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if (
-            depth == 0
-            and not in_str
-            and s[i : i + 3].upper() == "AND"
-            and (i == 0 or not _ident_char(s[i - 1]))
-            and (i + 3 >= n or not _ident_char(s[i + 3]))
-        ):
-            parts.append(("".join(cur), n_btw))
-            cur, n_btw = [], 0
-            i += 3
-            continue
-        if (
-            depth == 0
-            and not in_str
-            and s[i : i + 7].upper() == "BETWEEN"
-            and (i == 0 or not _ident_char(s[i - 1]))
-            and (i + 7 >= n or not _ident_char(s[i + 7]))
-        ):
-            n_btw += 1
-        cur.append(ch)
-        i += 1
-    parts.append(("".join(cur), n_btw))
-    # merge each top-level BETWEEN's bound back: it consumes the next
-    # AND-split part (which may itself open further BETWEENs)
-    out, j = [], 0
-    while j < len(parts):
-        piece, pending = parts[j]
-        while pending > 0 and j + 1 < len(parts):
-            j += 1
-            piece = piece + " AND " + parts[j][0]
-            pending += parts[j][1] - 1
-        out.append(piece.strip())
-        j += 1
-    return [p for p in out if p]
 
 
 def _table_meta(tables: dict, name: str):

@@ -57,3 +57,37 @@ def get_spark(
     for k, v in merged.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+class SqlParseError(ValueError):
+    """Catalyst refused the SQL text: the user's statement or expression
+    is at fault, not the JVM or its py4j transport."""
+
+
+def catalyst_parse(text: str, kind: str = "plan", spark=None):
+    """Parse ``text`` with the session's own SQL parser, without
+    resolving any name: ``kind="plan"`` returns the unresolved
+    LogicalPlan, ``kind="expression"`` the unresolved Expression (both
+    py4j handles).  The session is ``spark``, else the active one, else
+    :func:`get_spark`'s.  A Catalyst ParseException becomes
+    :class:`SqlParseError`; a transport or JVM failure propagates as
+    itself, so infrastructure errors never read as bad SQL."""
+    spark = spark or SparkSession.getActiveSession() or get_spark()
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    try:
+        if kind == "plan":
+            return parser.parsePlan(text)
+        return parser.parseExpression(text)
+    except Exception as exc:
+        # PySpark's capture hook turns the JVM error into
+        # pyspark.errors.ParseException; an uncaptured call path leaves
+        # a raw Py4JJavaError that carries the Java exception instead
+        from pyspark.errors import ParseException
+
+        java_exc = getattr(exc, "java_exception", None)
+        if not isinstance(exc, ParseException) and (
+            java_exc is None
+            or "ParseException" not in java_exc.getClass().getName()
+        ):
+            raise
+        raise SqlParseError(str(exc)) from None

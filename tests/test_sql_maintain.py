@@ -4069,3 +4069,89 @@ def test_match_recognize_ref_rules(spark):
     )
     assert st.match["define_b"] == "__b.et = 'error'"
     assert st.match["define_a"] == "et = 'signup'"
+
+
+def test_prepass_routing_parses_without_error_or_job(spark, monkeypatch):
+    """MATCH_RECOGNIZE and the column-valued FOR SYSTEM_TIME AS OF are
+    the two forms Spark's grammar refuses: they are routed by keyword
+    before any Catalyst call, so no parsePlan raises (a failed parse
+    costs ~100 ms and logs an ERROR trace), the MATCH_RECOGNIZE
+    pre-pass makes no Catalyst call at all, and parsing starts no Spark
+    job."""
+    from flink_cdc_2_3_0_src_spark.plans import sql_maintain as sm
+
+    calls = []
+    real = sm.catalyst_parse
+
+    def recording(text, *args, **kwargs):
+        try:
+            out = real(text, *args, **kwargs)
+        except Exception as exc:
+            calls.append((text, exc))
+            raise
+        calls.append((text, None))
+        return out
+
+    monkeypatch.setattr(sm, "catalyst_parse", recording)
+    sc = spark.sparkContext
+    sc.setJobGroup("prepass-routing", "parse only")
+    try:
+        st = parse_insert_select(_MR_SQL)
+        assert st.shape == "match" and calls == []
+        nfa = parse_insert_select(
+            _MR_SQL.replace("PATTERN (A B)", "PATTERN (A B+)")
+        )
+        assert nfa.shape == "match_nfa" and calls == []
+        for how in ("", "LEFT "):
+            st = parse_insert_select(
+                "INSERT INTO s SELECT p.k, d.v FROM probe p "
+                f"{how}JOIN dim FOR SYSTEM_TIME AS OF p.pts AS d "
+                "ON p.k = d.k"
+            )
+            assert st.shape == "temporal"
+            assert st.temporal == ("p", "pts", "d")
+            assert st.join_how == (how.strip().lower() or "inner")
+        assert len(calls) == 2
+        assert all(exc is None for _text, exc in calls)
+        assert not sc.statusTracker().getJobIdsForGroup("prepass-routing")
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_catalyst_front_end_reads_the_statement_text():
+    """Expression strings are the statement's own text: a BETWEEN pair
+    predicate keeps its spacing, a comment is not part of a clause, and
+    pre-pass keywords inside string literals route nothing; an
+    aggregate FILTER (not maintained) and a column-valued AS OF outside
+    a join stage are refused instead of dropped."""
+    st = parse_insert_select(
+        "INSERT INTO s SELECT a.k, b.v FROM ta a JOIN tb b ON a.k = b.k "
+        "AND a.ts BETWEEN b.ts - INTERVAL '1' HOUR AND b.ts"
+    )
+    assert st.join_extra == [
+        "a.ts BETWEEN b.ts - INTERVAL '1' HOUR AND b.ts"
+    ]
+    st = parse_insert_select(
+        "INSERT INTO s SELECT g, SUM(v) AS sv FROM t /* c */ WHERE v > 0 "
+        "-- trailing\nGROUP BY g"
+    )
+    assert (st.shape, st.where) == ("agg", "v > 0")
+    assert st.aggs == {"sv": ("sum", "v")}
+    st = parse_insert_select(
+        "INSERT INTO s SELECT v FROM t WHERE note <> 'MATCH_RECOGNIZE' "
+        "AND tag <> 'FOR SYSTEM_TIME AS OF a.b'"
+    )
+    assert st.shape == "calc"
+    assert st.where == (
+        "note <> 'MATCH_RECOGNIZE' AND tag <> 'FOR SYSTEM_TIME AS OF a.b'"
+    )
+    with pytest.raises(ValueError, match="neither a GROUP BY column"):
+        parse_insert_select(
+            "INSERT INTO s SELECT g, SUM(v) FILTER (WHERE v > 0) AS sv "
+            "FROM t GROUP BY g"
+        )
+    with pytest.raises(ValueError, match="unsupported INSERT-SELECT shape"):
+        parse_insert_select(
+            "INSERT INTO s SELECT g, SUM(v) AS sv FROM t "
+            "FOR SYSTEM_TIME AS OF t.ts GROUP BY g"
+        )
