@@ -1,4 +1,5 @@
-"""Table loading helpers shared by sources and the query catalog."""
+"""Table loading helpers shared by sources and the query catalog, and
+the engine's one materialisation helper (:func:`pin`)."""
 
 from __future__ import annotations
 
@@ -250,3 +251,53 @@ def _estimate_splits(spark, files: list, fallback: int) -> tuple:
         return total, total_bytes
     except Exception:
         return fallback, None
+
+
+def pin(x, fanout: bool = False):
+    """Materialise ``x`` (a DataFrame, ``None`` or a tuple of them) once
+    as a local checkpoint: the engine's one materialisation policy.
+
+    A frame already pinned (a LogicalRDD over a checkpointed, locally
+    checkpointed or persisted RDD) comes back unchanged with no job; a
+    ``createDataFrame`` frame's RDD is none of these, so it is pinned.
+    ``fanout=True`` materialises now, for a frame read by concurrent
+    consumers (broadcast builds race on an unmaterialised RDD); else at
+    the first action that reads it.  The result is a bare LogicalRDD
+    over the checkpointed RDD: it keeps the checkpoint's size statistics
+    (so it can still be broadcast) but not its source plan's
+    constraints, which can break Spark's constraint rewrite in a later
+    union (``NoSuchElementException: key not found``, Spark 4.1)."""
+    if x is None:
+        return None
+    if isinstance(x, tuple):
+        return tuple(pin(f, fanout) for f in x)
+    plan = x._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        rdd = plan.rdd()
+        level = rdd.getStorageLevel()
+        if (
+            rdd.isCheckpointed()
+            or rdd.isLocallyCheckpointed()
+            or level.useMemory()
+            or level.useDisk()
+        ):
+            return x
+    ck = x.localCheckpoint(eager=fanout)
+    plan = ck._jdf.queryExecution().logical()
+    jss = ck._jdf.sparkSession()
+    jvm = ck.sparkSession._jvm
+    bare = jvm.org.apache.spark.sql.execution.LogicalRDD(
+        plan.output(),
+        plan.rdd(),
+        plan.outputPartitioning(),
+        plan.outputOrdering(),
+        plan.isStreaming(),
+        plan.stream(),
+        jss,
+        jvm.scala.Some(plan.computeStats()),
+        jvm.scala.Option.apply(None),
+    )
+    return DataFrame(
+        jvm.org.apache.spark.sql.classic.Dataset.ofRows(jss, bare),
+        ck.sparkSession,
+    )

@@ -34,6 +34,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_cdc_2_3_0_src_spark.io import pin
 from flink_cdc_2_3_0_src_spark.model import (
     DB_COL,
     OP_COL,
@@ -1024,8 +1025,8 @@ def delta_join_changelog(
         # ChangelogNormalize window over the whole log).  The true
         # streaming form (foreachBatch) gets its batches pre-cut and
         # never takes this path.
-        log_a = log_a.localCheckpoint(eager=False)
-        log_b = log_b.localCheckpoint(eager=False)
+        log_a = pin(log_a)
+        log_b = pin(log_b)
     hi_a = log_a.agg(F.max(seq_col)).collect()[0][0]
     hi_b = log_b.agg(F.max(seq_col)).collect()[0][0]
     hi = max([s for s in (hi_a, hi_b) if s is not None], default=None)
@@ -1037,10 +1038,7 @@ def delta_join_changelog(
             state, log_a.filter(cond), log_b.filter(cond), on,
             how=how, op_col=op_col, seq_col=seq_col,
         )
-        state = (
-            state[0].localCheckpoint(eager=False),
-            state[1].localCheckpoint(eager=False),
-        )
+        state = pin(state)
         outs.append(out)
     if not outs:
         # both logs empty: the join of two empty states
@@ -1308,7 +1306,7 @@ def topn_changelog(
     if n_batches < 1:
         raise ValueError(f"n_batches must be >= 1, got {n_batches}")
     if n_batches > 1:
-        log = log.localCheckpoint(eager=False)
+        log = pin(log)
     hi = log.agg(F.max(seq_col)).collect()[0][0]
     state = None
     conds = seq_range_conditions(hi, n_batches, seq_col) if hi is not None else []
@@ -1317,10 +1315,7 @@ def topn_changelog(
             state, log.filter(cond), keys, group_cols, order_sql, n,
             op_col=op_col, seq_col=seq_col,
         )
-        state = (
-            state[0].localCheckpoint(eager=False),
-            state[1].localCheckpoint(eager=False),
-        )
+        state = pin(state)
     if state is None:
         _, empty = merge_topn_state(
             None, log, keys, group_cols, order_sql, n,

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_cdc_2_3_0_src_spark.io import pin
+
 # quantization scale: micro-units keep |q| < ~2^23 for unit-ish
 # embeddings, so a 64-dim squared distance stays far inside int64
 _SCALE = 1_000_000
@@ -415,7 +417,7 @@ def ann_topk_ivf_trained(
     nprobe: int = 2,
 ) -> DataFrame:
     assigned, centroids = kmeans_fit(emb, k, iters)
-    base = assigned.localCheckpoint(eager=True)  # Lloyd's is driver-iterated; don't replay per join side
+    base = pin(assigned, fanout=True)  # Lloyd's is driver-iterated; don't replay per join side
 
     carr = _centroid_literals(centroids)
     dist_to = lambda c, v: F.aggregate(  # noqa: E731

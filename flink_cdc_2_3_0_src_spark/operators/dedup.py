@@ -38,6 +38,8 @@ from flink_cdc_2_3_0_src_spark.functions.hashing import (
     sql_token_hashes,
     sql_tokens,
 )
+from flink_cdc_2_3_0_src_spark.io import pin
+from flink_cdc_2_3_0_src_spark.operators.changelog import seq_range_conditions
 
 MINHASH_K = 16
 LSH_BANDS = 4
@@ -110,7 +112,7 @@ def lsh_pairs(
     # truncate lineage ONCE at the per-doc profile: the UDF pipeline must
     # not re-run across the self-join, and the (large) hashes array is
     # materialized one copy per doc — not once per exploded band replica
-    prof = ss.localCheckpoint(eager=False)
+    prof = pin(ss)
     banded = prof.select("doc_id", F.explode(band_structs).alias("bk")).select(
         "doc_id",
         F.col("bk.band").alias("band"),
@@ -193,7 +195,7 @@ def lsh_pairs_jvm(
     # pandas path, and its blocks are released by the ContextCleaner
     # when the plan is GC'd — an unmatched .persist() here leaked cached
     # blocks for the session lifetime under repeated bench invocations.
-    prof = docs.select("doc_id", hashes.alias("hashes")).localCheckpoint(eager=False)
+    prof = pin(docs.select("doc_id", hashes.alias("hashes")))
     params = minhash_params(bands * rows)
 
     # k permutation-mins over the hash array — all codegen'd JVM HOFs.
@@ -285,12 +287,10 @@ def ngram_jaccard_pairs(
             "shape: pass verification=True on a bounded fixture, or use "
             "lsh_pairs / fuzzy_blocked_pairs as the scale path"
         )
-    d = (
+    d = pin(
         docs.select(
             *block_cols, "doc_id", shingle_profile(F.col("text"), 1, 3).alias("p")
-        )
-        .select(*block_cols, "doc_id", F.col("p.hashes").alias("sh"))
-        .localCheckpoint(eager=False)
+        ).select(*block_cols, "doc_id", F.col("p.hashes").alias("sh"))
     )
     a, b = d.alias("a"), d.alias("b")
     cond = F.col("a.doc_id") < F.col("b.doc_id")
@@ -375,11 +375,10 @@ def connected_components(edges: DataFrame, max_iters: int = 20) -> DataFrame:
     directions present). Returns (doc_id, cluster_id), cluster_id =
     min doc_id in the component.
     """
-    labels = (
+    labels = pin(
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint(eager=False)
     )
     for _ in range(max_iters):
         neighbor_min = (
@@ -398,16 +397,14 @@ def connected_components(edges: DataFrame, max_iters: int = 20) -> DataFrame:
         parents = hopped.select(
             F.col("doc_id").alias("cluster_id"), F.col("cluster_id").alias("parent")
         )
-        updated = (
-            hopped.join(parents, "cluster_id", "left")
-            .select(
+        updated = pin(
+            hopped.join(parents, "cluster_id", "left").select(
                 "doc_id",
                 F.least(
                     F.col("cluster_id"),
                     F.coalesce(F.col("parent"), F.col("cluster_id")),
                 ).alias("cluster_id"),
             )
-            .localCheckpoint(eager=False)
         )
         changed = (
             updated.alias("u")
@@ -432,12 +429,11 @@ def dup_clusters(docs: DataFrame, max_iters: int = 20) -> DataFrame:
     component (the canonical representative to KEEP during dedup).
     """
     pairs = lsh_pairs(docs).select("doc_a", "doc_b")
-    edges = (
+    edges = pin(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
             pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
-        .localCheckpoint(eager=False)
     )
     return connected_components(edges, max_iters=max_iters)
 
@@ -811,7 +807,8 @@ def fuzzy_blocked_pairs(
             F.length("text").alias("len"),
         ).filter(F.col("len") >= max_dist + 1),
         "doc_id",
-    ).localCheckpoint(eager=True)
+    )
+    base = pin(base, fanout=True)
     cand = fuzzy_blocked_candidates(docs, q=q, max_dist=max_dist, pre=base)
     # char-histogram L1 lower bound, computed ONCE per doc: every edit
     # op changes the char bag by at most 2 L1 units (substitution ±1
@@ -835,7 +832,7 @@ def fuzzy_blocked_pairs(
     )
     # materialize once: the a- and b-side joins would otherwise each
     # re-run the histogram UDF (and the source scan) per side
-    texts = texts.localCheckpoint(eager=True)
+    texts = pin(texts, fanout=True)
     joined = cand.join(
         texts.select(
             F.col("doc_id").alias("doc_a"),
@@ -929,7 +926,7 @@ def merge_neardup_state(
     order); per-batch work is the batch's band keys equi-joined against
     the state's — batch-driven probe, one bounded verify join."""
     banded_old, hashes_old = state if state is not None else (None, None)
-    prof = shingle_sets(batch_docs, k=bands * rows).localCheckpoint(eager=False)
+    prof = pin(shingle_sets(batch_docs, k=bands * rows))
     banded_b = prof.select(
         "doc_id", F.explode(_band_structs(bands, rows)).alias("bk")
     ).select(
@@ -1003,26 +1000,14 @@ def incremental_dedup(
     hi = docs.agg(F.max("doc_id")).collect()[0][0]
     if hi is None:
         return docs
-    docs = docs.localCheckpoint(eager=False) if n_batches > 1 else docs
+    docs = pin(docs) if n_batches > 1 else docs
     state, kept_parts = None, []
-    for i in range(n_batches):
-        lo_edge = i * (int(hi) + 1) // n_batches
-        hi_edge = (i + 1) * (int(hi) + 1) // n_batches
-        cond = (F.col("doc_id") >= lo_edge) & (F.col("doc_id") < hi_edge)
-        if i == 0:
-            cond = F.col("doc_id") < hi_edge
-        if i == n_batches - 1:
-            cond = F.col("doc_id") >= lo_edge
-            if n_batches == 1:
-                cond = F.lit(True)
+    for cond in seq_range_conditions(hi, n_batches, "doc_id"):
         state, kept = merge_neardup_state(
             state, docs.filter(cond), bands, rows, threshold
         )
-        state = (
-            state[0].localCheckpoint(eager=False),
-            state[1].localCheckpoint(eager=False),
-        )
-        kept_parts.append(kept.localCheckpoint(eager=False))
+        state = pin(state)
+        kept_parts.append(pin(kept))
     out = kept_parts[0]
     for k in kept_parts[1:]:
         out = out.unionByName(k)

@@ -48,6 +48,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_cdc_2_3_0_src_spark.io import pin
 from flink_cdc_2_3_0_src_spark.model import (
     OP_COL,
     OP_DELETE,
@@ -1146,11 +1147,9 @@ class _TemporalJoinPlan(_Plan):
                 F.col(self.seq_col).alias("__bseq"),
             )
         )
-        new_state = (
-            vers_new
-            if state is None
-            else state.unionByName(vers_new)
-        ).localCheckpoint(eager=False)
+        new_state = pin(
+            vers_new if state is None else state.unionByName(vers_new)
+        )
 
         probe = batch_p.filter(F.col(self.op_col) == OP_INSERT).select(
             *p_payload, F.col(self.seq_col).alias("__pseq")
@@ -1464,7 +1463,7 @@ class _MatchPlan(_Plan):
             pruned = pruned.unionByName(
                 _keyset_join(state, affected, self.partition, "left_anti")
             )
-        return pruned.localCheckpoint(eager=False), delta
+        return pin(pruned), delta
 
     def _expire(self, state, watermark):
         return expire_state(state, watermark, self.order)
@@ -3026,7 +3025,7 @@ class _MatchNfaPlan(_Plan):
         # the LAST batch's state materialization entirely.  The state
         # is coalesced back to ``par`` partitions — a union adds the
         # pass's partitions to the old state's every batch.
-        out = scanned.localCheckpoint(eager=False)
+        out = pin(scanned)
         pool = (
             out.filter(F.col("__tag") == 0)
             .select(*rows.columns)
@@ -3043,7 +3042,7 @@ class _MatchNfaPlan(_Plan):
             .agg(F.sum(MULT_COL).alias(MULT_COL))
             .filter(F.col(MULT_COL) != 0)
         )
-        return pool.localCheckpoint(eager=False), delta
+        return pin(pool), delta
 
     def _expire(self, state, watermark):
         # MATCH_NUMBER + ttl refuses at construction, so the per-key
@@ -3252,7 +3251,7 @@ class _SetOpPlan(_Plan):
         new_state = (
             kept if unaffected is None else unaffected.unionByName(kept)
         )
-        return new_state.localCheckpoint(eager=False), delta
+        return pin(new_state), delta
 
     def _expire(self, state, watermark):  # pragma: no cover - guarded
         raise ValueError("set-operation state has no event-time column")
@@ -3483,7 +3482,7 @@ class _OverPlan(_Plan):
                 state, affected, self.partition, "left_anti"
             )
             pruned = pruned.unionByName(unaffected)
-        return pruned.localCheckpoint(eager=False), out
+        return pin(pruned), out
 
     def _step_unbounded(self, state, rows, payload):
         from pyspark.sql.window import Window
@@ -3585,7 +3584,7 @@ class _OverPlan(_Plan):
                         getattr(F, fn)(f"__m_{name}").alias(f"__m_{name}")
                     )
             new_state = merged.agg(*folds)
-        return new_state.localCheckpoint(eager=False), out
+        return pin(new_state), out
 
     def _expire(self, state, watermark):
         if self.rows is None and self.range_us is None:
@@ -3710,7 +3709,7 @@ class _DedupRowPlan(_Plan):
                 state, affected, self.keys, "left_anti"
             ).unionByName(best)
         )
-        return new_state.localCheckpoint(eager=False), delta
+        return pin(new_state), delta
 
     def _expire(self, state, watermark):
         return expire_state(state, watermark, self.order)

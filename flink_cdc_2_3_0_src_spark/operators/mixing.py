@@ -30,6 +30,7 @@ from flink_cdc_2_3_0_src_spark.functions.hashing import (
     sql_tokens,
     tokens,
 )
+from flink_cdc_2_3_0_src_spark.io import pin
 
 # keep-rate resolution: parts-per-million of the content-hash space
 _PPM = 1_000_000
@@ -215,10 +216,9 @@ def token_budget_select(
     # boundary-bucket pick) — without this, each reference re-runs the
     # scan+tokenize+aggregate subtree (double-typed group keys defeat
     # Spark's exchange reuse across the references)
-    per_q = (
-        per_s.groupBy("quality")
-        .agg(F.sum("tok_sb").alias("tok_q"))
-        .localCheckpoint(eager=True)
+    per_q = pin(
+        per_s.groupBy("quality").agg(F.sum("tok_sb").alias("tok_q")),
+        fanout=True,
     )
     tot = per_q.agg(
         F.floor(

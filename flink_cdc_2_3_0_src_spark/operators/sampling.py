@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_cdc_2_3_0_src_spark.functions.hashing import sql_tokens, tokens
+from flink_cdc_2_3_0_src_spark.io import pin
 
 _P = 2_147_483_647  # 2^31 - 1
 # two fixed affine rounds decorrelate sequential doc_ids; classic LCG
@@ -76,13 +77,12 @@ def priority_sample(
     d = docs.select("doc_id", "source", w.alias("w"))
     keyed = d.select("doc_id", "source", "w", *_priority_cols())
     # top-(k+1): per-partition heaps + driver merge (TakeOrderedAndProject).
-    # localCheckpoint pins the k+1-row result so the tau branch below
-    # reuses it instead of re-scanning the corpus (same pattern as the
-    # CMS vocabulary pass) — exactly one FileScan in the final plan.
-    top = (
-        keyed.orderBy(F.col("priority_key").desc(), F.col("doc_id"))
-        .limit(k + 1)
-        .localCheckpoint(eager=True)
+    # pin the k+1-row result so the tau branch below reuses it instead
+    # of re-scanning the corpus (same pattern as the CMS vocabulary
+    # pass) — exactly one FileScan in the final plan.
+    top = pin(
+        keyed.orderBy(F.col("priority_key").desc(), F.col("doc_id")).limit(k + 1),
+        fanout=True,
     )
     # the frame below is <= k+1 rows: a single-partition window is bounded
     # by construction, not by data size

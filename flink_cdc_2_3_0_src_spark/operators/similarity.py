@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_cdc_2_3_0_src_spark.io import pin
+
 N_HYPERPLANES = 8
 COSINE_NEARDUP_THRESHOLD = 0.4
 _HP_SCALE = 1000
@@ -404,12 +406,12 @@ def neardup_cosine_lsh(
     probability (1 - theta/pi)^planes — the standard SimHash recall
     trade; exact cosine verifies every candidate.
     """
-    base = (
+    # materialize before the self-join: both join sides otherwise
+    # re-run the bucket UDF over the whole corpus
+    base = pin(
         emb.select("vec_id", _vec().alias("v"))
-        .withColumn("bucket", _bucket_udf(dim)(F.col("v")))
-        # materialize before the self-join: both join sides otherwise
-        # re-run the bucket UDF over the whole corpus
-        .localCheckpoint(eager=True)
+        .withColumn("bucket", _bucket_udf(dim)(F.col("v"))),
+        fanout=True,
     )
     a, b = base.alias("a"), base.alias("b")
     return (

@@ -116,16 +116,15 @@ def cms_heavy_hitters(docs: DataFrame, top_k: int = 20, width: int = CMS_WIDTH) 
     (guide §5 driver chain / §2.6).  min(coalesce(n, 0)) over the d
     joined cells ≡ least(element_at(...)) with absent cells read as 0 —
     bit-identical estimates."""
-    from flink_cdc_2_3_0_src_spark.io import spread_small_scan
+    from flink_cdc_2_3_0_src_spark.io import pin, spread_small_scan
 
     toks = spread_small_scan(docs.select("text")).select(
         F.explode(tokens(F.col("text"))).alias("tok")
     )
-    vocab = (
+    vocab = pin(
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("exact_n"))
         .select("tok", "exact_n", poly_hash_expr(F.col("tok")).alias("h"))
-        .localCheckpoint(eager=False)
     )
     cells = cms_cells(vocab, width, weight_col="exact_n")
     exact = vocab.orderBy(F.col("exact_n").desc(), F.col("tok")).limit(top_k)

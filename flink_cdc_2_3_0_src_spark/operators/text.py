@@ -26,6 +26,7 @@ from flink_cdc_2_3_0_src_spark.functions.hashing import (
     sql_tokens,
     tokens,
 )
+from flink_cdc_2_3_0_src_spark.io import pin
 
 # language marker words: tiny deterministic n-gram-free LID heuristic.
 LANG_MARKERS: dict[str, list[str]] = {
@@ -909,9 +910,8 @@ def duplicated_span_hits(
     # (doc_id, pos, key) projection is a few MB per 100k docs.  (The
     # opposite trade — recompute — was originally shipped here on the
     # assumption the explode was codegen-cheap; profiling falsified it.)
-    win = win.select(
-        "doc_id", F.col("pos").cast("bigint").alias("pos"), key
-    ).localCheckpoint(eager=True)
+    pos = F.col("pos").cast("bigint").alias("pos")
+    win = pin(win.select("doc_id", pos, key), fanout=True)
     dup = (
         win.groupBy("key")
         .agg(F.count_distinct("doc_id").alias("n_docs"))
@@ -1225,7 +1225,7 @@ def bpe_train(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
     # checkpointing per round — round r re-applies r-1 folds to the
     # (vocabulary-bounded) word table, which is far cheaper than one
     # materialization job per round (r13: 2 jobs/round -> 1).
-    base = words.select("w", "cnt", syms.alias("syms")).localCheckpoint(eager=False)
+    base = pin(words.select("w", "cnt", syms.alias("syms")))
     cur_syms = F.col("syms")
     out = []
     for rank in range(1, rounds + 1):

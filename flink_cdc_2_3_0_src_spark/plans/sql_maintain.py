@@ -146,6 +146,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_cdc_2_3_0_src_spark.io import pin
 from flink_cdc_2_3_0_src_spark.model import (
     OP_COL,
     OP_DELETE,
@@ -2031,60 +2032,6 @@ def _table_rowtime(tables: dict, name: str) -> Optional[str]:
     return None
 
 
-def _ckpt(state):
-    if state is None:
-        return None
-    if isinstance(state, tuple):
-        return tuple(_ckpt(s) for s in state)
-    # plans that checkpoint their own state (match_nfa's pool, match,
-    # over, top-n) return frames already rooted at a checkpointed RDD —
-    # re-checkpointing copies the materialized rows into a new RDD via
-    # one more eager job per state frame per batch, pure overhead
-    if _is_ckpt_scan(state):
-        return state
-    return state.localCheckpoint(eager=True)
-
-
-def _is_ckpt_scan(df: DataFrame) -> bool:
-    """True when the frame IS a bare scan of checkpoint state: its
-    logical plan is a LogicalRDD whose RDD is checkpointed, marked for
-    local checkpointing (a lazy ``localCheckpoint``) or persisted — so
-    it is computed at most once and its lineage has length 1.  A
-    ``createDataFrame`` frame is also rooted at a LogicalRDD, but its
-    RDD is none of these, so it does not count."""
-    try:
-        plan = df._jdf.queryExecution().logical()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return False
-        rdd = plan.rdd()
-        level = rdd.getStorageLevel()
-        return bool(
-            rdd.isCheckpointed()
-            or rdd.isLocallyCheckpointed()
-            or level.useMemory()
-            or level.useDisk()
-        )
-    except Exception:
-        return False
-
-
-def _bare_checkpoint(df: DataFrame) -> DataFrame:
-    """A lazy local checkpoint of ``df``, re-wrapped as a plain scan of
-    the checkpointed rows.  ``localCheckpoint`` keeps the source plan's
-    constraints on its LogicalRDD, and a union with such a frame can
-    fail Spark's constraint rewrite (``NoSuchElementException: key not
-    found`` on an outer join's presence column, Spark 4.1); the
-    re-wrapped scan carries none."""
-    ck = df.localCheckpoint(eager=False)
-    spark = ck.sparkSession
-    return DataFrame(
-        spark._jsparkSession.internalCreateDataFrame(
-            ck._jdf.queryExecution().toRdd(), ck._jdf.schema(), False
-        ),
-        spark,
-    )
-
-
 def _where_over_table_state(df: DataFrame, pred_sql: str, op_col: str):
     """WHERE for the TABLE-STATE plans (min/max recompute, Top-N): the
     maintained object is ``filter(materialize(log))``, so a +I/+U image
@@ -2876,12 +2823,11 @@ class SqlMaintenanceJob:
             # (the group keeps aggregating; only emission is gated),
             # which is Flink's semantics for HAVING over an aggregate
             delta = delta.filter(F.expr(self.stmt.having))
-        self._state = _ckpt(self._state)
+        self._state = pin(self._state, fanout=True)
         # the delta is computed ONCE: the fold below materializes the
         # lazy checkpoint and the caller's action reads it back instead
         # of re-running the delta's lineage
-        if not _is_ckpt_scan(delta):
-            delta = _bare_checkpoint(delta)
+        delta = pin(delta)
         # the accumulator ALWAYS nets (even on the first batch): the
         # exchange-free calc plan (r13) may emit un-collapsed same-
         # batch ±pairs of identical projected images — the fold is
@@ -2892,9 +2838,7 @@ class SqlMaintenanceJob:
             .groupBy(*payload)
             .agg(F.sum(MULT_COL).alias(MULT_COL))
         )
-        self._acc = merged.filter(F.col(MULT_COL) != 0).localCheckpoint(
-            eager=True
-        )
+        self._acc = pin(merged.filter(F.col(MULT_COL) != 0), fanout=True)
         return delta
 
     def delta_changelog(self, delta: DataFrame, batch_id: int) -> DataFrame:
@@ -2999,7 +2943,9 @@ class SqlMaintenanceJob:
         forgets state, not emitted results)."""
         if self._state is None:
             return
-        self._state = _ckpt(self.plan.expire(self._state, watermark))
+        self._state = pin(
+            self.plan.expire(self._state, watermark), fanout=True
+        )
 
     def _select_cols(self) -> list:
         """The SELECT's output projection over the delta/result frame,
@@ -3496,7 +3442,7 @@ def replay_insert_maintained(
     # manually instead)
     static = {names[1]} if job.stmt.shape == "lookup" else set()
     if n_batches > 1:
-        logs = {k: v.localCheckpoint(eager=False) for k, v in logs.items()}
+        logs = {k: pin(v) for k, v in logs.items()}
     his = [
         logs[t].agg(F.max(seq_col)).collect()[0][0]
         for t in names

@@ -22,6 +22,7 @@ from flink_cdc_2_3_0_src_spark.model import OP_COL, OP_DELETE, SEQ_COL
 from flink_cdc_2_3_0_src_spark.operators.changelog import (
     materialize,
     normalize_upsert,
+    seq_range_conditions,
     signed_agg,
     signed_count,
 )
@@ -144,7 +145,7 @@ def oracle_sql() -> dict[str, str]:
     return {k: _REGISTRY[k][1] for k in _ordered() if _REGISTRY[k][1] is not None}
 
 
-from flink_cdc_2_3_0_src_spark.io import load_table as ld  # noqa: E402
+from flink_cdc_2_3_0_src_spark.io import load_table as ld, pin  # noqa: E402
 
 
 def dec(c):
@@ -944,14 +945,13 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
     one = F.lit(1).cast("decimal(18,2)")
-    revenue = (
-        l.groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(
+    revenue = pin(  # reused twice: join input + max subquery
+        l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
             F.sum(dec("l_extendedprice") * (one - dec("l_discount")))
             .cast("double")
             .alias("total_revenue")
-        )
-        .localCheckpoint()  # reused twice: join input + max subquery
+        ),
+        fanout=True,
     )
     mx = revenue.agg(F.max("total_revenue").alias("m"))
     s = ld(spark, sf_dir, "supplier")
@@ -2705,10 +2705,6 @@ def sketch_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_hll_state,
     )
 
-    from flink_cdc_2_3_0_src_spark.operators.changelog import (
-        seq_range_conditions,
-    )
-
     docs = ld(spark, sf_dir, "documents")
     hi = docs.agg(F.max("doc_id")).collect()[0][0]
     if hi is None:
@@ -2717,9 +2713,7 @@ def sketch_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         return hll_distinct(docs, m=256)
     state = None
     for cond in seq_range_conditions(hi, 4, "doc_id"):
-        state = merge_hll_state(
-            state, docs.filter(cond), m=256
-        ).localCheckpoint(eager=True)
+        state = pin(merge_hll_state(state, docs.filter(cond), m=256), fanout=True)
     return hll_state_estimate(state, m=256)
 
 
@@ -2749,10 +2743,6 @@ def sketch_hist_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_hist_state,
     )
 
-    from flink_cdc_2_3_0_src_spark.operators.changelog import (
-        seq_range_conditions,
-    )
-
     docs = ld(spark, sf_dir, "documents")
     lo_hi = docs_token_counts(docs).agg(F.min("v"), F.max("v")).collect()[0]
     if lo_hi[0] is None:
@@ -2761,9 +2751,9 @@ def sketch_hist_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi = docs.agg(F.max("doc_id")).collect()[0][0]
     state = None
     for cond in seq_range_conditions(hi, 4, "doc_id"):
-        state = merge_hist_state(
-            state, docs.filter(cond), vmin, vmax
-        ).localCheckpoint(eager=True)
+        state = pin(
+            merge_hist_state(state, docs.filter(cond), vmin, vmax), fanout=True
+        )
     return hist_state_quantiles(state, vmin, vmax)
 
 
@@ -2975,18 +2965,9 @@ def knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi = emb.agg(F.max("vec_id")).collect()[0][0]
     if hi is None:
         return _sim.knn_graph(emb)
-    n_batches, state = 3, None
-    for i in range(n_batches):
-        lo = i * (int(hi) + 1) // n_batches
-        up = (i + 1) * (int(hi) + 1) // n_batches
-        cond = (F.col("vec_id") >= lo) & (F.col("vec_id") < up)
-        if i == n_batches - 1:
-            cond = F.col("vec_id") >= lo
-        state = merge_knn_state(state, emb.filter(cond))
-        state = (
-            state[0].localCheckpoint(eager=True),
-            state[1].localCheckpoint(eager=True),
-        )
+    state = None
+    for cond in seq_range_conditions(hi, 3, "vec_id"):
+        state = pin(merge_knn_state(state, emb.filter(cond)), fanout=True)
     return state[1]
 
 

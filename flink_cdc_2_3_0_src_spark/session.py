@@ -9,7 +9,9 @@ cluster master; tests use local[N].
 from __future__ import annotations
 
 import os
+import threading
 
+from pyspark.logger import PySparkLogger
 from pyspark.sql import SparkSession
 
 # Tuned defaults. At 100 TB these are overridden per-job, but every value
@@ -64,16 +66,31 @@ class SqlParseError(ValueError):
     is at fault, not the JVM or its py4j transport."""
 
 
+# PySpark logs a captured SQL error with its JVM stack trace when the
+# exception is built (logger SQLQueryContextLogger); catalyst_parse
+# reports a refused parse as SqlParseError instead, so the records of
+# the thread that is parsing are dropped while it parses.
+_PARSING = threading.local()
+
+
+def _not_parsing(record) -> bool:
+    return not getattr(_PARSING, "active", False)
+
+
 def catalyst_parse(text: str, kind: str = "plan", spark=None):
     """Parse ``text`` with the session's own SQL parser, without
     resolving any name: ``kind="plan"`` returns the unresolved
     LogicalPlan, ``kind="expression"`` the unresolved Expression (both
     py4j handles).  The session is ``spark``, else the active one, else
     :func:`get_spark`'s.  A Catalyst ParseException becomes
-    :class:`SqlParseError`; a transport or JVM failure propagates as
-    itself, so infrastructure errors never read as bad SQL."""
+    :class:`SqlParseError`, and PySpark's log record of it is dropped;
+    a transport or JVM failure propagates as itself, so infrastructure
+    errors never read as bad SQL."""
     spark = spark or SparkSession.getActiveSession() or get_spark()
     parser = spark._jsparkSession.sessionState().sqlParser()
+    # created as a PySparkLogger: PySpark logs to it with extra keywords
+    PySparkLogger.getLogger("SQLQueryContextLogger").addFilter(_not_parsing)
+    _PARSING.active = True
     try:
         if kind == "plan":
             return parser.parsePlan(text)
@@ -91,3 +108,5 @@ def catalyst_parse(text: str, kind: str = "plan", spark=None):
         ):
             raise
         raise SqlParseError(str(exc)) from None
+    finally:
+        _PARSING.active = False

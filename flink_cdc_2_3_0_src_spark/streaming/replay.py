@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_cdc_2_3_0_src_spark.io import pin
 from flink_cdc_2_3_0_src_spark.model import SEQ_COL
 
 
@@ -31,10 +32,10 @@ def write_replay_files(log: DataFrame, out_dir: str, n_files: int = 5) -> T.Stru
     the file-stream source replays oldest-first."""
     os.makedirs(out_dir, exist_ok=True)
     schema = log.schema
-    tagged = (
+    tagged = pin(  # materialize the range assignment once
         log.repartitionByRange(n_files, F.col(SEQ_COL))
-        .withColumn("_file", F.spark_partition_id())
-        .localCheckpoint()  # materialize the range assignment once
+        .withColumn("_file", F.spark_partition_id()),
+        fanout=True,
     )
     for i in range(n_files):
         part = (

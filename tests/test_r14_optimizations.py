@@ -6,11 +6,11 @@ with output contractually identical:
   - _MatchNfaPlan._scan: explicit repartition before the grouped-
     pandas NFA scan (AQE's size-based coalescing had folded every key
     into ONE task — 10-16s per batch at sf0.1);
-  - _ckpt: skips frames that are already checkpoint scans (plans that
-    self-checkpoint state were paying a second eager materialization
-    job per state piece per batch) — but still materializes a
-    LogicalRDD-rooted frame whose RDD is neither checkpointed nor
-    persisted (``createDataFrame``);
+  - io.pin: skips frames that are already
+    checkpoint scans (plans that self-checkpoint state were paying a
+    second eager materialization job per state piece per batch) — but
+    still materializes a LogicalRDD-rooted frame whose RDD is neither
+    checkpointed nor persisted (``createDataFrame``);
   - cms_heavy_hitters: the probe reads cells through a broadcast join
     instead of a driver collect folded back as literal arrays
     (min(coalesce(n,0)) over d joined cells == least(element_at(...)));
@@ -70,43 +70,35 @@ def test_nfa_explode_repartitions_before_grouped_pandas(spark):
 
 
 def test_ckpt_skips_already_checkpointed_frames(spark):
-    from flink_cdc_2_3_0_src_spark.plans.sql_maintain import (
-        _ckpt,
-        _is_ckpt_scan,
-    )
+    from flink_cdc_2_3_0_src_spark.io import pin
 
     df = spark.range(3).withColumn("v", F.col("id") * 2)
-    assert not _is_ckpt_scan(df)
+    assert pin(df) is not df
     ck = df.localCheckpoint(eager=True)
-    assert _is_ckpt_scan(ck)
     # idempotent: the SAME frame comes back, no re-materialization
-    assert _ckpt(ck) is ck
+    assert pin(ck) is ck
     # non-checkpointed frames still get checkpointed
-    out = _ckpt(df)
-    assert out is not df and _is_ckpt_scan(out)
+    out = pin(df)
+    assert out is not df and pin(out) is out
     # tuples recurse, None passes through
-    t = _ckpt((ck, None, df))
-    assert t[0] is ck and t[1] is None and _is_ckpt_scan(t[2])
+    t = pin((ck, None, df))
+    assert t[0] is ck and t[1] is None and pin(t[2]) is t[2]
     # a lazy checkpoint is checkpoint state too (marked, not yet run)
     lazy = df.localCheckpoint(eager=False)
-    assert _is_ckpt_scan(lazy) and _ckpt(lazy) is lazy
+    assert pin(lazy) is lazy
 
 
 def test_ckpt_materializes_create_dataframe_state(spark):
     """A ``createDataFrame`` frame is rooted at a LogicalRDD too, but
     its RDD is neither checkpointed nor persisted: it is not a
     checkpoint scan, so state built from it still gets materialized."""
-    from flink_cdc_2_3_0_src_spark.plans.sql_maintain import (
-        _ckpt,
-        _is_ckpt_scan,
-    )
+    from flink_cdc_2_3_0_src_spark.io import pin
 
     state = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
     root = state._jdf.queryExecution().logical().getClass().getSimpleName()
     assert root == "LogicalRDD"
-    assert not _is_ckpt_scan(state)
-    out = _ckpt(state)
-    assert out is not state and _is_ckpt_scan(out)
+    out = pin(state)
+    assert out is not state and pin(out) is out
     assert sorted(map(tuple, out.collect())) == [(1, "a"), (2, "b")]
 
 

@@ -4155,3 +4155,53 @@ def test_catalyst_front_end_reads_the_statement_text():
             "INSERT INTO s SELECT g, SUM(v) AS sv FROM t "
             "FOR SYSTEM_TIME AS OF t.ts GROUP BY g"
         )
+
+
+def test_refused_parse_raises_without_logging_a_jvm_trace(spark, capfd):
+    """A statement or ORDER BY item Catalyst refuses surfaces once, as
+    SqlParseError (a ValueError) — PySpark's ERROR record of the
+    captured ParseException, with its JVM stack trace, must not reach
+    stderr.  A transport failure is not bad SQL: it propagates as
+    itself."""
+    from py4j.protocol import Py4JNetworkError
+
+    from flink_cdc_2_3_0_src_spark.operators.changelog import _parse_order_sql
+    from flink_cdc_2_3_0_src_spark.session import (
+        SqlParseError,
+        catalyst_parse,
+    )
+
+    capfd.readouterr()
+    # a typed-literal error carries a SQL query context, which is what
+    # makes PySpark log it; a plain syntax error is refused too
+    for bad in ("SELECT DATE 'not-a-date' AS d", "SELECT g,,"):
+        with pytest.raises(SqlParseError):
+            parse_insert_select(f"INSERT INTO s {bad} FROM t")
+    for bad in ("DATE 'nope' DESC", "v DESC NULLS SIDEWAYS"):
+        with pytest.raises(ValueError, match="order_sql item"):
+            _parse_order_sql(bad)
+    err = capfd.readouterr().err
+    for leak in ("ParseException", "SQLQueryContextLogger", "org.apache.spark"):
+        assert leak not in err, err
+
+    class _Parser:
+        def parsePlan(self, text):
+            raise Py4JNetworkError("answer from the JVM was empty")
+
+    class _Session:
+        def sessionState(self):
+            return self
+
+        def sqlParser(self):
+            return _Parser()
+
+    class _Spark:
+        _jsparkSession = _Session()
+
+    with pytest.raises(Py4JNetworkError):
+        catalyst_parse("SELECT 1", spark=_Spark())
+    # the log filter is scoped to the parse: a later captured error on
+    # this thread is logged as PySpark logs it
+    from flink_cdc_2_3_0_src_spark.session import _PARSING
+
+    assert not _PARSING.active
