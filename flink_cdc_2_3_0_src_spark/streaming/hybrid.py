@@ -11,11 +11,15 @@ implements (docs/content/connectors/mysql-cdc.md:540-552, SURVEY §3.1):
               HW) or its key falls in a finished chunk with pos > that
               chunk's HW (A10)
 
-Spark mapping: the snapshot phase is a batch job (one partition per
-chunk, range predicates pushed down); the stream phase is Structured
-Streaming (or an incremental batch) with the chunk-HW filter applied as
-a broadcast join / literal predicate. Chunk progress is checkpointed in
-a JSON manifest (A18) so a restart resumes mid-snapshot.
+Spark mapping: the snapshot phase is one keyed pass, not one job per
+chunk. A CASE expression built from the chunk ranges gives every log row
+its chunk's high watermark, and materialize(log[seq <= chunk_hw(key)])
+yields all chunk images from a single shuffle (a chunk scan at LW plus
+its backfill in (LW, HW] is exactly the chunk's state at HW). The stream
+phase is Structured Streaming (or an incremental batch) filtered by the
+same chunk-HW expression, or by a broadcast join at many chunks. Chunk
+progress is checkpointed in a JSON manifest (A18) so a restart resumes
+mid-snapshot.
 
 The test dialect drives this against the driver's parquet tables with
 the scripted events log as the "binlog": the database state at offset T
@@ -29,12 +33,11 @@ import os
 from dataclasses import asdict, dataclass, field
 from typing import Callable, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_cdc_2_3_0_src_spark.model import (
     OP_COL,
-    OP_DELETE,
     OP_INSERT,
     SEQ_COL,
     ChunkRange,
@@ -90,6 +93,17 @@ class SnapshotManifest:
         return max((c.high_watermark for c in self.chunks), default=0)
 
 
+def chunk_hw(key: str, bracketed: Sequence[tuple[ChunkRange, int]]) -> Column:
+    """High watermark of the chunk a row's ``key`` falls in, NULL when no
+    chunk covers it (or the key is NULL). Chunks are disjoint, so the
+    first matching CASE branch is the only one."""
+    hw = None
+    for rng, high in bracketed:
+        cond, val = F.expr(rng.predicate_sql(key)), F.lit(high).cast("long")
+        hw = F.when(cond, val) if hw is None else hw.when(cond, val)
+    return F.lit(None).cast("long") if hw is None else hw
+
+
 class HybridPipeline:
     """Snapshot + stream reconciliation over an upsert changelog.
 
@@ -97,9 +111,8 @@ class HybridPipeline:
     ----------
     log : full upsert changelog DataFrame (key..., payload..., _op, _seq)
     keys : primary-key columns
-    get_offset : () -> int — "SHOW MASTER STATUS" of the test dialect;
-        by default the max _seq in the log (the log tip). Injectable so
-        tests can freeze time per chunk (watermark bracketing, A6).
+    manifest_path : JSON file the snapshot phase records chunk
+        watermarks in and resumes from (A18); None keeps them in memory.
     """
 
     def __init__(
@@ -110,31 +123,37 @@ class HybridPipeline:
         manifest_path: Optional[str] = None,
     ) -> None:
         self.spark = spark
-        # the snapshot phase reads the log 2x per chunk (chunk image +
-        # backfill slice) and the stream phase once more — persist the
-        # decoded changelog so each pass is a cached-columnar read, not a
-        # re-decode (a real dialect pays the chunk SELECT on the DB
-        # instead; this is the test-dialect equivalent)
-        self.log = log.persist()
+        # not persisted: a run reads the log twice (one snapshot pass,
+        # one stream pass), and filling a cache costs more than it saves
+        self.log = log
         self.keys = list(keys)
         self.manifest_path = manifest_path
 
     # ---- test-dialect database primitives ----
 
-    def db_state_at(self, offset: int, where=None) -> DataFrame:
+    def db_state_at(self, offset, where=None) -> DataFrame:
         """Materialized table state at a log offset (what a chunk SELECT
         would see in a real database).
 
-        ``where`` is an optional predicate over the KEY columns (a chunk
-        range). Because materialize() groups by the full key, a filter
-        on key columns commutes with it — pushing it below the shuffle
-        means a chunk scan shuffles only its range, not the whole log
-        (and a real dialect's chunk SELECT pushes the same WHERE to the
-        database)."""
-        base = self.log.filter(F.col(SEQ_COL) <= offset)
-        if where is not None:
-            base = base.filter(where)
-        return materialize(base, self.keys)
+        ``offset`` may also be a Column that varies per row by key (NULL
+        drops the row): that is how every chunk's image comes from one
+        shuffle. ``where`` is an optional Column predicate over the KEY
+        columns (a chunk range); materialize() groups by the full key, so
+        it commutes with the group-by and is applied below the shuffle."""
+        hw = F.lit(offset) if where is None else F.when(where, offset)
+        return materialize(self.log.filter(F.col(SEQ_COL) <= hw), self.keys)
+
+    def _images(
+        self, key: str, bracketed: Sequence[tuple[ChunkRange, int]]
+    ) -> DataFrame:
+        """Every chunk's image at its own high watermark, op=+I and
+        _seq=HW (snapshot rows are INSERTs whose ts is zeroed in the
+        reference; the seq lets downstream merge order snapshot vs
+        stream rows)."""
+        hw = chunk_hw(key, bracketed)
+        return self.db_state_at(hw).withColumn(
+            OP_COL, F.lit(OP_INSERT)
+        ).withColumn(SEQ_COL, hw)
 
     def snapshot_chunk(
         self,
@@ -144,33 +163,14 @@ class HybridPipeline:
         high_watermark: int,
     ) -> DataFrame:
         """A6/A7/A8: chunk scan at ``low_watermark`` + backfill merge of
-        log events in (low, high].
+        log events in (low, high] — the chunk's image at ``high``.
 
-        Returns the chunk's exact image at ``high_watermark`` with
-        op=+I and _seq=high (snapshot rows are INSERTs whose ts is
-        zeroed in the reference; the seq lets downstream merge order
-        snapshot vs stream rows).
+        The scan holds each key's latest event at or before ``low``, and
+        the upsert merge lets a later event in (low, high] replace it, so
+        each key ends at its latest event at or before ``high``: exactly
+        the state at ``high``, whatever ``low`` is (A8, low == high, too).
         """
-        in_range = F.expr(chunk.predicate_sql(key))
-        # chunk predicate pushed below the materialize shuffle (the split
-        # key is a key column, so the filter commutes with the group-by)
-        scan = self.db_state_at(low_watermark, where=in_range)
-        if high_watermark == low_watermark:
-            # A8: backfill skip
-            merged = scan
-        else:
-            backfill = self.log.filter(
-                (F.col(SEQ_COL) > low_watermark)
-                & (F.col(SEQ_COL) <= high_watermark)
-                & in_range
-            )
-            as_log = scan.withColumn(OP_COL, F.lit(OP_INSERT)).withColumn(
-                SEQ_COL, F.lit(low_watermark).cast("long")
-            )
-            merged = materialize(as_log.unionByName(backfill), self.keys)
-        return merged.withColumn(OP_COL, F.lit(OP_INSERT)).withColumn(
-            SEQ_COL, F.lit(high_watermark).cast("long")
-        )
+        return self._images(key, [(chunk, high_watermark)])
 
     # ---- phases ----
 
@@ -181,62 +181,54 @@ class HybridPipeline:
         watermarks: Optional[Callable[[int], tuple[int, int]]] = None,
         table: str = "t",
     ) -> tuple[DataFrame, SnapshotManifest]:
-        """Scan all chunks, recording (low, high) watermarks per chunk.
+        """Bracket all chunks, recording (low, high) watermarks per chunk,
+        and build their images in one keyed pass.
 
         ``watermarks(i) -> (low, high)`` lets tests advance the log
         between chunk scans (the real-world race the algorithm exists
-        for). Default: both = current log tip.
+        for). Default: both = current log tip, read only if a chunk
+        needs it.
         """
         manifest = SnapshotManifest(table, key)
         if self.manifest_path:
             prior = SnapshotManifest.load(self.manifest_path)
             if prior is not None:
                 manifest = prior  # resume (A18)
-        done = {c.split_id for c in manifest.chunks}
-        tip = self.log.agg(F.max(SEQ_COL)).collect()[0][0] or 0
-        parts = []
+        done = {c.split_id: c.high_watermark for c in manifest.chunks}
+        tip = None
+        bracketed = []
         for i, chunk in enumerate(chunks):
             split_id = f"{table}:{i}"
             if split_id in done:
-                lw, hw = next(
-                    (c.low_watermark, c.high_watermark)
-                    for c in manifest.chunks
-                    if c.split_id == split_id
-                )
+                hw = done[split_id]
             else:
+                if watermarks is None and tip is None:
+                    tip = self.log.agg(F.max(SEQ_COL)).collect()[0][0] or 0
                 lw, hw = watermarks(i) if watermarks else (tip, tip)
                 manifest.chunks.append(
                     ChunkState(split_id, chunk.start, chunk.end, lw, hw)
                 )
                 if self.manifest_path:
                     manifest.save(self.manifest_path)
-            parts.append(self.snapshot_chunk(chunk, key, lw, hw))
-        snap = parts[0]
-        for p in parts[1:]:
-            snap = snap.unionByName(p)
-        return snap, manifest
+            bracketed.append((chunk, hw))
+        return self._images(key, bracketed), manifest
 
     def stream_filter(
         self, events: DataFrame, manifest: SnapshotManifest
     ) -> DataFrame:
         """A10: emit a log event iff it postdates its chunk's snapshot.
 
-        Pure-log fast path: events past the table max HW pass with a
-        single literal comparison (no per-chunk logic) — at scale this is
-        the steady-state filter and costs one codegen'd predicate.
+        The event's chunk HW comes from the snapshot pass's ``chunk_hw``
+        expression; keys no chunk covers (and NULL keys) are held to the
+        table max HW, past which every event is in pure-log phase.
         """
-        max_hw = manifest.max_high_watermark()
-        per_chunk = F.lit(False)
-        for c in manifest.chunks:
-            rng = ChunkRange(c.start, c.end)
-            per_chunk = per_chunk | (
-                F.expr(rng.predicate_sql(manifest.key))
-                & (F.col(SEQ_COL) > c.high_watermark)
-            )
+        hw = chunk_hw(
+            manifest.key,
+            [(ChunkRange(c.start, c.end), c.high_watermark) for c in manifest.chunks],
+        )
         return events.filter(
             self._always_emit(events)
-            | (F.col(SEQ_COL) > F.lit(max_hw))
-            | per_chunk
+            | (F.col(SEQ_COL) > F.coalesce(hw, F.lit(manifest.max_high_watermark())))
         )
 
     @staticmethod
@@ -256,7 +248,7 @@ class HybridPipeline:
         """A10 at scale: the per-chunk HW filter as a broadcast range
         join against the chunk-metadata table.
 
-        ``stream_filter`` builds a literal OR-chain — fine for hundreds
+        ``stream_filter`` builds a literal CASE chain — fine for hundreds
         of chunks, pathological for 100k (expression tree size). Here
         the manifest becomes a tiny broadcast DataFrame and the filter
         is one join: an event passes if it is past the table max HW

@@ -128,9 +128,9 @@ def tidb_snapshot_stream(
     key = keys[0]
     # the resolution joins feed both phases and the snapshot state feeds
     # one range-scan branch per key range — persist both so each branch
-    # is a cached-columnar read instead of a plan re-execution (same
-    # test-dialect reasoning as HybridPipeline.log; a real dialect pays
-    # the per-range SELECT on TiKV instead)
+    # is a cached-columnar read instead of a re-run of the joins and the
+    # materialize shuffle (a real dialect pays the per-range SELECT on
+    # TiKV instead)
     committed = resolve_two_phase(raw, resolved_ts=None, key=key).persist()
     at_snap = materialize(
         committed.filter(F.col(SEQ_COL) <= resolved_ts), keys

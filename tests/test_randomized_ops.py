@@ -121,37 +121,78 @@ def test_duplicated_spans_matches_brute_force(spark):
     assert got == sorted(exp)
 
 
-def test_hybrid_pipeline_random_watermark_brackets(spark):
+def test_hybrid_pipeline_random_watermark_brackets(spark, tmp_path):
     """The DBLog reconciliation must produce the exact oracle state for
     ANY watermark bracketing — chunks snapshotting at wildly different
     moments, backfill-skip (lw == hw), brackets at the log tip, and
-    narrow/wide backfill windows.  Seeded randomized sweep."""
-    import random
+    narrow/wide backfill windows.  Seeded randomized sweep.
 
-    from flink_cdc_2_3_0_src_spark.model import ChunkRange
+    Each trial also checks the snapshot images themselves, on every
+    column, against a per-chunk reference: the chunk's rows of
+    materialize(log[_seq <= hw]) tagged +I at hw.  Extra inputs: a run
+    resumed from a manifest that a crashed run left after two chunks,
+    and a string split key."""
+    from collections import Counter
+
+    from flink_cdc_2_3_0_src_spark.model import OP_COL, OP_INSERT, SEQ_COL, ChunkRange
     from flink_cdc_2_3_0_src_spark.operators.changelog import materialize
     from flink_cdc_2_3_0_src_spark.sources.scripted_log import scripted_changelog
     from flink_cdc_2_3_0_src_spark.streaming.hybrid import HybridPipeline
     from tests.conftest import SF_SMOKE
 
-    log = scripted_changelog(spark, SF_SMOKE)
-    tip = log.agg({"_seq": "max"}).collect()[0][0]
-    oracle = {
-        (r["user_id"], r["value"])
-        for r in materialize(log, ["user_id"]).collect()
-    }
-    chunks = [ChunkRange(None, 8), ChunkRange(8, 16), ChunkRange(16, None)]
+    int_log = scripted_changelog(spark, SF_SMOKE)
+    tip = int_log.agg({"_seq": "max"}).collect()[0][0]
+    str_log = int_log.withColumn(
+        "user_key", F.concat(F.lit("u-"), F.lpad(F.col("user_id"), 6, "0"))
+    )
+    int_chunks = [ChunkRange(None, 8), ChunkRange(8, 16), ChunkRange(16, None)]
+    str_chunks = [
+        ChunkRange(None, "u-000005"),
+        ChunkRange("u-000005", "u-000011"),
+        ChunkRange("u-000011", None),
+    ]
     rng = random.Random(0x5EED5)
-    for trial in range(4):
+
+    def random_brackets():
         brackets = []
-        for _ in chunks:
+        for _ in range(3):
             lw = rng.randrange(0, tip + 1)
             if rng.random() < 0.25:
                 hw = lw  # backfill skip
             else:
                 hw = rng.randrange(lw, tip + 1)
             brackets.append((lw, hw))
-        p = HybridPipeline(spark, log, ["user_id"])
-        final = p.run(chunks, "user_id", watermarks=lambda i: brackets[i])
-        got = {(r["user_id"], r["value"]) for r in final.collect()}
-        assert got == oracle, (trial, brackets)
+        return brackets
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    # (log, split key, chunks, brackets, brackets of a crashed first run)
+    trials = [(int_log, "user_id", int_chunks, random_brackets(), None)
+              for _ in range(4)]
+    trials.append((int_log, "user_id", int_chunks, random_brackets(),
+                   random_brackets()))
+    trials.append((str_log, "user_key", str_chunks, random_brackets(), None))
+    for trial, (log, key, chunks, fresh, crashed) in enumerate(trials):
+        mpath, brackets = None, fresh
+        if crashed is not None:
+            mpath = str(tmp_path / f"manifest_{trial}.json")
+            HybridPipeline(spark, log, [key], manifest_path=mpath).run_snapshot_phase(
+                chunks[:2], key, watermarks=lambda i: crashed[i])
+            brackets = crashed[:2] + fresh[2:]  # resumed chunks keep theirs
+        p = HybridPipeline(spark, log, [key], manifest_path=mpath)
+        wm = lambda i: fresh[i]  # noqa: E731
+        snap, manifest = p.run_snapshot_phase(chunks, key, watermarks=wm)
+        assert [(c.low_watermark, c.high_watermark) for c in manifest.chunks] == brackets
+        want = Counter()
+        for chunk, (_lw, hw) in zip(chunks, brackets):
+            image = materialize(
+                log.filter((F.col(SEQ_COL) <= hw) & F.expr(chunk.predicate_sql(key))),
+                [key],
+            ).withColumn(OP_COL, F.lit(OP_INSERT)).withColumn(
+                SEQ_COL, F.lit(hw).cast("long"))
+            assert image.columns == snap.columns
+            want += rows(image)
+        assert rows(snap) == want, (trial, brackets)
+        final = p.run(chunks, key, watermarks=wm)
+        assert rows(final) == rows(materialize(log, [key])), (trial, brackets)
