@@ -67,6 +67,7 @@ from flink_cdc_2_3_0_src_spark.operators.changelog import (
     merge_topn_state,
     split_csv_outside_parens,
 )
+from flink_cdc_2_3_0_src_spark.session import _Node, catalyst_parse
 
 _AGG_FNS = {"sum", "count", "avg", "min", "max"}
 
@@ -1539,58 +1540,6 @@ def parse_match_pattern(pattern: str) -> list:
     return elems
 
 
-def _split_and_conjuncts(sql: str) -> list:
-    """Top-level ``AND`` split of a predicate — outside parentheses and
-    string literals, and not the ``AND`` a top-level ``BETWEEN x AND
-    y`` owns (each BETWEEN absorbs the next AND-joined fragment)."""
-
-    def _ident(ch: str) -> bool:
-        return ch.isalnum() or ch == "_"
-
-    s = sql.strip()
-    parts, cur, depth, in_str = [], [], 0, False
-    pending_between = 0
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if in_str:
-            cur.append(ch)
-            in_str = ch != "'"
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0:
-            left_ok = i == 0 or not _ident(s[i - 1])
-            if (
-                left_ok
-                and s[i : i + 3].upper() == "AND"
-                and (i + 3 >= n or not _ident(s[i + 3]))
-            ):
-                if pending_between:
-                    pending_between -= 1
-                    cur.append(s[i : i + 3])
-                else:
-                    parts.append("".join(cur))
-                    cur = []
-                i += 3
-                continue
-            if (
-                left_ok
-                and s[i : i + 7].upper() == "BETWEEN"
-                and (i + 7 >= n or not _ident(s[i + 7]))
-            ):
-                pending_between += 1
-        cur.append(ch)
-        i += 1
-    parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
-
-
 def parse_match_pattern_ex(pattern: str):
     """``parse_match_pattern`` plus SQL:2016 PATTERN EXCLUSIONS:
     ``"A {- B+ -} C"`` → (the flattened elements of ``"A B+ C"``,
@@ -1694,148 +1643,33 @@ def parse_match_pattern_alts(pattern: str):
     return branches, excluded
 
 
-def _split_or_disjuncts(sql: str) -> list:
-    """Top-level ``OR`` split of a predicate — outside parentheses and
-    string literals (no BETWEEN complication: BETWEEN owns an AND,
-    never an OR)."""
-
-    def _ident(ch: str) -> bool:
-        return ch.isalnum() or ch == "_"
-
-    s = sql.strip()
-    parts, cur, depth, in_str = [], [], 0, False
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if in_str:
-            cur.append(ch)
-            in_str = ch != "'"
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0:
-            left_ok = i == 0 or not _ident(s[i - 1])
-            if (
-                left_ok
-                and s[i : i + 2].upper() == "OR"
-                and (i + 2 >= n or not _ident(s[i + 2]))
-            ):
-                parts.append("".join(cur))
-                cur = []
-                i += 2
-                continue
-        cur.append(ch)
-        i += 1
-    parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
+#: Catalyst's comparison and arithmetic nodes → the operator of a
+#: cross-variable ``("cmp", ..)`` / ``("bin", ..)`` spec; ``<>`` and
+#: ``!=`` parse as Not(EqualTo)
+_CMP_OPS = {
+    "EqualTo": "=", "LessThan": "<", "LessThanOrEqual": "<=",
+    "GreaterThan": ">", "GreaterThanOrEqual": ">=",
+}
+_ARITH_OPS = {"Add": "+", "Subtract": "-", "Multiply": "*", "Divide": "/"}
 
 
-def _strip_outer_parens(s: str) -> str:
-    """Strip balanced outer parentheses (literal-aware)."""
-    s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth, in_str, whole = 0, False, True
-        for j, ch in enumerate(s):
-            if in_str:
-                in_str = ch != "'"
-                continue
-            if ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and j < len(s) - 1:
-                    whole = False
-                    break
-        if not whole or depth != 0:
-            break
-        s = s[1:-1].strip()
-    return s
-
-
-#: comparison tokens a cross-variable conjunct may use, longest first
-#: so ``<=`` never scans as ``<``
-_CMP_TOKENS = ("<=", ">=", "<>", "!=", "==", "=", "<", ">")
-
-
-def _split_comparison(text: str):
-    """``lhs CMP rhs`` at depth 0 (literal-aware) or None."""
-    s = text
-    depth, in_str = 0, False
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if in_str:
-            in_str = ch != "'"
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-            i += 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0:
-            for tok in _CMP_TOKENS:
-                if s.startswith(tok, i):
-                    return s[:i], tok, s[i + len(tok):]
-        i += 1
-    return None
-
-
-def _split_arith_top(text: str, ops: str) -> list:
-    """Split an expression on top-level binary operators from ``ops``
-    (one-char each, e.g. ``"+-"`` or ``"*/"``), literal- and
-    paren-aware.  Returns ``[expr0, op1, expr1, ...]``.  An operator
-    directly after another operator or an opening paren is UNARY and
-    does not split (``a * -b``)."""
-    parts, cur = [], []
-    depth, in_str = 0, False
-    prev_sig = ""  # last non-space char seen
-    for ch in text:
-        if in_str:
-            cur.append(ch)
-            in_str = ch != "'"
-            continue
-        if ch == "'":
-            in_str = True
-            cur.append(ch)
-            prev_sig = ch
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if (
-            depth == 0
-            and ch in ops
-            and prev_sig
-            and prev_sig not in "+-*/("
-        ):
-            parts.append("".join(cur))
-            parts.append(ch)
-            cur = []
-        else:
-            cur.append(ch)
-        if not ch.isspace():
-            prev_sig = ch
-    parts.append("".join(cur))
-    return parts
-
-
-#: plain numeric literal an arithmetic comparison side may embed —
-#: parsed as int (exact with Decimal columns) or Decimal (so
-#: DECIMAL-typed column arithmetic stays exact; a float column
-#: coerces the literal to float at evaluation, see ``_arith``)
-_NUM_LIT_RE = re.compile(r"^[0-9]+(?:\.[0-9]+)?$")
+def _var_call(n: _Node, names) -> Optional[tuple]:
+    """(NAME, variable, column or ``*``, offset or None) of a call of
+    one of ``names`` over one pattern variable — ``LAST(V.col, k)``,
+    ``SUM(V.col)``, ``COUNT(V.*)`` — with no DISTINCT, FILTER or
+    IGNORE NULLS; else None."""
+    c = n.call(names)
+    if not c or len(c[1]) not in (1, 2) or n.modified():
+        return None
+    arg, *off = c[1]
+    k = off[0].uint() if off else None
+    if off and k is None:
+        return None
+    if arg.name == "UnresolvedStar" and "." in arg.text():
+        q = arg.text().partition(".")[0].strip(), "*"
+    else:
+        q = arg.qref()
+    return None if q is None else (c[0].upper(), q[0], q[1], k)
 
 
 def _cmp_ok(op: str, a, b) -> bool:
@@ -2180,28 +2014,33 @@ class _MatchNfaPlan(_Plan):
 
     * **input**: append-only (+I — Flink's MATCH_RECOGNIZE requires
       it); NULL event times drop (window rule).
-    * **defines**: ``{var: sql}`` — top-level AND conjuncts split in
-      two classes.  ROW-LOCAL conjuncts (bare identifiers and
+    * **defines**: ``{var: sql}``, each parsed by Spark's own parser
+      (``catalyst_parse(sql, "expression")``) and read as an
+      unresolved tree.  Its top-level ``And`` nodes are the conjuncts,
+      in two classes.  ROW-LOCAL conjuncts (bare identifiers and
       ``<var>.col`` self-references bind to the row being classified,
       SQL:2016) are PRE-computed as JVM boolean columns via ``F.expr``
-      before the pandas step, so Python only consults bitmaps.
+      before the pandas step, so Python only consults bitmaps; their
+      SQL is the user's text at the node's span, with each ``<var>.``
+      qualifier and ``PREV(col[, k])`` replaced at its own span.
       CROSS-VARIABLE conjuncts (r12) — ``B.price > A.price``,
       ``B.price > LAST(A.price)`` / ``FIRST(A.price[, k])`` — are
-      OR-combinable disjunct lists (r13) of comparisons ``<side>
-      <cmp> <side>`` where each side is an ARITHMETIC EXPRESSION
-      (``+ - * /``, r13) over navigation references, numeric
-      literals, and row-local subexpressions (JVM-precomputed) —
-      ``B.price > A.price * 1.1`` and ``B.v - FIRST(B.v) >= 10``
-      (the threshold-breakout predicates) parse directly; a
-      row-local boolean may stand as a whole disjunct (``B.qty > 5
-      OR B.price > A.price``).  They evaluate inside the NFA scan
-      against the partial match's bound rows, Flink's
-      IterativeCondition-over-partial-match semantics.  A bare
-      ``V.col`` cross-reference means ``LAST(V.col)`` (SQL:2016);
-      unbound navigation is NULL → comparison not satisfied, and
-      NULL/type-mismatched arithmetic is NULL (unknown-is-false).
-      Forward references (a variable bound later in the pattern)
-      refuse at construction.
+      ``Or`` lists of disjuncts (r13), each a comparison node
+      (``= < <= > >= <>``) whose sides are ``Add``/``Subtract``/
+      ``Multiply``/``Divide``/unary-minus trees over navigation
+      references, numeric literals, and row-local subexpressions
+      (JVM-precomputed) — ``B.price > A.price * 1.1`` and ``B.v -
+      FIRST(B.v) >= 10`` (the threshold-breakout predicates) parse
+      directly; a row-local boolean may stand as a whole disjunct
+      (``B.qty > 5 OR B.price > A.price``).  A CASE, function call
+      or BETWEEN is one node, so its inner AND/OR never splits.  The
+      disjuncts evaluate inside the NFA scan against the partial
+      match's bound rows, Flink's IterativeCondition-over-partial-
+      match semantics.  A bare ``V.col`` cross-reference means
+      ``LAST(V.col)`` (SQL:2016); unbound navigation is NULL →
+      comparison not satisfied, and NULL/type-mismatched arithmetic
+      is NULL (unknown-is-false).  Forward references (a variable
+      bound later in the pattern) refuse at construction.
     * **measures**: SQL aggregate expressions over the matched rows'
       exploded frame (payload + ``__var``/``__pos``) — the bridge
       rewrites ``FIRST/LAST/SUM/MIN/MAX/AVG/COUNT(V.col)`` into
@@ -2271,29 +2110,6 @@ class _MatchNfaPlan(_Plan):
 
     kind = "match_nfa"
 
-    #: physical row navigation in DEFINE predicates: ``PREV(col[, k])``
-    #: reads the k-th previous INPUT row's column (per key, event-time
-    #: order) — SQL:2016 PREV, which for contiguous patterns coincides
-    #: with "the previous row of the match".  Rewritten to a JVM LAG
-    #: column before the scan, so it stays a row-local bitmap.
-    _PREV_RE = re.compile(
-        r"(?i)\bPREV\s*\(\s*([A-Za-z_]\w*)\s*(?:,\s*(\d+)\s*)?\)"
-    )
-    #: FIRST/LAST(V.col[, k]) — logical navigation over the partial
-    #: match's rows bound to V (SQL:2016 cross-variable DEFINEs)
-    _NAV_FULL_RE = re.compile(
-        r"(?is)^\s*(FIRST|LAST)\s*\(\s*([A-Za-z_]\w*)\s*\.\s*"
-        r"([A-Za-z_]\w*)\s*(?:,\s*(\d+)\s*)?\)\s*$"
-    )
-    _NAV_CALL_RE = re.compile(
-        r"(?i)\b(?:FIRST|LAST)\s*\(\s*[A-Za-z_]\w*\s*\.\s*"
-        r"[A-Za-z_]\w*\s*(?:,\s*\d+\s*)?\)"
-    )
-    _NAV_ANY_RE = re.compile(r"(?i)\b(?:FIRST|LAST)\s*\(\s*[A-Za-z_]\w*\s*\.")
-    _QREF_RE = re.compile(r"(?<![\w.])([A-Za-z_]\w*)\s*\.\s*([A-Za-z_]\w*)")
-    _QREF_FULL_RE = re.compile(
-        r"^\s*([A-Za-z_]\w*)\s*\.\s*([A-Za-z_]\w*)\s*$"
-    )
     _CONSUMED = "__cns"
 
     def __init__(self, opts, ttl, op_col, seq_col) -> None:
@@ -2374,17 +2190,9 @@ class _MatchNfaPlan(_Plan):
                 f"the pattern ({sorted(pat_vars)})"
             )
         # an undefined pattern variable matches any row (SQL:2016);
-        # PREV(col[, k]) navigation rewrites to LAG columns computed
-        # JVM-side over the key's (order, seq) sequence
+        # PREV(col[, k]) navigation reads LAG columns computed JVM-side
+        # over the key's (order, seq) sequence
         self.prev_cols: set = set()
-
-        def _prev_repl(m):
-            col, k = m.group(1), int(m.group(2) or 1)
-            if k < 1:
-                raise ValueError("PREV offset must be >= 1")
-            self.prev_cols.add((col, k))
-            return f"__prev{k}_{col}"
-
         self.cur_exprs: list = []  # [(__cx<i>, row-local side SQL)]
         self.nav_cols: set = set()  # raw columns navigation reads
         self.defines = {}  # var -> AND of row-local conjuncts (JVM)
@@ -2393,8 +2201,7 @@ class _MatchNfaPlan(_Plan):
         #: variable wherever it sits across alternation branches)
         self.cross_by_var: dict = {}
         for v in self._pat_vars:
-            raw = self._PREV_RE.sub(_prev_repl, defines.get(v, "true"))
-            local, cross = self._compile_define(v, raw)
+            local, cross = self._compile_define(v, defines.get(v, "true"))
             self.defines[v] = local
             self.cross_by_var[v] = cross
         self.max_prev = max(
@@ -2487,16 +2294,18 @@ class _MatchNfaPlan(_Plan):
 
     # -- DEFINE compilation --------------------------------------------
     def _compile_define(self, var: str, sql: str):
-        """Split one DEFINE into (row-local SQL, [cross conjunct
-        specs]).  Row-local conjuncts keep full SQL power (they become
-        one JVM boolean column); cross-variable conjuncts are parsed
-        to ``(side, cmp, side)`` evaluated in the NFA scan."""
+        """Split one DEFINE, as Catalyst parses it, into (row-local SQL,
+        [cross conjunct specs]).  Row-local conjuncts keep full SQL
+        power (they become one JVM boolean column); cross-variable
+        conjuncts become ``(side, cmp, side)`` specs evaluated in the
+        NFA scan."""
+        root = _Node(catalyst_parse(sql, "expression"), sql)
+        self.prev_cols |= {p for n in root.walk() if (p := self._prev(n))}
         local, cross = [], []
-        for conj in _split_and_conjuncts(sql):
-            conj = _strip_outer_parens(conj)
+        for conj in root.operands("And"):
             spec = self._compile_conjunct(var, conj)
             if spec is None:
-                local.append(self._strip_self_quals(var, conj))
+                local.append(self._local_sql(var, conj))
             else:
                 cross.append(spec)
         return (
@@ -2504,75 +2313,107 @@ class _MatchNfaPlan(_Plan):
             cross,
         )
 
-    def _code_segments(self, sql: str) -> str:
-        """The non-string-literal text of a SQL fragment."""
-        return "".join(
-            seg
-            for i, seg in enumerate(re.split(r"('(?:[^']|'')*')", sql))
-            if i % 2 == 0
-        )
-
-    def _compile_conjunct(self, var: str, text: str):
+    def _compile_conjunct(self, var: str, conj):
         """None when the conjunct is row-local; else a cross spec —
         a list of OR-combined disjuncts (r13), each ``("cmp", lhs,
         op, rhs)`` over expression-tree sides or ``("bool", __cx<i>)``
         for a row-local boolean disjunct (JVM-precomputed)."""
-        code = self._code_segments(text)
-        has_nav = bool(self._NAV_ANY_RE.search(code))
-        quals = {
-            m.group(1).upper()
-            for m in self._QREF_RE.finditer(self._NAV_CALL_RE.sub(" ", code))
-        }
-        unknown = quals - set(self._pat_vars)
+        unknown = self._refs(conj)[1] - set(self._pat_vars)
         if unknown:
             raise ValueError(
                 f"DEFINE {var} references unknown qualifier(s) "
                 f"{sorted(unknown)}; the pattern defines "
                 f"{sorted(self._pat_vars)}"
             )
-        if not has_nav and quals <= {var}:
+        if self._is_local(var, conj):
             return None
         specs = []
-        for disj in _split_or_disjuncts(text):
-            disj = _strip_outer_parens(disj)
-            dcode = self._code_segments(disj)
-            d_quals = {
-                m.group(1).upper()
-                for m in self._QREF_RE.finditer(
-                    self._NAV_CALL_RE.sub(" ", dcode)
-                )
-            }
-            if not self._NAV_ANY_RE.search(dcode) and not (
-                (d_quals - {var}) & set(self._pat_vars)
-            ):
+        for d in conj.operands("Or", grouped=True):
+            if self._is_local(var, d):
                 # a row-local disjunct next to cross ones — one JVM
                 # boolean column, consulted per candidate row
-                name = f"__cx{len(self.cur_exprs)}"
-                self.cur_exprs.append(
-                    (name, self._strip_self_quals(var, disj))
-                )
-                specs.append(("bool", name))
+                specs.append(("bool", self._cur(var, d)))
                 continue
-            sp = _split_comparison(disj)
-            if sp is None:
+            c = d.kids()[0] if d.name == "Not" else d
+            if c.name not in _CMP_OPS or (
+                d is not c and (c.name != "EqualTo" or d.span() != c.span())
+            ):
                 raise ValueError(
-                    f"DEFINE {var}: cross-variable disjunct {disj!r} "
+                    f"DEFINE {var}: cross-variable disjunct {d.text()!r} "
                     "must be a single comparison <side> <cmp> <side> "
                     "(cmp in < <= > >= = <> !=) — each side an "
                     "arithmetic (+ - * /) combination of FIRST/LAST"
                     "(V.col[, k]) / V.col navigation references, "
                     "numeric literals and row-local expressions"
                 )
-            lhs, op, rhs = sp
+            lhs, rhs = c.kids()
+            op = "<>" if d is not c else _CMP_OPS[c.name]
             specs.append(
-                (
-                    "cmp",
-                    self._compile_side(var, lhs),
-                    op,
-                    self._compile_side(var, rhs),
-                )
+                ("cmp", self._side(var, lhs), op, self._side(var, rhs))
             )
         return specs
+
+    def _refs(self, n) -> tuple:
+        """(whether ``n`` navigates — a FIRST/LAST call over a qualified
+        reference —, the upper-case qualifiers of its qualified
+        references outside complete navigation leaves)."""
+        args = n.call(("first", "last"))
+        if args and args[1] and args[1][0].has(lambda x: x.qref()):
+            if self._nav_leaf(n):
+                return True, set()
+            nav = True
+        else:
+            nav = False
+        quals = {n.qref()[0].upper()} if n.qref() else set()
+        for k in n.kids():
+            k_nav, k_quals = self._refs(k)
+            nav, quals = nav or k_nav, quals | k_quals
+        return nav, quals
+
+    def _is_local(self, var: str, n) -> bool:
+        """No navigation and no other variable's reference: ``n`` reads
+        the row being classified only."""
+        nav, quals = self._refs(n)
+        return not nav and quals <= {var}
+
+    @staticmethod
+    def _prev(n):
+        """(col, k) of a ``PREV(col[, k])`` call, else None."""
+        args = n.kids() if n.fn() == "prev" else []
+        if len(args) not in (1, 2) or args[0].col() is None:
+            return None
+        k = args[1].uint() if len(args) == 2 else 1
+        if k is None:
+            return None
+        if k < 1:
+            raise ValueError("PREV offset must be >= 1")
+        return args[0].col(), k
+
+    @staticmethod
+    def _nav_leaf(n):
+        """(var, col, is_last, off) of ``FIRST/LAST(V.col[, k])``, else
+        None."""
+        c = _var_call(n, ("first", "last"))
+        if c is None or c[2] == "*" or "." in c[2]:
+            return None
+        return c[1].upper(), c[2], c[0] == "LAST", c[3] or 0
+
+    def _nav(self, var: str, n):
+        """A navigation leaf → ``("nav", V, col, is_last, off)``:
+        ``FIRST/LAST(V.col[, k])``, or a bare ``V.col`` of another
+        pattern variable ≡ ``LAST(V.col)`` (SQL:2016's running
+        default); else None."""
+        leaf = self._nav_leaf(n)
+        q = n.qcol()
+        if leaf is None and q and q[0].upper() in self._pat_vars and (
+            q[0].upper() != var
+        ):
+            leaf = q[0].upper(), q[1], True, 0
+        if leaf is None:
+            return None
+        self._check_nav_target(var, leaf[0])
+        self.nav_cols.add(leaf[1])
+        return ("nav",) + leaf
 
     def _check_nav_target(self, var: str, v: str) -> str:
         if v not in set(self._pat_vars):
@@ -2610,134 +2451,81 @@ class _MatchNfaPlan(_Plan):
             )
         return v
 
-    def _compile_side(self, var: str, s: str):
-        """One comparison side → an expression TREE (r13): nav-free
-        sides compile whole to ``("cur", __cx<i>)`` JVM columns
-        (full SQL power preserved); sides containing navigation are
-        parsed as ``+ - * /`` arithmetic whose leaves are ``("nav",
-        var, col, is_last, off)`` navigation references, ``("lit",
-        n)`` numeric literals, and ``("cur", ...)`` row-local
-        subexpressions — ``B.price > A.price * 1.1`` and ``B.v -
-        FIRST(B.v) >= 10`` (the threshold-breakout predicates) parse
-        directly instead of refusing (the r12 rewrite-the-arithmetic
-        workaround is no longer needed)."""
-        s = _strip_outer_parens(s)
-        code = self._code_segments(s)
-        if not self._NAV_ANY_RE.search(code) and not (
-            (
-                {
-                    m.group(1).upper()
-                    for m in self._QREF_RE.finditer(code)
-                }
-                - {var}
-            )
-            & set(self._pat_vars)
-        ):
-            # nav-free side: ONE JVM column, arbitrary SQL inside
-            name = f"__cx{len(self.cur_exprs)}"
-            self.cur_exprs.append((name, self._strip_self_quals(var, s)))
-            return ("cur", name)
-        return self._parse_side_expr(var, s)
-
-    def _parse_side_expr(self, var: str, s: str):
-        """``term (('+'|'-') term)*`` — left-associative."""
-        s = _strip_outer_parens(s.strip())
-        parts = _split_arith_top(s, "+-")
-        node = self._parse_side_term(var, parts[0])
-        for op, rhs in zip(parts[1::2], parts[2::2]):
-            node = ("bin", op, node, self._parse_side_term(var, rhs))
-        return node
-
-    def _parse_side_term(self, var: str, s: str):
-        """``atom (('*'|'/') atom)*`` — binds tighter than +/-."""
-        parts = _split_arith_top(s.strip(), "*/")
-        node = self._parse_side_atom(var, parts[0])
-        for op, rhs in zip(parts[1::2], parts[2::2]):
-            node = ("bin", op, node, self._parse_side_atom(var, rhs))
-        return node
-
-    def _parse_side_atom(self, var: str, s: str):
-        s = s.strip()
-        if not s:
-            raise ValueError(
-                f"DEFINE {var}: malformed arithmetic in a "
-                "cross-variable comparison side (empty operand)"
-            )
-        if s[0] == "-":
+    def _side(self, var: str, n, top: bool = True):
+        """One comparison side → an expression TREE (r13): a nav-free
+        side compiles whole to a ``("cur", __cx<i>)`` JVM column (full
+        SQL power preserved); a side containing navigation reads
+        Catalyst's ``+ - * /`` nodes as ``("bin", op, l, r)`` whose
+        leaves are ``("nav", var, col, is_last, off)`` navigation
+        references, ``("lit", n)`` numeric literals, and ``("cur",
+        ...)`` row-local subexpressions — ``B.price > A.price * 1.1``
+        and ``B.v - FIRST(B.v) >= 10`` (the threshold-breakout
+        predicates) parse directly."""
+        if top and self._is_local(var, n):
+            return ("cur", self._cur(var, n))
+        if n.name in _ARITH_OPS:
+            lhs, rhs = n.kids()
             return (
-                "bin", "-", ("lit", 0),
-                self._parse_side_atom(var, s[1:]),
+                "bin", _ARITH_OPS[n.name],
+                self._side(var, lhs, False), self._side(var, rhs, False),
             )
-        if s[0] == "+":
-            return self._parse_side_atom(var, s[1:])
-        stripped = _strip_outer_parens(s)
-        if stripped != s:
-            return self._parse_side_expr(var, stripped)
-        m = self._NAV_FULL_RE.match(s)
-        if m:
-            mode, v, col = (
-                m.group(1).upper(), m.group(2).upper(), m.group(3)
-            )
-            off = int(m.group(4) or 0)
-            self._check_nav_target(var, v)
-            self.nav_cols.add(col)
-            return ("nav", v, col, mode == "LAST", off)
-        m = self._QREF_FULL_RE.match(s)
-        if m and m.group(1).upper() in set(self._pat_vars) and (
-            m.group(1).upper() != var
-        ):
-            v, col = m.group(1).upper(), m.group(2)
-            self._check_nav_target(var, v)
-            self.nav_cols.add(col)
-            # bare V.col ≡ LAST(V.col) — SQL:2016's running default
-            return ("nav", v, col, True, 0)
-        if _NUM_LIT_RE.match(s):
-            return (
-                "lit", int(s) if "." not in s else Decimal(s)
-            )
-        code = self._code_segments(s)
-        if self._NAV_ANY_RE.search(code):
+        if n.name == "UnaryMinus":
+            operand = self._side(var, n.kids()[0], False)
+            return ("bin", "-", ("lit", 0), operand)
+        if n.name == "UnaryPositive":
+            return self._side(var, n.kids()[0], False)
+        nav = self._nav(var, n)
+        if nav:
+            return nav
+        text = n.text()
+        if n.name == "Literal":
+            # numeric literal: int (exact with Decimal columns) or
+            # Decimal (DECIMAL-typed column arithmetic stays exact; a
+            # float column coerces it to float, see ``_arith``)
+            num = text.lstrip("-").strip()
+            whole, dot, frac = num.partition(".")
+            if whole.isdigit() and (frac.isdigit() or not dot):
+                lit = ("lit", Decimal(num) if dot else int(num))
+                return ("bin", "-", ("lit", 0), lit) if num != text else lit
+        nav, quals = self._refs(n)
+        if nav:
             raise ValueError(
-                f"DEFINE {var}: navigation inside {s!r} is not "
+                f"DEFINE {var}: navigation inside {text!r} is not "
                 "supported — only + - * / arithmetic may combine "
                 "FIRST/LAST(V.col[, k]) / V.col navigation with "
                 "literals and row-local expressions (a function call "
                 "OVER a navigation reference has no partial-match "
                 "evaluation)"
             )
-        bad = {
-            m.group(1).upper() for m in self._QREF_RE.finditer(code)
-        } - {var}
-        if bad & set(self._pat_vars):
+        if quals - {var}:
             raise ValueError(
-                f"DEFINE {var}: operand {s!r} mixes a cross-variable "
-                f"reference ({sorted(bad & set(self._pat_vars))}) into "
+                f"DEFINE {var}: operand {text!r} mixes a cross-variable "
+                f"reference ({sorted(quals - {var})}) into "
                 "a non-arithmetic expression — only + - * / may "
                 "combine navigation references"
             )
         # nav-free operand (row-local subexpression or non-numeric
         # literal) — one JVM column
-        name = f"__cx{len(self.cur_exprs)}"
-        self.cur_exprs.append((name, self._strip_self_quals(var, s)))
-        return ("cur", name)
+        return ("cur", self._cur(var, n))
 
-    def _strip_self_quals(self, var: str, sql: str) -> str:
-        """``<var>.col`` → ``col`` outside string literals — the
-        defined variable's reference IS the row being classified."""
-        out = []
-        for i, seg in enumerate(re.split(r"('(?:[^']|'')*')", sql)):
-            if i % 2 == 1:
-                out.append(seg)
-                continue
-            out.append(
-                re.sub(
-                    rf"(?i)(?<![\w.]){re.escape(var)}\s*\.\s*"
-                    rf"([A-Za-z_]\w*)",
-                    r"\1",
-                    seg,
-                )
-            )
-        return "".join(out)
+    def _cur(self, var: str, n) -> str:
+        """Register ``n`` as the row-local JVM column ``__cx<i>``."""
+        name = f"__cx{len(self.cur_exprs)}"
+        self.cur_exprs.append((name, self._local_sql(var, n)))
+        return name
+
+    def _local_sql(self, var: str, n) -> str:
+        """``n``'s text with ``<var>.col`` → ``col`` (the defined
+        variable's reference IS the row being classified) and
+        ``PREV(col[, k])`` → its LAG column ``__prev<k>_<col>``."""
+
+        def repl(x):
+            q, p = x.qref(), self._prev(x)
+            if q and q[0].upper() == var:
+                return q[1]
+            return f"__prev{p[1]}_{p[0]}" if p else None
+
+        return n.splice(repl)
 
     # -- the per-batch grouped pass ------------------------------------
     def _scan(self, frame: DataFrame, par: int) -> DataFrame:

@@ -22,7 +22,8 @@ name is resolved, no job runs) and takes every expression string from
 the statement's own text, sliced by the parser's origin offsets.  Two
 Flink-only forms are outside Spark's grammar and get a thin pre-pass,
 routed by keyword before any parse: ``MATCH_RECOGNIZE`` keeps its own
-clause parser, and the column-valued ``FOR SYSTEM_TIME AS OF
+clause regex (its DEFINE and MEASURES expressions are parsed by
+Catalyst one by one), and the column-valued ``FOR SYSTEM_TIME AS OF
 <alias>.<col>`` is cut out of the text and handed to the join walker.
 Parsing needs a SparkSession: the active one, else ``get_spark()``'s.
 
@@ -158,8 +159,8 @@ from flink_cdc_2_3_0_src_spark.operators.changelog import (
     MULT_COL,
     split_csv_outside_parens as _split_select_items,
 )
-from flink_cdc_2_3_0_src_spark.operators.maintain import maintain
-from flink_cdc_2_3_0_src_spark.session import catalyst_parse
+from flink_cdc_2_3_0_src_spark.operators.maintain import _var_call, maintain
+from flink_cdc_2_3_0_src_spark.session import _Node, _seq, catalyst_parse
 
 
 @dataclass
@@ -252,11 +253,12 @@ _INSERT_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 # The two pre-passes, routed by keyword before any Catalyst call:
-# MATCH_RECOGNIZE is outside Spark's grammar (its own clause parser
-# below), and Spark's FOR SYSTEM_TIME AS OF takes only constant
-# expressions, so Flink's column-valued event-time form is blanked out
-# of the text (same length: Catalyst's offsets still index the
-# statement) and handed to the join walker on the side.
+# MATCH_RECOGNIZE is outside Spark's grammar (its own clause regex
+# below; only its expressions reach Catalyst), and Spark's FOR
+# SYSTEM_TIME AS OF takes only constant expressions, so Flink's
+# column-valued event-time form is blanked out of the text (same
+# length: Catalyst's offsets still index the statement) and handed to
+# the join walker on the side.
 _MATCH_KW = re.compile(r"(?i)\bMATCH_RECOGNIZE\b")
 _LITERAL = re.compile(r"'(?:[^']|'')*'")
 _TEMPORAL_AS_OF = re.compile(
@@ -275,12 +277,6 @@ _WINDOW_ARGS = {
     "cumulate": ", step and size", "session": " and gap",
 }
 _W_START, _W_END = "__w_start", "__w_end"
-# frame bounds are shared Scala objects: their origin is wherever they
-# were first built, so spans skip them
-_FRAME_OBJECTS = (
-    "UnspecifiedFrame", "CurrentRow", "UnboundedPreceding",
-    "UnboundedFollowing",
-)
 _JOIN_HOW = {
     "Inner": "inner", "LeftOuter": "left", "RightOuter": "right",
     "FullOuter": "full",
@@ -341,161 +337,6 @@ def _split_alias(item: str) -> tuple[str, Optional[str]]:
     return item[: last.start()].strip(), alias
 
 
-def _seq(jseq) -> list:
-    """A Scala Seq handle → a list of its element handles."""
-    it, out = jseq.iterator(), []
-    while it.hasNext():
-        out.append(it.next())
-    return out
-
-
-def _close_paren(text: str, i: int) -> int:
-    """Index of the ``)`` matching the ``(`` at ``text[i]`` (string
-    literals skipped), or -1."""
-    depth, in_str = 0, False
-    for j in range(i, len(text)):
-        ch = text[j]
-        if in_str:
-            in_str = ch != "'"
-        elif ch == "'":
-            in_str = True
-        elif ch in "()":
-            depth += 1 if ch == "(" else -1
-            if depth == 0:
-                return j
-    return -1
-
-
-class _Node:
-    """One node of Catalyst's unresolved plan, read over py4j on demand
-    (every read is a JVM round trip, so reads are cached).  ``sql`` is
-    the parsed text; spans index it, taken from the parser's origins."""
-
-    __slots__ = ("j", "sql", "_name", "_kids", "_parts", "_span")
-    _ORIGIN = re.compile(
-        r"^Origin\((?:Some\(\d+\)|None),(?:Some\(\d+\)|None),"
-        r"Some\((\d+)\),Some\((\d+)\)"
-    )
-
-    def __init__(self, j, sql: str) -> None:
-        self.j, self.sql = j, sql
-        self._name = self._kids = self._parts = self._span = None
-
-    @property
-    def name(self) -> str:
-        """Class name: Project, Join, UnresolvedFunction, ..; ``Intersect
-        All`` reads as Intersect, ``CurrentRow$`` as CurrentRow."""
-        if self._name is None:
-            self._name = self.j.nodeName().split(" ")[0].rstrip("$")
-        return self._name
-
-    def kids(self) -> list:
-        if self._kids is None:
-            self._kids = [_Node(c, self.sql) for c in _seq(self.j.children())]
-        return self._kids
-
-    def sub(self, field: str) -> "_Node":
-        return _Node(getattr(self.j, field)(), self.sql)
-
-    def opt(self, field: str) -> Optional["_Node"]:
-        j = getattr(self.j, field)()
-        return _Node(j.get(), self.sql) if j.isDefined() else None
-
-    def subs(self, field: str) -> list:
-        return [_Node(x, self.sql) for x in _seq(getattr(self.j, field)())]
-
-    def parts(self) -> list:
-        """nameParts of an attribute or function (``a.k`` → [a, k])."""
-        if self._parts is None:
-            self._parts = self.j.nameParts().mkString("\u0001").split("\u0001")
-        return self._parts
-
-    def fn(self) -> str:
-        """Lower-case name of a function call, else ''."""
-        if self.name != "UnresolvedFunction":
-            return ""
-        return ".".join(self.parts()).lower()
-
-    def col(self) -> Optional[str]:
-        """The name of a plain one-part column reference."""
-        if self.name == "UnresolvedAttribute":
-            p = self.parts()
-            return p[0] if len(p) == 1 else None
-        return None
-
-    def qcol(self) -> Optional[tuple]:
-        """(qualifier, column) of an ``<alias>.<col>`` reference."""
-        if self.name == "UnresolvedAttribute":
-            p = self.parts()
-            return (p[0], p[1]) if len(p) == 2 else None
-        return None
-
-    def span(self) -> tuple:
-        """[start, stop] of the node's text.  A predicate's origin
-        (BETWEEN, IN, LIKE, IS NULL) starts at its keyword, after its
-        value operand, so the span also covers the first and last
-        children's."""
-        if self._span is None:
-            m = self._ORIGIN.match(self.j.origin().toString())
-            ends = [(int(m.group(1)), int(m.group(2)))] if m else []
-            kids = [k for k in self.kids() if k.name not in _FRAME_OBJECTS]
-            for k in {id(x): x for x in kids[:1] + kids[-1:]}.values():
-                ends += [k.span()] if k.span() else []
-            self._span = (
-                (min(e[0] for e in ends), max(e[1] for e in ends))
-                if ends else ()
-            )
-        return self._span
-
-    def text(self) -> str:
-        s = self.span()
-        return self.sql[s[0] : s[1] + 1] if s else ""
-
-    def wrapped(self) -> tuple:
-        """The span grown over each pair of parentheses that encloses
-        exactly this node: ``(v > 0)`` keeps the user's parentheses."""
-        s, e = self.span()
-        sql = self.sql
-        while True:
-            i, j = s - 1, e + 1
-            while i >= 0 and sql[i].isspace():
-                i -= 1
-            while j < len(sql) and sql[j].isspace():
-                j += 1
-            if i < 0 or sql[i] != "(" or _close_paren(sql, i) != j:
-                return s, e
-            s, e = i, j
-
-    def ptext(self) -> str:
-        s, e = self.wrapped()
-        return self.sql[s : e + 1]
-
-    def item_text(self) -> str:
-        """A select item as written: ``<expr> [AS <alias>]``."""
-        if self.name == "UnresolvedAlias":
-            return self.kids()[0].text()
-        if self.name == "Alias":
-            return self.sql[self.kids()[0].wrapped()[0] : self.span()[1] + 1]
-        return self.ptext()
-
-    def call_args(self) -> str:
-        """The text between a call's parentheses: ``COUNT(DISTINCT v)``
-        → ``DISTINCT v``."""
-        t = self.text()
-        i = t.find("(")
-        j = _close_paren(t, i) if i >= 0 else -1
-        return t[i + 1 : j].strip() if j > 0 else ""
-
-    def walk(self):
-        """This node and its descendants, depth first."""
-        yield self
-        for k in self.kids():
-            yield from k.walk()
-
-    def has(self, pred) -> bool:
-        return any(pred(n) for n in self.walk())
-
-
 def _item(node: _Node) -> tuple:
     """(expression node, alias or None) of one select item."""
     if node.name in ("Alias", "UnresolvedAlias"):
@@ -542,20 +383,12 @@ def _window_field(wc, spec, kind: str, clause: str, expr: _Node):
     return _W_START if wc[1] == "START" else _W_END
 
 
-def _conjuncts(node: _Node) -> list:
-    """Top-level AND operands, left to right; a parenthesized AND is one
-    conjunct (the user grouped it)."""
-    if node.name == "And" and node.wrapped() == node.span():
-        return [c for k in node.kids() for c in _conjuncts(k)]
-    return [node]
-
-
 def _split_on_conjuncts(conds: str) -> list:
     """Split a condition on its top-level ``AND``s as Catalyst reads
     them: BETWEEN's AND, ANDs inside parentheses or literals and
     ``_and_`` inside identifiers never split."""
     root = _Node(catalyst_parse(conds, "expression"), conds)
-    return [c.ptext() for c in _conjuncts(root)]
+    return [c.ptext() for c in root.operands("And")]
 
 
 def _strip_filter(node: _Node) -> tuple:
@@ -817,7 +650,7 @@ def _parse_join(sink: str, items: list, child: _Node, as_of: list):
         if bal in aliases:
             raise ValueError(f"duplicate table alias {bal!r}")
         on, extra = [], []
-        for c in _conjuncts(conds):
+        for c in conds.operands("And"):
             cond = c.ptext()
             sides = c.kids() if c.name == "EqualTo" else []
             wins = [_window_call(s, qualified=True) for s in sides]
@@ -1343,7 +1176,9 @@ def _parse_setop(sink: str, q: _Node) -> InsertSelect:
 
 def _parse_match(sql: str) -> InsertSelect:
     """The MATCH_RECOGNIZE pre-pass: Flink's CEP clause is outside
-    Spark's grammar, so it keeps its own clause parser."""
+    Spark's grammar, so ``_MATCH_RE`` cuts its clauses and
+    ``parse_match_pattern_alts`` reads its PATTERN; each DEFINE and
+    MEASURES expression is parsed by Catalyst and rewritten as a tree."""
     m = _INSERT_RE.match(sql)
     if not m:
         raise ValueError(_NOT_INSERT_MSG)
@@ -1395,30 +1230,8 @@ def _parse_match(sql: str) -> InsertSelect:
     within = f"{mm.group('wn')} {mm.group('wu').lower()}s"
     order = mm.group("order").strip('`"')
     src = mm.group("src").strip('`"')
-    raw_measures = _split_select_items(mm.group("measures"))
-    # FIRST/LAST/SUM/... measure forms need the NFA's per-match
-    # aggregate frame; plain A.x/B.x row measures on PATTERN (A B)
-    # + SKIP TO NEXT ROW ride the pure-JVM LEAD plan (which also
-    # allows cross-variable DEFINEs — the pair is in scope there)
-    uses_agg_measures = any(
-        _NFA_MEASURE_AGG.search(raw) for raw in raw_measures
-    )
-    # PREV navigation is the NFA plan's (it precomputes LAG
-    # columns); the LEAD-frame plan has no physical-row axis
-    uses_prev = any(
-        re.search(r"(?i)\bPREV\s*\(", d) for d in defines.values()
-    )
-    two_step = (
-        skip_opt == "to_next"
-        and not all_rows
-        and branches == [[("A", 1, 1, True), ("B", 1, 1, True)]]
-        and set(defines) == {"A", "B"}
-        and not uses_agg_measures
-        and not uses_prev
-        and not excluded
-    )
-    measures = []
-    for raw in raw_measures:
+    parsed = []
+    for raw in _split_select_items(mm.group("measures")):
         expr, alias = _split_alias(raw)
         if alias is None:
             raise ValueError(
@@ -1448,35 +1261,50 @@ def _parse_match(sql: str) -> InsertSelect:
                 "the WHOLE measure expression (per-call "
                 "semantics modifiers are not supported)"
             )
+        node = _Node(catalyst_parse(expr, "expression"), expr)
+        parsed.append((node, alias, sem))
+    trees = {
+        v: _Node(catalyst_parse(d, "expression"), d)
+        for v, d in defines.items()
+    }
+    # FIRST/LAST/SUM/... measure forms need the NFA's per-match
+    # aggregate frame; plain A.x/B.x row measures on PATTERN (A B)
+    # + SKIP TO NEXT ROW ride the pure-JVM LEAD plan (which also
+    # allows cross-variable DEFINEs — the pair is in scope there)
+    uses_agg_measures = any(
+        n.has(lambda x: _var_call(x, _VAR_AGGS)) for n, _a, _s in parsed
+    )
+    # PREV navigation is the NFA plan's (it precomputes LAG
+    # columns); the LEAD-frame plan has no physical-row axis
+    uses_prev = any(
+        t.has(lambda n: n.fn() == "prev") for t in trees.values()
+    )
+    two_step = (
+        skip_opt == "to_next"
+        and not all_rows
+        and branches == [[("A", 1, 1, True), ("B", 1, 1, True)]]
+        and set(defines) == {"A", "B"}
+        and not uses_agg_measures
+        and not uses_prev
+        and not excluded
+    )
+    measures = []
+    for node, alias, sem in parsed:
+        clause = f"measure {alias!r}"
         if two_step:
-            _refuse_unqualified_match_refs(expr, f"measure {alias!r}")
-            measures.append(
-                (
-                    _rewrite_match_refs(expr, f"measure {alias!r}"),
-                    alias,
-                )
-            )
+            measures.append((_rewrite_match_refs(node, clause), alias))
         elif sem == "running" and all_rows:
-            measures.append(
-                (
-                    _rewrite_nfa_measure(
-                        expr, pat_vars, f"measure {alias!r}",
-                        running=True, order=order,
-                    ),
-                    alias,
-                    "running",
-                )
-            )
+            measures.append((
+                _rewrite_nfa_measure(
+                    node, pat_vars, clause, running=True, order=order
+                ),
+                alias, "running",
+            ))
         else:
-            measures.append(
-                (
-                    _rewrite_nfa_measure(
-                        expr, pat_vars, f"measure {alias!r}",
-                        order=order,
-                    ),
-                    alias,
-                )
-            )
+            measures.append((
+                _rewrite_nfa_measure(node, pat_vars, clause, order=order),
+                alias,
+            ))
     out_names = list(partition) + [m[1] for m in measures]
     items = []
     for raw in _split_select_items(mm.group("items")):
@@ -1497,27 +1325,20 @@ def _parse_match(sql: str) -> InsertSelect:
         # PATTERN (A B) + SKIP TO NEXT ROW: the LEAD-window plan —
         # pure JVM, and its DEFINE B may reference the A row (the
         # pair is in scope)
-        _refuse_unqualified_match_refs(defines["A"], "DEFINE A")
-        _refuse_unqualified_match_refs(defines["B"], "DEFINE B")
+        define_a = _rewrite_match_refs(trees["A"], "DEFINE A")
         return InsertSelect(
             sink=sink, shape="match", sources=[src], select=items,
             match={
                 "partition": partition, "order": order,
-                "within": within,
-                "define_a": _rewrite_match_refs(
-                    defines["A"], "DEFINE A"
-                ),
-                "define_b": _rewrite_match_refs(
-                    defines["B"], "DEFINE B"
-                ),
+                "within": within, "define_a": define_a,
+                "define_b": _rewrite_match_refs(trees["B"], "DEFINE B"),
                 "measures": measures,
             },
         )
     # general pattern → the per-key NFA plan: defines evaluate
     # against the row being classified only
     nfa_defines = {
-        v: _rewrite_nfa_define(d, v, pat_vars)
-        for v, d in defines.items()
+        v: _rewrite_nfa_define(t, v, pat_vars) for v, t in trees.items()
     }
     return InsertSelect(
         sink=sink, shape="match_nfa", sources=[src], select=items,
@@ -1555,80 +1376,41 @@ _MATCH_RE = re.compile(
 )
 
 
-_MATCH_SQL_KEYWORDS = frozenset(
-    "and or not null is in like between true false case when then else "
-    "end interval cast as distinct second seconds minute minutes hour "
-    "hours day days month months year years string int bigint double "
-    "decimal boolean timestamp date".split()
-)
-
-
-def _rewrite_match_refs(sql: str, clause: str) -> str:
-    """``A.<col>`` → ``<col>``, ``B.<col>`` → ``__b.<col>`` outside
-    string literals (case-insensitive, matching the grammar) — the
-    pair frame's physical names (the A row is the current row, the B
-    row the LEAD struct).  UNQUALIFIED column refs are refused: the
+def _rewrite_match_refs(node: _Node, clause: str) -> str:
+    """``A.<col>`` → ``<col>``, ``B.<col>`` → ``__b.<col>`` (variables
+    are case-insensitive, like the grammar) — the pair frame's physical
+    names (the A row is the current row, the B row the LEAD struct).
+    Unknown qualifiers refuse, and so do UNQUALIFIED column refs: the
     SQL standard binds them to the row being classified, which the
     rewritten frame cannot honor (they would silently evaluate against
     the A row) — qualify every column with A. or B."""
-    out = []
-    for i, seg in enumerate(re.split(r"('(?:[^']|'')*')", sql)):
-        if i % 2 == 1:
-            out.append(seg)
-            continue
-        bad_q = [
-            q
-            for q in re.findall(r"(?<![\w.])(\w+)\s*\.\s*[A-Za-z_]", seg)
-            if q.upper() not in ("A", "B")
-        ]
-        if bad_q:
-            raise ValueError(
-                f"{clause} references unknown pattern variable(s) "
-                f"{sorted(set(bad_q))}; the pattern defines A and B"
-            )
-        seg = re.sub(r"(?i)\bA\s*\.\s*(\w+)", r"\1", seg)
-        seg = re.sub(r"(?i)\bB\s*\.\s*(\w+)", r"__b.\1", seg)
-        out.append(seg)
-    return "".join(out)
+    refs = [n for n in node.walk() if n.name == "UnresolvedAttribute"]
+    bad_q = {
+        n.qref()[0] for n in refs
+        if n.qref() and n.qref()[0].upper() not in ("A", "B")
+    }
+    if bad_q:
+        raise ValueError(
+            f"{clause} references unknown pattern variable(s) "
+            f"{sorted(bad_q)}; the pattern defines A and B"
+        )
+    bare = {n.col() for n in refs if n.col()}
+    if bare:
+        raise ValueError(
+            f"{clause} contains unqualified column reference(s) "
+            f"{sorted(bare)}: qualify every column with A. or "
+            "B. — the SQL standard binds bare names to the row "
+            "being classified, which the maintained LEAD frame "
+            "cannot honor"
+        )
 
+    def repl(n):
+        q = n.qref()
+        if q:
+            return q[1] if q[0].upper() == "A" else f"__b.{q[1]}"
+        return None
 
-def _refuse_unqualified_match_refs(sql: str, clause: str) -> None:
-    """Refuse bare column identifiers in MATCH_RECOGNIZE clauses —
-    SQL:2016 binds them to the row being classified, which the LEAD
-    frame cannot honor (they would silently read the A row)."""
-    for i, seg in enumerate(re.split(r"('(?:[^']|'')*')", sql)):
-        if i % 2 == 1:
-            continue
-        bad_q = [
-            q
-            for q in re.findall(r"(?<![\w.])(\w+)\s*\.\s*[A-Za-z_]", seg)
-            if q.upper() not in ("A", "B")
-        ]
-        if bad_q:
-            raise ValueError(
-                f"{clause} references unknown pattern variable(s) "
-                f"{sorted(set(bad_q))}; the pattern defines A and B"
-            )
-        # strip qualified refs first, then any remaining identifier
-        # that is not a keyword or a function call is a bare column
-        # (\b before the lookahead: a function name like FIRST( must
-        # not backtrack to FIRS and false-positive as a bare ref)
-        stripped = re.sub(r"(?i)\b[AB]\s*\.\s*\w+", " ", seg)
-        bare = [
-            w
-            for w in re.findall(
-                r"(?<![\w.'])([A-Za-z_]\w*)\b(?!\s*\()", stripped
-            )
-            if w.lower() not in _MATCH_SQL_KEYWORDS
-        ]
-        if bare:
-            raise ValueError(
-                f"{clause} contains unqualified column reference(s) "
-                f"{sorted(set(bare))}: qualify every column with A. or "
-                "B. — the SQL standard binds bare names to the row "
-                "being classified, which the maintained LEAD frame "
-                "cannot honor"
-            )
+    return node.splice(repl, outer=True)
 
 
 def _parse_match_defines(defines_sql: str, pat_vars: list) -> dict:
@@ -1656,12 +1438,7 @@ def _parse_match_defines(defines_sql: str, pat_vars: list) -> dict:
     return out
 
 
-_NFA_PREV_RE = re.compile(
-    r"(?i)\bPREV\s*\(\s*([A-Za-z_]\w*)\s*\.\s*(\w+)\s*(?:,\s*(\d+)\s*)?\)"
-)
-
-
-def _rewrite_nfa_define(sql: str, var: str, pat_vars: list) -> str:
+def _rewrite_nfa_define(node: _Node, var: str, pat_vars: list) -> str:
     """DEFINE rewrite for the NFA plan.  ``PREV(V.col[, k])`` is
     physical row navigation (the k-th previous INPUT row per key —
     which for contiguous patterns is the previous row of the match)
@@ -1674,45 +1451,35 @@ def _rewrite_nfa_define(sql: str, var: str, pat_vars: list) -> str:
     rows inside the NFA scan.  Unknown qualifiers refuse here, with
     the full statement context."""
     upper_vars = {v.upper() for v in pat_vars}
+    quals = set()
 
-    def _prev_repl(m):
-        q, col, k = m.group(1).upper(), m.group(2), m.group(3)
-        if q not in upper_vars:
-            raise ValueError(
-                f"DEFINE {var}: PREV qualifies with unknown pattern "
-                f"variable {m.group(1)!r}; the pattern defines "
-                f"{pat_vars}"
-            )
-        return f"PREV({col}{', ' + k if k else ''})"
+    def repl(n):
+        args = n.kids() if n.fn() == "prev" else []
+        k = args[1].uint() if len(args) == 2 else None
+        if args[:1] and args[0].qcol() and (len(args) == 1 or k is not None):
+            q, col = args[0].qcol()
+            if q.upper() not in upper_vars:
+                raise ValueError(
+                    f"DEFINE {var}: PREV qualifies with unknown pattern "
+                    f"variable {q!r}; the pattern defines {pat_vars}"
+                )
+            return f"PREV({col}{'' if k is None else f', {k}'})"
+        if n.qref():
+            quals.add(n.qref()[0].upper())
+        return None
 
-    out = []
-    for i, seg in enumerate(re.split(r"('(?:[^']|'')*')", sql)):
-        if i % 2 == 1:
-            out.append(seg)
-            continue
-        seg = _NFA_PREV_RE.sub(_prev_repl, seg)
-        quals = {
-            q.upper()
-            for q in re.findall(r"(?<![\w.])(\w+)\s*\.\s*[A-Za-z_]", seg)
-        }
-        unknown = quals - upper_vars
-        if unknown:
-            raise ValueError(
-                f"DEFINE {var} references unknown qualifier(s) "
-                f"{sorted(unknown)}; the pattern defines {pat_vars}"
-            )
-        out.append(seg)
-    return "".join(out)
+    out = node.splice(repl, outer=True)
+    if quals - upper_vars:
+        raise ValueError(
+            f"DEFINE {var} references unknown qualifier(s) "
+            f"{sorted(quals - upper_vars)}; the pattern defines {pat_vars}"
+        )
+    return out
 
 
-# measure aggregate over one pattern variable's matched rows:
-# FIRST/LAST (positional) and SUM/MIN/MAX/AVG/COUNT (set) — plus
-# COUNT(V.*)
-_NFA_MEASURE_AGG = re.compile(
-    r"(?i)\b(FIRST|LAST|SUM|MIN|MAX|AVG|COUNT)\s*\(\s*"
-    r"([A-Za-z_]\w*)\s*\.\s*(\w+|\*)\s*(?:,\s*(\d+)\s*)?\)"
-)
-_NFA_BARE_REF = re.compile(r"(?<![\w.])([A-Za-z_]\w*)\s*\.\s*(\w+)")
+#: measure aggregates over one pattern variable's matched rows:
+#: FIRST/LAST (positional) and SUM/MIN/MAX/AVG/COUNT (set)
+_VAR_AGGS = ("first", "last", "sum", "min", "max", "avg", "count")
 
 
 #: the cumulative frame RUNNING-semantics measures evaluate over —
@@ -1723,22 +1490,20 @@ _NFA_RUNNING_W = (
     "OVER (PARTITION BY __mkey ORDER BY __pos ROWS BETWEEN "
     "UNBOUNDED PRECEDING AND CURRENT ROW)"
 )
-_NFA_AGG_CALL_RE = re.compile(
-    r"(?i)\b(?:FIRST|LAST|SUM|MIN|MAX|AVG|COUNT)\s*\("
-)
 
 
 def _rewrite_nfa_measure(
-    sql: str,
+    expr,
     pat_vars: list,
     clause: str,
     running: bool = False,
     order: str = None,
 ) -> str:
-    """MEASURES rewrite for the NFA plan: aggregate calls over one
-    variable's rows become ``FILTER (WHERE __var = '<V>')`` SQL
-    aggregates over the exploded match frame (payload + ``__var`` /
-    ``__pos``), evaluated JVM-side per (key, match):
+    """MEASURES rewrite for the NFA plan (``expr`` is the measure's text
+    or its parsed node): aggregate calls over one variable's rows
+    become ``FILTER (WHERE __var = '<V>')`` SQL aggregates over the
+    exploded match frame (payload + ``__var`` / ``__pos``), evaluated
+    JVM-side per (key, match):
 
     * ``FIRST(V.c)`` → ``min_by(c, __pos) FILTER ...`` and ``LAST`` →
       ``max_by`` (ONE ROW PER MATCH final semantics)
@@ -1759,15 +1524,100 @@ def _rewrite_nfa_measure(
     ``V.c`` = RUNNING LAST.  Logical offsets and aggregate calls not
     of the ``<agg>(V.col)`` form refuse (no per-row cumulative
     rendering)."""
-    if re.search(r"(?i)\bPREV\s*\(", sql):
+    node = expr if isinstance(expr, _Node) else _Node(
+        catalyst_parse(expr, "expression"), expr
+    )
+    nodes = list(node.walk())
+    fns = {n.fn() for n in nodes}
+    if "prev" in fns:
         raise ValueError(
             f"{clause}: PREV navigation is DEFINE-only in the "
             "maintained subset; project the row's own column with "
             "FIRST/LAST(V.col) instead"
         )
+    # an unqualified column binds to "the row" in SQL:2016, which a
+    # per-match aggregate frame cannot honor
+    bare = {n.col() for n in nodes if n.col()}
+    if bare:
+        raise ValueError(
+            f"{clause} contains unqualified column reference(s) "
+            f"{sorted(bare)}: qualify every column with a "
+            "pattern variable (V.col), optionally wrapped in "
+            "FIRST/LAST/SUM/MIN/MAX/AVG/COUNT(V.col)"
+        )
+    if "match_rowtime" in fns and order is None:
+        raise ValueError(
+            f"{clause}: MATCH_ROWTIME() needs the statement's "
+            "ORDER BY rowtime (bridge-only function)"
+        )
+    if "match_proctime" in fns:
+        raise ValueError(
+            f"{clause}: MATCH_PROCTIME() is processing-time "
+            "(nondeterministic under replay) — use "
+            "MATCH_ROWTIME() for the match's event time"
+        )
+    # every aggregate call of a RUNNING measure must be the
+    # <agg>(V.col) form — an unqualified count(*)/sum(x) has no
+    # cumulative per-variable rendering
+    if running and any(
+        n.call(_VAR_AGGS) and not _var_call(n, _VAR_AGGS) for n in nodes
+    ):
+        raise ValueError(
+            f"{clause}: RUNNING measures support only "
+            "<agg>(V.col) aggregate forms (FIRST/LAST/SUM/"
+            "MIN/MAX/AVG/COUNT over one pattern variable's "
+            "column)"
+        )
     upper_vars = {v.upper() for v in pat_vars}
 
-    def seg_rewrite(seg: str) -> str:
+    def agg_sql(fn, var, col, off):
+        if var not in upper_vars:
+            raise ValueError(
+                f"{clause} references unknown pattern variable "
+                f"{var!r}; the pattern defines {pat_vars}"
+            )
+        if off is not None and fn not in ("FIRST", "LAST"):
+            raise ValueError(
+                f"{clause}: {fn} takes no logical offset — only "
+                "FIRST/LAST(V.col, k) navigate"
+            )
+        if col == "*" and fn != "COUNT":
+            raise ValueError(
+                f"{clause}: {fn}({var}.*) is not valid SQL — "
+                "only COUNT takes a star"
+            )
+        if running:
+            if off is not None:
+                raise ValueError(
+                    f"{clause}: RUNNING {fn} with a logical "
+                    "offset is not supported — drop the offset "
+                    "or use FINAL semantics"
+                )
+            inner = "1" if col == "*" else col
+            case = f"CASE WHEN __var = '{var}' THEN {inner} END"
+            if fn in ("FIRST", "LAST"):
+                return f"{fn.lower()}({case}, true) {_NFA_RUNNING_W}"
+            return f"{fn.lower()}({case}) {_NFA_RUNNING_W}"
+        filt = f" FILTER (WHERE __var = '{var}')"
+        if fn in ("FIRST", "LAST") and off is not None:
+            # logical offset k (SQL:2016 / Flink's LAST(A.price,
+            # 1)): the k-th row from the first/last row bound to
+            # the variable — materialize the variable's rows in
+            # __pos order and index from the matching end;
+            # out-of-range navigation is SQL NULL (try_element_at)
+            idx = off + 1 if fn == "FIRST" else -(off + 1)
+            return (
+                "try_element_at(array_sort(collect_list("
+                f"named_struct('p', __pos, 'v', {col})){filt}), "
+                f"{idx}).v"
+            )
+        if fn in ("FIRST", "LAST"):
+            by = "min_by" if fn == "FIRST" else "max_by"
+            return f"{by}({col}, __pos)" + filt
+        return f"{fn.lower()}({col})" + filt
+
+    def repl(n):
+        fn = n.fn()
         # SQL:2016 CLASSIFIER() / MATCH_NUMBER() (r13).  MATCH_NUMBER
         # numbers matches sequentially within the partition: the
         # plan's per-key __match_id enumerates the CURRENT pool's
@@ -1778,169 +1628,40 @@ def _rewrite_nfa_measure(
         # under RUNNING semantics is the row's OWN pattern variable,
         # under the engine's FINAL default the LAST row's (the same
         # final-vs-running discipline as every measure).
-        seg = re.sub(
-            r"(?i)\bMATCH_NUMBER\s*\(\s*\)",
-            "(__match_id + __mn_base + 1)"
-            if running
-            else "(__match_id + min(__mn_base) + 1)",
-            seg,
-        )
-        seg = re.sub(
-            r"(?i)\bCLASSIFIER\s*\(\s*\)",
-            "__var" if running else "max_by(__var, __pos)",
-            seg,
-        )
+        if fn == "match_number":
+            base = "__mn_base" if running else "min(__mn_base)"
+            return f"(__match_id + {base} + 1)"
+        if fn == "classifier":
+            return "__var" if running else "max_by(__var, __pos)"
         # MATCH_ROWTIME() (Flink parity): the match's event time =
         # the LAST matched row's rowtime; under RUNNING semantics the
         # rowtime so far is the current row's own
-        if re.search(r"(?i)\bMATCH_ROWTIME\s*\(\s*\)", seg):
-            if order is None:
-                raise ValueError(
-                    f"{clause}: MATCH_ROWTIME() needs the statement's "
-                    "ORDER BY rowtime (bridge-only function)"
-                )
-            seg = re.sub(
-                r"(?i)\bMATCH_ROWTIME\s*\(\s*\)",
-                order if running else f"max({order})",
-                seg,
-            )
-        if re.search(r"(?i)\bMATCH_PROCTIME\s*\(\s*\)", seg):
+        if fn == "match_rowtime":
+            return order if running else f"max({order})"
+        agg = _var_call(n, _VAR_AGGS)
+        if agg:
+            return agg_sql(agg[0], agg[1].upper(), *agg[2:])
+        q = n.qref()
+        if q is None:
+            return None
+        if q[0].upper() not in upper_vars:
             raise ValueError(
-                f"{clause}: MATCH_PROCTIME() is processing-time "
-                "(nondeterministic under replay) — use "
-                "MATCH_ROWTIME() for the match's event time"
+                f"{clause} references unknown pattern variable "
+                f"{q[0]!r}; the pattern defines {pat_vars}"
             )
         if running:
-            # every aggregate call must be the <agg>(V.col) form —
-            # an unqualified count(*)/sum(x) has no cumulative
-            # per-variable rendering
-            n_calls = len(_NFA_AGG_CALL_RE.findall(seg))
-            n_var_calls = len(_NFA_MEASURE_AGG.findall(seg))
-            if n_calls != n_var_calls:
-                raise ValueError(
-                    f"{clause}: RUNNING measures support only "
-                    "<agg>(V.col) aggregate forms (FIRST/LAST/SUM/"
-                    "MIN/MAX/AVG/COUNT over one pattern variable's "
-                    "column)"
-                )
-
-        def agg_repl(m):
-            fn, var, col, off = (
-                m.group(1).upper(), m.group(2).upper(), m.group(3),
-                m.group(4),
-            )
-            if var not in upper_vars:
-                raise ValueError(
-                    f"{clause} references unknown pattern variable "
-                    f"{var!r}; the pattern defines {pat_vars}"
-                )
-            if off is not None and fn not in ("FIRST", "LAST"):
-                raise ValueError(
-                    f"{clause}: {fn} takes no logical offset — only "
-                    "FIRST/LAST(V.col, k) navigate"
-                )
-            if running:
-                if off is not None:
-                    raise ValueError(
-                        f"{clause}: RUNNING {fn} with a logical "
-                        "offset is not supported — drop the offset "
-                        "or use FINAL semantics"
-                    )
-                if fn == "COUNT":
-                    inner = "1" if col == "*" else col
-                    return (
-                        f"count(CASE WHEN __var = '{var}' THEN "
-                        f"{inner} END) {_NFA_RUNNING_W}"
-                    )
-                if col == "*":
-                    raise ValueError(
-                        f"{clause}: {fn}({var}.*) is not valid SQL "
-                        "— only COUNT takes a star"
-                    )
-                case = f"CASE WHEN __var = '{var}' THEN {col} END"
-                if fn == "FIRST":
-                    return f"first({case}, true) {_NFA_RUNNING_W}"
-                if fn == "LAST":
-                    return f"last({case}, true) {_NFA_RUNNING_W}"
-                return f"{fn.lower()}({case}) {_NFA_RUNNING_W}"
-            filt = f" FILTER (WHERE __var = '{var}')"
-            if fn == "COUNT":
-                inner = "*" if col == "*" else col
-                return f"count({inner})" + filt
-            if col == "*":
-                raise ValueError(
-                    f"{clause}: {fn}({var}.*) is not valid SQL — "
-                    "only COUNT takes a star"
-                )
-            if fn in ("FIRST", "LAST") and off is not None:
-                # logical offset k (SQL:2016 / Flink's LAST(A.price,
-                # 1)): the k-th row from the first/last row bound to
-                # the variable — materialize the variable's rows in
-                # __pos order and index from the matching end;
-                # out-of-range navigation is SQL NULL (try_element_at)
-                k = int(off)
-                idx = k + 1 if fn == "FIRST" else -(k + 1)
-                return (
-                    "try_element_at(array_sort(collect_list("
-                    f"named_struct('p', __pos, 'v', {col})){filt}), "
-                    f"{idx}).v"
-                )
-            if fn == "FIRST":
-                return f"min_by({col}, __pos)" + filt
-            if fn == "LAST":
-                return f"max_by({col}, __pos)" + filt
-            return f"{fn.lower()}({col})" + filt
-
-        seg = _NFA_MEASURE_AGG.sub(agg_repl, seg)
-
-        def bare_repl(m):
-            var, col = m.group(1).upper(), m.group(2)
-            if var not in upper_vars:
-                raise ValueError(
-                    f"{clause} references unknown pattern variable "
-                    f"{m.group(1)!r}; the pattern defines {pat_vars}"
-                )
-            if running:
-                # bare V.c ≡ RUNNING LAST(V.c) — the most recent
-                # V-row value at each output row (SQL:2016)
-                return (
-                    f"last(CASE WHEN __var = '{var}' THEN {col} "
-                    f"END, true) {_NFA_RUNNING_W}"
-                )
+            # bare V.c ≡ RUNNING LAST(V.c) — the most recent
+            # V-row value at each output row (SQL:2016)
             return (
-                f"max_by({col}, __pos) FILTER (WHERE __var = '{var}')"
+                f"last(CASE WHEN __var = '{q[0].upper()}' THEN {q[1]} "
+                f"END, true) {_NFA_RUNNING_W}"
             )
+        return (
+            f"max_by({q[1]}, __pos) FILTER (WHERE __var = "
+            f"'{q[0].upper()}')"
+        )
 
-        return _NFA_BARE_REF.sub(bare_repl, seg)
-
-    out = []
-    for i, seg in enumerate(re.split(r"('(?:[^']|'')*')", sql)):
-        if i % 2 == 1:
-            out.append(seg)
-            continue
-        # unqualified column refs bind to "the row" in SQL:2016, which
-        # a per-match aggregate frame cannot honor — check on the
-        # ORIGINAL text (the rewrite introduces bare aggregate args),
-        # same rule as the two-step plan's measures
-        stripped = re.sub(r"\b[A-Za-z_]\w*\s*\.\s*(\w+|\*)", " ", seg)
-        # \b before the lookahead: without it a function name like
-        # FIRST( backtracks to FIRS and false-positives as a bare ref
-        bare = [
-            w
-            for w in re.findall(
-                r"(?<![\w.'])([A-Za-z_]\w*)\b(?!\s*\()", stripped
-            )
-            if w.lower() not in _MATCH_SQL_KEYWORDS
-        ]
-        if bare:
-            raise ValueError(
-                f"{clause} contains unqualified column reference(s) "
-                f"{sorted(set(bare))}: qualify every column with a "
-                "pattern variable (V.col), optionally wrapped in "
-                "FIRST/LAST/SUM/MIN/MAX/AVG/COUNT(V.col)"
-            )
-        out.append(seg_rewrite(seg))
-    return "".join(out)
+    return node.splice(repl, outer=True)
 
 
 def _rewrite_having(having: str, aggs: dict, node: "_Node" = None) -> str:

@@ -3297,7 +3297,7 @@ def cdc_tidb_snapshot_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw = scripted_two_phase_log(spark, sf_dir)
     final = tidb_snapshot_stream(
-        raw, ["user_id"], resolved_ts=_TIDB_RESOLVED_TS, n_ranges=4
+        raw, ["user_id"], resolved_ts=_TIDB_RESOLVED_TS
     )
     return final.select("user_id", "value", "ts")
 

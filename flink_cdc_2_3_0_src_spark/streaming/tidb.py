@@ -29,7 +29,7 @@ re-expressed here Spark-first:
 
 At 100 TB the two joins in ``resolve_two_phase`` are equi-joins on
 (key, start_ts) — shuffle-partitioned, no broadcast of the big side, no
-driver state; the snapshot phase is N parallel range scans.
+driver state; the snapshot phase is one materialize of the resolved log.
 """
 
 from __future__ import annotations
@@ -39,7 +39,12 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_cdc_2_3_0_src_spark.model import OP_COL, SEQ_COL, ChunkRange
+from flink_cdc_2_3_0_src_spark.model import (
+    OP_COL,
+    OP_INSERT,
+    SEQ_COL,
+    ChunkRange,
+)
 from flink_cdc_2_3_0_src_spark.operators.changelog import materialize
 
 LONG_MIN = -(2**63) + 1  # RowKey.createMin / reference Long.MIN_VALUE + 1
@@ -112,38 +117,20 @@ def tidb_snapshot_stream(
     raw: DataFrame,
     keys: Sequence[str],
     resolved_ts: int,
-    n_ranges: int = 4,
 ) -> DataFrame:
     """A29 end-to-end: snapshot at ``resolved_ts``, stream after it.
 
-    Snapshot phase = the table's committed state at ``resolved_ts``,
-    scanned as ``n_ranges`` parallel key-range chunks (each chunk an
-    independent predicate-pushed scan, as each TiKV subtask scans its
-    KeyRange); rows enter the changelog as +I at seq=resolved_ts.
-    Stream phase = committed events with commit_ts > resolved_ts (the
-    CDC client started AT resolved_ts — no gap, no overlap, unlike the
-    OceanBase path which overlaps and dedupes). The final materialize
-    merges both by max-seq upsert semantics.
+    Snapshot phase = the table's committed state at ``resolved_ts``;
+    rows enter the changelog as +I at seq=resolved_ts.  The subtasks'
+    ``tikv_key_ranges`` tile the key space, so the union of the
+    per-range scans is that state itself: one materialize, no per-range
+    re-read.  Stream phase = committed events with commit_ts >
+    resolved_ts (the CDC client started AT resolved_ts — no gap, no
+    overlap, unlike the OceanBase path which overlaps and dedupes). The
+    final materialize merges both by max-seq upsert semantics.
     """
-    key = keys[0]
-    # the resolution joins feed both phases and the snapshot state feeds
-    # one range-scan branch per key range — persist both so each branch
-    # is a cached-columnar read instead of a re-run of the joins and the
-    # materialize shuffle (a real dialect pays the per-range SELECT on
-    # TiKV instead)
-    committed = resolve_two_phase(raw, resolved_ts=None, key=key).persist()
-    at_snap = materialize(
-        committed.filter(F.col(SEQ_COL) <= resolved_ts), keys
-    ).persist()
-    parts = [
-        at_snap.filter(F.expr(rng.predicate_sql(key)))
-        for rng in tikv_key_ranges(n_ranges)
-    ]
-    snap = parts[0]
-    for p in parts[1:]:
-        snap = snap.unionByName(p)
-    from flink_cdc_2_3_0_src_spark.model import OP_INSERT
-
+    committed = resolve_two_phase(raw, resolved_ts=None, key=keys[0])
+    snap = materialize(committed.filter(F.col(SEQ_COL) <= resolved_ts), keys)
     snap_log = snap.withColumn(OP_COL, F.lit(OP_INSERT)).withColumn(
         SEQ_COL, F.lit(resolved_ts).cast("long")
     )

@@ -1730,15 +1730,53 @@ def test_nfa_running_measure_guards():
         })
 
 
+#: DEFINE B of the affine/OR fuzz and its reference predicate
+_AFFINE_OR_DEFINES = {
+    "affine_or": (
+        "B.et = 'click' AND (B.v > A.v * 1.1 - 2 OR B.v + 3 < FIRST(A.v))",
+        lambda r, b: (
+            r["et"] == "click"
+            and bool(b["A"])
+            and (
+                r["v"] > b["A"][-1]["v"] * 1.1 - 2
+                or r["v"] + 3 < b["A"][0]["v"]
+            )
+        ),
+    ),
+    # the AND inside a CASE belongs to the CASE, not to the DEFINE
+    "case_and": (
+        "CASE WHEN B.v > 1 AND B.et = 'click' THEN 1 ELSE 0 END = 1",
+        lambda r, b: r["v"] > 1 and r["et"] == "click",
+    ),
+    # the OR inside a CASE inside a cross-variable disjunct belongs to
+    # the CASE, not to the disjunct list
+    "case_or_cross": (
+        "B.et = 'click' AND (B.v > A.v OR B.v + CASE WHEN B.v > 9"
+        " OR B.v < 2 THEN 3 ELSE 0 END < FIRST(A.v))",
+        lambda r, b: (
+            r["et"] == "click"
+            and bool(b["A"])
+            and (
+                r["v"] > b["A"][-1]["v"]
+                or r["v"] + (3 if r["v"] > 9 or r["v"] < 2 else 0)
+                < b["A"][0]["v"]
+            )
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("define", sorted(_AFFINE_OR_DEFINES))
 @pytest.mark.parametrize(
     "skip", ["TO NEXT ROW", "PAST LAST ROW", "TO LAST B"]
 )
 @pytest.mark.slow
-def test_nfa_cross_var_affine_or_fuzz_vs_reference(spark, skip):
+def test_nfa_cross_var_affine_or_fuzz_vs_reference(spark, skip, define):
     """Seeded fuzz for the r13 surface — ARITHMETIC over navigation
     (affine threshold) OR-combined with a second comparison whose
-    left side is row-local arithmetic — across all skip modes and
-    batch splits, against the context-aware reference matcher."""
+    left side is row-local arithmetic, and CASE expressions whose inner
+    AND/OR must not split the DEFINE — across all skip modes and batch
+    splits, against the context-aware reference matcher."""
     import calendar
     import datetime as dt
 
@@ -1767,21 +1805,13 @@ def test_nfa_cross_var_affine_or_fuzz_vs_reference(spark, skip):
         f" AFTER MATCH SKIP {skip}"
         " PATTERN (A B+) WITHIN INTERVAL '12' HOUR"
         " DEFINE A AS A.et = 'view',"
-        " B AS B.et = 'click' AND"
-        " (B.v > A.v * 1.1 - 2 OR B.v + 3 < FIRST(A.v)))"
+        f" B AS {_AFFINE_OR_DEFINES[define][0]})"
     )
     elems = parse_match_pattern("A B+")
     within_us = 12 * 3600 * 1_000_000
     defines = {
         "A": lambda r, b: r["et"] == "view",
-        "B": lambda r, b: (
-            r["et"] == "click"
-            and bool(b["A"])
-            and (
-                r["v"] > b["A"][-1]["v"] * 1.1 - 2
-                or r["v"] + 3 < b["A"][0]["v"]
-            )
-        ),
+        "B": _AFFINE_OR_DEFINES[define][1],
     }
     by_key = {}
     for i, u, et, v, ts in rows:
@@ -1813,7 +1843,7 @@ def test_nfa_cross_var_affine_or_fuzz_vs_reference(spark, skip):
         )
         assert sorted(map(tuple, got.collect()), key=str) == sorted(
             expected, key=str
-        ), f"skip={skip} n_batches={n}"
+        ), f"skip={skip} define={define} n_batches={n}"
 
 
 def test_nfa_cross_var_routes_two_var_agg_pattern(spark):
@@ -2302,6 +2332,19 @@ def test_nfa_guards(spark):
     with pytest.raises(ValueError, match="unknown pattern variable"):
         parse_insert_select(
             _FUNNEL_SQL.replace("SUM(B.v)", "SUM(Z.v)")
+        )
+    # bare columns named like SQL keywords refuse like any other
+    with pytest.raises(ValueError, match="unqualified column"):
+        parse_insert_select(
+            _FUNNEL_SQL.replace("SUM(B.v) AS b_sum", "MAX(B.v) + day AS b_sum")
+        )
+    with pytest.raises(ValueError, match="unqualified column"):
+        parse_insert_select(
+            "INSERT INTO sink SELECT u, b_v FROM ev"
+            " MATCH_RECOGNIZE (PARTITION BY u ORDER BY ts"
+            " MEASURES B.v AS b_v AFTER MATCH SKIP TO NEXT ROW"
+            " PATTERN (A B) WITHIN INTERVAL '1' DAY"
+            " DEFINE A AS A.et = 'view', B AS B.et = 'error' AND hour = 3)"
         )
     with pytest.raises(ValueError, match="only COUNT takes a star"):
         parse_insert_select(

@@ -4054,6 +4054,19 @@ def test_match_recognize_ref_rules(spark):
         parse_insert_select(
             _MR_SQL.replace("B AS B.et = 'error'", "B AS C.et = 'error'")
         )
+    # a bare column named like a SQL keyword is a column too: the LEAD
+    # frame would read the A row's `hour`, and a per-match measure has
+    # no row to read `day` from
+    with pytest.raises(ValueError, match="unqualified column"):
+        parse_insert_select(
+            _MR_SQL.replace("B AS B.et = 'error'",
+                            "B AS B.et = 'error' AND hour = 3")
+        )
+    with pytest.raises(ValueError, match="unqualified column"):
+        parse_insert_select(
+            _MR_SQL.replace("PATTERN (A B)", "PATTERN (A B+)")
+            .replace("B.v AS b_v", "MAX(B.v) + day AS b_v")
+        )
     # near-miss (DESC order) → targeted grammar error, not _SHAPES_MSG
     with pytest.raises(ValueError, match="maintained "
                                          "subset is: SELECT"):
@@ -4076,8 +4089,8 @@ def test_prepass_routing_parses_without_error_or_job(spark, monkeypatch):
     the two forms Spark's grammar refuses: they are routed by keyword
     before any Catalyst call, so no parsePlan raises (a failed parse
     costs ~100 ms and logs an ERROR trace), the MATCH_RECOGNIZE
-    pre-pass makes no Catalyst call at all, and parsing starts no Spark
-    job."""
+    pre-pass sends Catalyst only its DEFINE and MEASURES expressions,
+    never the statement, and parsing starts no Spark job."""
     from flink_cdc_2_3_0_src_spark.plans import sql_maintain as sm
 
     calls = []
@@ -4097,11 +4110,15 @@ def test_prepass_routing_parses_without_error_or_job(spark, monkeypatch):
     sc.setJobGroup("prepass-routing", "parse only")
     try:
         st = parse_insert_select(_MR_SQL)
-        assert st.shape == "match" and calls == []
         nfa = parse_insert_select(
             _MR_SQL.replace("PATTERN (A B)", "PATTERN (A B+)")
         )
-        assert nfa.shape == "match_nfa" and calls == []
+        assert st.shape == "match" and nfa.shape == "match_nfa"
+        assert calls and all(
+            exc is None and "MATCH_RECOGNIZE" not in text
+            for text, exc in calls
+        )
+        calls.clear()
         for how in ("", "LEFT "):
             st = parse_insert_select(
                 "INSERT INTO s SELECT p.k, d.v FROM probe p "

@@ -11,6 +11,7 @@ from flink_cdc_2_3_0_src_spark.streaming.tidb import (
     LONG_MAX,
     LONG_MIN,
     resolve_two_phase,
+    tidb_snapshot_stream,
     tikv_key_ranges,
 )
 
@@ -63,6 +64,30 @@ def test_two_phase_commit_rollback_and_pending(spark):
     # unbounded resolution also surfaces the later commit
     all_got = {r[SEQ_COL] for r in resolve_two_phase(raw).collect()}
     assert all_got == {105, 305, 505}
+
+
+def test_tidb_snapshot_stream_is_log_tip_and_persists_nothing(spark):
+    """Snapshot at resolvedTs + stream after it equals the committed
+    state at the log tip, and the query leaves no cached RDD behind."""
+    rows = [
+        (1, 10.0, None, "+I", "COMMITTED", 100, 105),
+        (2, 20.0, None, "+I", "COMMITTED", 200, 205),
+        (3, 30.0, None, "+I", "PREWRITE", 300, None),
+        (3, None, None, None, "COMMIT", 300, 305),
+        (1, 11.0, None, "+U", "PREWRITE", 500, None),  # after resolvedTs
+        (1, None, None, None, "COMMIT", 500, 505),
+        (2, None, None, "-D", "COMMITTED", 600, 605),
+        (4, 40.0, None, "+I", "PREWRITE", 700, None),  # never committed
+    ]
+    raw = spark.createDataFrame(rows, RAW_SCHEMA)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    got = tidb_snapshot_stream(raw, ["user_id"], resolved_ts=400)
+    assert {r["user_id"]: r["value"] for r in got.collect()} == {
+        1: 11.0,
+        3: 30.0,
+    }
+    assert set(jsc.getPersistentRDDs().keys()) == before
 
 
 def test_oceanbase_overlap_equals_plain_materialize(spark):
